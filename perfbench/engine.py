@@ -9,6 +9,8 @@ import subprocess
 import time
 from pathlib import Path
 
+from . import trace
+
 N_BUCKETS = 256  # jobs/extract.py CLI default; every bucket is claimed
 
 
@@ -17,10 +19,6 @@ def pinned_conf(run_dir: Path, event_dir: Path | None) -> dict:
     conf = {
         "spark.local.dir": str(run_dir / "local"),
         "spark.sql.warehouse.dir": str(run_dir / "warehouse"),
-        # a fixed, pre-touched heap: a JVM heap that grows on demand made
-        # the tree's peak RSS swing by 0.5-1 GB between identical runs
-        "spark.driver.memory": "1g",
-        "spark.driver.extraJavaOptions": "-Xms1g -XX:+AlwaysPreTouch",
         "spark.sql.files.maxPartitionBytes": "128m",
         "spark.sql.files.openCostInBytes": "4194304",
         "spark.ui.showConsoleProgress": "false",
@@ -35,12 +33,33 @@ def pinned_conf(run_dir: Path, event_dir: Path | None) -> dict:
     return conf
 
 
+def _initial_heap_at_max(get_or_create):
+    """Wrap ``Builder.getOrCreate`` so the JVM starts with its initial
+    heap equal to the maximum the program asks for (``spark.driver.memory``
+    becomes -Xmx).  The size stays the program's; only its growth on
+    demand is fixed, which moved the tree's peak RSS by 10-20% between
+    identical runs.  No page is pre-touched: RSS counts the pages the JVM
+    uses in a heap of the program's size."""
+    def call(builder):
+        heap = builder._options.get("spark.driver.memory")
+        if heap:
+            opts = builder._options.get("spark.driver.extraJavaOptions", "")
+            builder = builder.config("spark.driver.extraJavaOptions",
+                                     f"{opts} -Xms{heap}".strip())
+        return get_or_create(builder)
+    return call
+
+
 def start(workers: int, run_dir: Path, event_dir: Path | None = None):
+    from pyspark.sql import SparkSession
+
     from ocr_documents_spark.session import get_spark
 
-    spark = get_spark("perfbench", master=f"local[{workers}]",
-                      shuffle_partitions=2 * workers,
-                      extra_conf=pinned_conf(run_dir, event_dir))
+    with trace.patched(SparkSession.Builder,
+                       {"getOrCreate": _initial_heap_at_max}):
+        spark = get_spark("perfbench", master=f"local[{workers}]",
+                          shuffle_partitions=2 * workers,
+                          extra_conf=pinned_conf(run_dir, event_dir))
     spark.sparkContext.setLogLevel("ERROR")
     return spark
 
@@ -64,6 +83,11 @@ def stop(spark) -> None:
             proc.wait()
     SparkContext._gateway = None
     SparkContext._jvm = None
+
+
+def jvm_pid(spark) -> int:
+    """PID of the JVM behind ``spark`` (pyspark launched it)."""
+    return spark.sparkContext._gateway.proc.pid
 
 
 def group(spark, name: str) -> None:

@@ -21,7 +21,8 @@ def _read(log_dir: Path):
 
 def by_group(log_dir: Path) -> dict:
     """-> {group: {stage_id: [task dict]}}; a task dict carries
-    duration_s, cpu_s, gc_s, shuffle_write_b, shuffle_read_b, spill_b."""
+    duration_s, cpu_s, gc_s, shuffle_write_b, shuffle_read_b, spill_b and
+    the shuffle record counts shuffle_write_rows, shuffle_read_rows."""
     stage_group, tasks = {}, []
     for ev in _read(log_dir):
         kind = ev.get("Event")
@@ -38,6 +39,8 @@ def by_group(log_dir: Path) -> dict:
                 "cpu_s": m.get("Executor CPU Time", 0) / 1e9,
                 "gc_s": m.get("JVM GC Time", 0) / 1e3,
                 "shuffle_write_b": sw.get("Shuffle Bytes Written", 0),
+                "shuffle_write_rows": sw.get("Shuffle Records Written", 0),
+                "shuffle_read_rows": sr.get("Total Records Read", 0),
                 "shuffle_read_b": (sr.get("Remote Bytes Read", 0)
                                    + sr.get("Local Bytes Read", 0)),
                 "spill_b": (m.get("Memory Bytes Spilled", 0)
@@ -74,3 +77,13 @@ def summarize(stages: dict) -> dict:
         "shuffle_read_mb": sum(t["shuffle_read_b"] for t in all_tasks) / mb,
         "spill_mb": sum(t["spill_b"] for t in all_tasks) / mb,
     }
+
+
+def scan_side_shuffle_records(stages: dict) -> int:
+    """Records written to shuffle by the stages that read no shuffle
+    input: the exchanges fed straight from the scan.  On the heavy split
+    that is the explode exchange, one row per span of a gate-passing
+    document and one per gate-failed document."""
+    return sum(sum(t["shuffle_write_rows"] for t in ts)
+               for ts in stages.values()
+               if not any(t["shuffle_read_rows"] for t in ts))

@@ -67,6 +67,8 @@ def end_to_end(wl, ctx, seconds: float) -> dict:
         walls = engine.window(one, seconds, wl.min_passes)
     cpu_s = procs.cpu_seconds() - cpu0
     steal = procs.steal_frac(stat0, procs.cpu_stat())
+    jvm = [engine.jvm_pid(ctx.spark)]
+    jvm_rss_mb, jvm_hwm_mb = procs.rss_mb(jvm), procs.rss_mb(jvm, "VmHWM")
     wl.collect(ctx)
     engine.stop(ctx.spark)
     ctx.spark = None
@@ -85,7 +87,8 @@ def end_to_end(wl, ctx, seconds: float) -> dict:
         },
         "witness": {"passes": walls, "warm_passes": warm_walls,
                     "session_start_s": start_s, "steal_frac": steal,
-                    "warmup_s": warm_s,
+                    "warmup_s": warm_s, "pass_peak_rss_mb": laps,
+                    "jvm_rss_mb": jvm_rss_mb, "jvm_hwm_mb": jvm_hwm_mb,
                     "control_docs_per_s": expected["docs_per_s"]},
     }
 
@@ -115,14 +118,10 @@ def main(argv=None) -> int:
               f"choose from {sorted(WORKLOADS)}", file=sys.stderr)
         return 2
     wl = WORKLOADS[args.workload]
-    size = args.docs or wl.size
 
-    ctx = types.SimpleNamespace(spark=None, P=workers())
-    ctx.layout = corpus.ensure(ROOT, WORK, wl.corpus, args.seed, size,
-                               ctx.P)
-    if args.trace and wl.mix_probes:
-        ctx.mix_layout = corpus.ensure(ROOT, WORK, "mix", args.seed, size,
-                                       ctx.P)
+    ctx = types.SimpleNamespace(spark=None, P=workers(), root=ROOT,
+                                work=WORK, seed=args.seed)
+    wl.prepare(ctx, args.docs or wl.size, bool(args.trace))
     ctx.tasks = corpus.row_groups(ctx.layout)
     ctx.run_dir = WORK / "runs" / f"{args.workload}-s{args.seed}-{os.getpid()}"
     shutil.rmtree(ctx.run_dir, ignore_errors=True)

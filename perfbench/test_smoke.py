@@ -114,6 +114,32 @@ def test_self_time_subtracts_covered_child_intervals():
     assert [s["id"] for s in t.descendants(0)] == [1, 2, 3]
 
 
+def test_scan_side_shuffle_records_skip_stages_that_read_a_shuffle():
+    from perfbench.eventlog import scan_side_shuffle_records
+
+    def task(written, read):
+        return {"shuffle_write_rows": written, "shuffle_read_rows": read}
+    stages = {
+        1: [task(0, 0)],                  # light branch: no exchange
+        2: [task(700, 0), task(300, 0)],  # explode exchange off the scan
+        3: [task(40, 1000)],              # regroup exchange
+        4: [task(0, 40)],                 # finalize
+    }
+    assert scan_side_shuffle_records(stages) == 1000
+
+
+def test_initial_heap_follows_the_programs_maximum():
+    from pyspark.sql import SparkSession
+
+    from perfbench.engine import _initial_heap_at_max
+
+    options = _initial_heap_at_max(lambda builder: dict(builder._options))
+    sized = SparkSession.builder.config("spark.driver.memory", "3g")
+    assert options(sized)["spark.driver.extraJavaOptions"] == "-Xms3g"
+    unsized = SparkSession.builder.config("spark.app.name", "x")
+    assert "spark.driver.extraJavaOptions" not in options(unsized)
+
+
 def test_corpus_is_seeded_and_cached(tmp_path):
     from perfbench import corpus
 

@@ -8,27 +8,17 @@ the two in one window.  After the session stops, the per-document layers
 are timed in this process, the captured batch function is run on the
 corpus's RecordBatches, and the oracle pool gives the control ceiling.
 
-Ledger of the median traced pass (wall W):
-
-* ``extract_*``: driver-side plan build (span self time), the scan floor,
-  the Arrow transfer floor (identity ``mapInArrow`` minus scan), and the
-  Python work of the adapter and each core layer spread over P workers;
-  the residual is W minus their sum (JVM/Python contention, stragglers,
-  scheduling).
-* ``lake_job``: the self time of each ``jobs.lake`` span.  The results
-  write is the action that runs the extraction and fills the persist, so
-  its span is split into the extraction (the same corpus's stage wall in
-  this session) and the results commit; the extraction is not counted
-  twice.  The residual is the job's time outside every lake span.
+Ledger of the median traced pass (wall W): the parts are the workload's
+own (``trace_layers`` in workloads.py); the residual is W minus their sum
+and is stated with them.
 """
 
 from __future__ import annotations
 
 import os
 import statistics
-from pathlib import Path
 
-from . import corpus, engine, eventlog, layers, oracle, procs
+from . import engine, eventlog, layers, oracle, procs
 from .trace import Tracer
 
 PER_LAYER_UNITS = {
@@ -67,71 +57,6 @@ PER_LAYER_UNITS = {
     "run.nproc": "count", "run.P": "count", "run.loadavg_1m": "load",
     "run.steal_frac": "fraction",
 }
-LAKE_SPANS = ("lake.pending_buckets", "lake.write_rejects",
-              "lake.write_results", "lake.write_fields_long",
-              "lake.append_metrics", "lake.append_checkpoints")
-MIX_PASSES = 2
-
-
-def _mix_probes(ctx) -> dict:
-    """The mix corpus under the default plan, then under the split a
-    real-OCR deployment derives (``auto_heavy_threshold(300)``)."""
-    from ocr_documents_spark.pipeline import auto_heavy_threshold
-
-    threshold = auto_heavy_threshold(300)
-    out = {"threshold": threshold}
-    for name, heavy_threshold in (("skew", None), ("heavy", threshold)):
-        def one():
-            engine.noop(engine.extraction(ctx.spark, ctx.mix_layout,
-                                          heavy_threshold))
-        engine.group(ctx.spark, f"{name}-warm")
-        engine.until_steady(one, min_passes=2, max_passes=3)
-        walls = []
-        for i in range(MIX_PASSES):
-            engine.group(ctx.spark, f"{name}-{i}")
-            walls.append(engine.timed(one))
-        out[name] = walls
-    return out
-
-
-def _heavy_span_rows(layout: dict, threshold: int) -> int:
-    """Rows the heavy path explodes: every span of a gate-passing heavy
-    document, one metadata row for a gate-failed one."""
-    from ocr_documents_spark.extractors.pipeline_pure import \
-        document_quality_report
-
-    rows = 0
-    for _, spans in corpus.read_documents(layout):
-        if len(spans) > threshold:
-            rows += len(spans) if document_quality_report(spans)[0] else 1
-    return rows
-
-
-def _validate_s(ctx) -> float:
-    from ocr_documents_spark.sources.ingest import split_valid
-
-    def one():
-        valid, rejects = split_valid(
-            engine.docs(ctx.spark, ctx.layout).select("doc_id", "spans"))
-        valid.count()
-        rejects.count()
-
-    engine.group(ctx.spark, "validate")
-    return engine.median([engine.timed(one) for _ in range(4)][1:])
-
-
-def _walk(root: Path) -> tuple[int, int]:
-    files = size = 0
-    for dirpath, _, names in os.walk(root):
-        for n in names:
-            files += 1
-            size += os.path.getsize(os.path.join(dirpath, n))
-    return files, size
-
-
-def _span_self(tracer: Tracer, root_id: int, name: str) -> float:
-    return sum(tracer.self_time(s["id"]) for s in tracer.descendants(root_id)
-               if s["name"] == name)
 
 
 def _pick_median(walls: list[float]) -> int:
@@ -164,19 +89,7 @@ def run(wl, ctx, seconds: float, seed: int) -> dict:
     root = passes[pick]["id"]
     W = walls[pick]
 
-    lake_files = lake_bytes = 0
-    validate_s = 0.0
-    mix = None
-    if wl.writes_lake:
-        lake_files, lake_bytes = _walk(ctx.lake)
-        validate_s = _validate_s(ctx)
-        engine.group(ctx.spark, "stage")
-        stage_s = engine.median([engine.timed(lambda: engine.noop(
-            engine.extraction(ctx.spark, ctx.layout))) for _ in range(3)])
-    else:
-        stage_s = engine.median(untraced)
-    if wl.mix_probes:
-        mix = _mix_probes(ctx)
+    probes = wl.trace_probes(ctx, untraced)
     wl.collect(ctx)
     engine.stop(ctx.spark)
     ctx.spark = None
@@ -205,59 +118,23 @@ def run(wl, ctx, seconds: float, seed: int) -> dict:
     core_us["residual"] = total_us - sum(core_us.values())
     adapter_us = adapter_total_s * us - total_us if batch_fn else 0.0
 
-    lake_self = {n: _span_self(tracer, root, n) for n in LAKE_SPANS}
-    if wl.writes_lake:
-        extraction = min(stage_s, lake_self["lake.write_results"])
-        parts = {n: v for n, v in lake_self.items()
-                 if n != "lake.write_results"}
-        parts["extraction (inside lake.write_results)"] = extraction
-        parts["results commit (rest of lake.write_results)"] = (
-            lake_self["lake.write_results"] - extraction)
-    else:
-        spread = docs / ctx.P / 1e6
-        parts = {
-            "pipeline.build (driver)": _span_self(tracer, root,
-                                                  "pipeline.build"),
-            "scan floor": fl["scan_s"],
-            "arrow transfer floor": max(0.0, fl["arrow_s"] - fl["scan_s"]),
-            "arrow adapter (python)": adapter_us * spread,
-            **{f"core.{k} (python)": v * spread for k, v in core_us.items()},
-        }
+    own, parts = wl.trace_layers(
+        ctx, tracer, root, probes, groups,
+        {"docs": docs, "wall_s": W, "floors": fl, "core_us": core_us,
+         "adapter_us": adapter_us})
     residual = W - sum(parts.values())
     ledger = {"workload": wl.name, "wall_s": W, "P": ctx.P, "docs": docs,
               "parts_s": parts, "residual_s": residual,
               "residual_frac": residual / W,
               "batch_functions_seen": n_batch_fns}
 
-    skew_m = dict.fromkeys(("stage_s", "docs_per_s", "tasks", "task_p50_s",
-                            "task_max_s", "straggler_ratio",
-                            "media_decodes_per_doc"), 0.0)
-    heavy_m = dict.fromkeys(("pass_s", "docs_per_s", "span_rows", "tasks",
-                             "straggler_ratio", "shuffle_write_mb",
-                             "shuffle_read_mb", "spill_mb"), 0.0)
-    if mix is not None:
-        mix_docs = ctx.mix_layout["docs"]
-        for name, into in (("skew", skew_m), ("heavy", heavy_m)):
-            sums = [eventlog.summarize(groups.get(f"{name}-{i}", {}))
-                    for i in range(MIX_PASSES)]
-            wall = engine.median(mix[name])
-            into.update({k: engine.median([x[k] for x in sums])
-                         for k in into if k in sums[0]})
-            into.update({"docs_per_s": mix_docs / wall})
-        skew_m["stage_s"] = engine.median(mix["skew"])
-        heavy_m["pass_s"] = engine.median(mix["heavy"])
-        heavy_m["span_rows"] = _heavy_span_rows(ctx.mix_layout,
-                                                mix["threshold"])
-        skew_m["media_decodes_per_doc"] = layers.decode_calls(
-            list(corpus.read_documents(ctx.mix_layout))) / mix_docs
-
     dps_untraced = engine.median([docs / w for w in untraced])
     dps_traced = engine.median([docs / w for w in walls])
-    m = {
+    # a metric off this workload's path reads 0
+    m = dict.fromkeys(PER_LAYER_UNITS, 0.0)
+    m.update({
         "session.start_s": s_start["end"] - s_start["start"],
         "session.warmup_s": s_warm["end"] - s_warm["start"],
-        "ingest.validate_s": validate_s,
-        "pipeline.stage_s": stage_s,
         "pipeline.scan_s": fl["scan_s"],
         "pipeline.arrow_passthrough_s": fl["arrow_s"],
         "pipeline.adapter_us_per_doc": adapter_us,
@@ -272,15 +149,8 @@ def run(wl, ctx, seconds: float, seed: int) -> dict:
         "core.extract_us_per_doc": core_us["extract"],
         "core.residual_us_per_doc": core_us["residual"],
         "control.docs_per_s": expected["docs_per_s"],
-        "pipeline.ceiling_frac": (docs / stage_s) / expected["docs_per_s"],
         **{f"spark.{k}": v for k, v in spark_m.items()},
-        **{f"skew.{k}": v for k, v in skew_m.items()},
-        **{f"heavy.{k}": v for k, v in heavy_m.items()},
-        **{f"{n}_s": lake_self[n] for n in LAKE_SPANS},
-        "lake.files_written": lake_files,
-        "lake.bytes_written": lake_bytes,
-        "lake.files_per_kdoc": lake_files / (docs / 1000.0),
-        "lake.commit_frac": (W - stage_s) / W if wl.writes_lake else 0.0,
+        **own,
         "trace.overhead_frac": 1.0 - dps_traced / dps_untraced,
         "ledger.wall_s": W,
         "ledger.residual_s": residual,
@@ -290,16 +160,18 @@ def run(wl, ctx, seconds: float, seed: int) -> dict:
         "run.P": ctx.P,
         "run.loadavg_1m": procs.loadavg_1m(),
         "run.steal_frac": steal,
-    }
+    })
+    m["pipeline.ceiling_frac"] = ((docs / m["pipeline.stage_s"])
+                                  / expected["docs_per_s"])
     assert set(m) == set(PER_LAYER_UNITS), set(m) ^ set(PER_LAYER_UNITS)
 
-    out_path = (ctx.run_dir.parent.parent / "traces"
-                / f"{wl.name}-s{seed}.json")
+    out_path = ctx.work / "traces" / f"{wl.name}-s{seed}.json"
     tracer.write(out_path, ledger=ledger, per_layer=m, core=core,
                  floors=fl, untraced_walls=untraced, traced_walls=walls,
-                 mix=mix, stages={g: {str(s): eventlog.summarize({s: t})
-                                          for s, t in st.items()}
-                                      for g, st in groups.items()})
+                 probes=probes,
+                 stages={g: {str(s): eventlog.summarize({s: t})
+                             for s, t in st.items()}
+                         for g, st in groups.items()})
     return {"check": check, "ledger": ledger, "trace_file": str(out_path),
             "metrics": {k: (v, PER_LAYER_UNITS[k]) for k, v in m.items()},
             "witness": {"control_docs_per_s": expected["docs_per_s"],

@@ -1,5 +1,5 @@
-"""The benchmark's workloads: corpus, warm-up, one timed pass, and the
-output check against the oracle.
+"""The benchmark's workloads: corpus, warm-up, one timed pass, the output
+check against the oracle, and the workload's own part of the traced run.
 
 * ``extract_light``: light documents through the default ``run_pipeline``
   into a noop sink — the 99% common case; classify, extract and the Arrow
@@ -10,29 +10,54 @@ output check against the oracle.
 * ``lake_job``: ``jobs.extract.run`` on a smaller slice of the light stream
   into a fresh lake, every one of 256 buckets claimed — ingest validation,
   persist and four lake writes beside the same extraction.
+
+The traced run (``traced.run``) calls ``trace_probes`` in the live session
+after the traced passes, then ``trace_layers`` once the session has
+stopped and its event log is complete.  ``trace_layers`` returns the
+workload's own per-layer metrics (``pipeline.stage_s`` among them) and the
+parts of its ledger; a per-layer metric neither workload sets reads 0.
 """
 
 from __future__ import annotations
 
-from . import engine, oracle, trace
+import os
+
+from . import corpus, engine, eventlog, layers, oracle, trace
 
 RESULT_COLUMNS = ("doc_id", "status", "document_type", "out_spans")
+# The mix probes: timed passes per plan, and the fewest and most warm
+# passes before them.  On a 4-vCPU VM the heavy split's pass time kept
+# falling until its fifth or sixth pass (6.7, 6.0, 5.6, 5.4, 5.3, 5.2 s
+# after a cold first pass), while a pass could be within 3% of the one
+# before it as early as the third.
+MIX_PASSES = 2
+MIX_WARM = {"skew": (3, 8), "heavy": (5, 8)}
+LAKE_SPANS = ("lake.pending_buckets", "lake.write_rejects",
+              "lake.write_results", "lake.write_fields_long",
+              "lake.append_metrics", "lake.append_checkpoints")
+
+
+def _ensure(ctx, kind: str, size: int) -> dict:
+    return corpus.ensure(ctx.root, ctx.work, kind, ctx.seed, size, ctx.P)
+
+
+def _span_self(tracer, root_id: int, name: str) -> float:
+    return sum(tracer.self_time(s["id"]) for s in tracer.descendants(root_id)
+               if s["name"] == name)
 
 
 class Extract:
-    """``run_pipeline`` over one corpus into a noop sink.
+    """``run_pipeline`` over the light corpus into a noop sink."""
 
-    ``mix_probes``: the traced run also measures the mix corpus under the
-    default plan and under the salted heavy-path plan."""
-
+    name = "extract_light"
+    size = 4000
     min_passes = 3
     trace_pairs = 3
-    writes_lake = False
 
-    def __init__(self, name: str, corpus: str, size: int,
-                 mix_probes: bool = False):
-        self.name, self.corpus, self.size = name, corpus, size
-        self.mix_probes = mix_probes
+    def prepare(self, ctx, size: int, traced: bool) -> None:
+        ctx.layout = _ensure(ctx, "light", size)
+        if traced:
+            ctx.mix_layout = _ensure(ctx, "mix", size)
 
     def warm(self, ctx) -> list[float]:
         engine.group(ctx.spark, "warm")
@@ -57,19 +82,85 @@ class Extract:
     def check(self, ctx, expected: dict) -> dict:
         return oracle.compare(expected["expected"], ctx.actual)
 
+    def trace_probes(self, ctx, untraced: list[float]) -> dict:
+        """The mix corpus under the default plan (``skew``), then under
+        the split a real-OCR deployment derives (``heavy``,
+        ``auto_heavy_threshold(300)``), each warmed until pass time stops
+        falling and then timed under its own job groups."""
+        from ocr_documents_spark.pipeline import auto_heavy_threshold
+
+        threshold = auto_heavy_threshold(300)
+        out = {"stage_s": engine.median(untraced), "threshold": threshold}
+        for name, heavy_threshold in (("skew", None), ("heavy", threshold)):
+            def one():
+                engine.noop(engine.extraction(ctx.spark, ctx.mix_layout,
+                                              heavy_threshold))
+            engine.group(ctx.spark, f"{name}-warm")
+            least, most = MIX_WARM[name]
+            warm = engine.until_steady(one, min_passes=least,
+                                       max_passes=most)
+            walls = []
+            for i in range(MIX_PASSES):
+                engine.group(ctx.spark, f"{name}-{i}")
+                walls.append(engine.timed(one))
+            out[name] = {"warm_walls": warm, "walls": walls}
+        return out
+
+    def trace_layers(self, ctx, tracer, root, probes, groups, shared):
+        """-> (metrics, ledger parts).  The ledger spreads the Python work
+        of the adapter and each core layer over P workers beside the
+        driver-side plan build, the scan floor and the Arrow floor."""
+        mix_docs = ctx.mix_layout["docs"]
+        m = {"pipeline.stage_s": probes["stage_s"]}
+        for name, keys in (
+                ("skew", ("tasks", "task_p50_s", "task_max_s",
+                          "straggler_ratio")),
+                ("heavy", ("tasks", "straggler_ratio", "shuffle_write_mb",
+                           "shuffle_read_mb", "spill_mb"))):
+            stages = [groups.get(f"{name}-{i}", {}) for i in range(MIX_PASSES)]
+            sums = [eventlog.summarize(s) for s in stages]
+            m.update({f"{name}.{k}": engine.median([x[k] for x in sums])
+                      for k in keys})
+            m[f"{name}.docs_per_s"] = (
+                mix_docs / engine.median(probes[name]["walls"]))
+        m["skew.stage_s"] = engine.median(probes["skew"]["walls"])
+        m["heavy.pass_s"] = engine.median(probes["heavy"]["walls"])
+        m["heavy.span_rows"] = engine.median(
+            [eventlog.scan_side_shuffle_records(groups.get(f"heavy-{i}", {}))
+             for i in range(MIX_PASSES)])
+        m["skew.media_decodes_per_doc"] = layers.decode_calls(
+            list(corpus.read_documents(ctx.mix_layout))) / mix_docs
+
+        fl, spread = shared["floors"], shared["docs"] / ctx.P / 1e6
+        parts = {
+            "pipeline.build (driver)": _span_self(tracer, root,
+                                                  "pipeline.build"),
+            "scan floor": fl["scan_s"],
+            "arrow transfer floor": max(0.0, fl["arrow_s"] - fl["scan_s"]),
+            "arrow adapter (python)": shared["adapter_us"] * spread,
+            **{f"core.{k} (python)": v * spread
+               for k, v in shared["core_us"].items()},
+        }
+        return m, parts
+
 
 class LakeJob:
     """``jobs.extract.run`` over a light corpus into a fresh lake."""
 
+    name = "lake_job"
+    # A lake job pays per bucket file written: each scan task writes one
+    # file per bucket it holds, per table.  At 1000 documents (about 2600
+    # files per job) a job took 9-15 s on a 4-vCPU VM and its timing moved
+    # with the host's load by up to 2x, so the lake corpus is smaller:
+    # several whole jobs fit in one run, and the run's median is of
+    # several jobs.
+    size = 256
     min_passes = 4
     trace_pairs = 2
     warm_jobs = 3
-    mix_probes = False
-    writes_lake = True
-    corpus = "light"
 
-    def __init__(self, name: str, size: int):
-        self.name, self.size = name, size
+    def prepare(self, ctx, size: int, traced: bool) -> None:
+        ctx.layout = _ensure(ctx, "light", size)
 
     def warm(self, ctx) -> list[float]:
         """Whole jobs into throwaway lakes: every plan shape of the job
@@ -117,17 +208,59 @@ class LakeJob:
         return oracle.check_lake(ctx.lake, expected["expected"],
                                  expected["n_fields"], engine.N_BUCKETS)
 
+    def trace_probes(self, ctx, untraced: list[float]) -> dict:
+        """The last lake's files, ingest validation alone, and the same
+        corpus's extraction stage into a noop sink."""
+        from ocr_documents_spark.sources.ingest import split_valid
 
-# A lake job pays per bucket file written: each scan task writes one file
-# per bucket it holds, per table.  At 1000 documents (about 2600 files per
-# job) a job took 9-15 s on a 4-vCPU VM and its timing moved with the
-# host's load by up to 2x, so the lake corpus is smaller: several whole
-# jobs fit in one run, and the run's median is of several jobs.
-LIGHT_DOCS = 4000
-LAKE_DOCS = 256
+        files = size = 0
+        for dirpath, _, names in os.walk(ctx.lake):
+            for n in names:
+                files += 1
+                size += os.path.getsize(os.path.join(dirpath, n))
 
-WORKLOADS = {
-    "extract_light": Extract("extract_light", "light", LIGHT_DOCS,
-                             mix_probes=True),
-    "lake_job": LakeJob("lake_job", LAKE_DOCS),
-}
+        def validate():
+            valid, rejects = split_valid(
+                engine.docs(ctx.spark, ctx.layout).select("doc_id", "spans"))
+            valid.count()
+            rejects.count()
+
+        def stage():
+            engine.noop(engine.extraction(ctx.spark, ctx.layout))
+
+        engine.group(ctx.spark, "validate")
+        validate_s = engine.median([engine.timed(validate)
+                                    for _ in range(4)][1:])
+        engine.group(ctx.spark, "stage")
+        stage_s = engine.median([engine.timed(stage) for _ in range(3)])
+        return {"files": files, "bytes": size, "validate_s": validate_s,
+                "stage_s": stage_s}
+
+    def trace_layers(self, ctx, tracer, root, probes, groups, shared):
+        """-> (metrics, ledger parts).  The ledger is the self time of
+        each ``jobs.lake`` span.  The results write is the action that
+        runs the extraction and fills the persist, so its span is split
+        into the extraction (the same corpus's stage wall in this session)
+        and the results commit; the extraction is not counted twice."""
+        lake_self = {n: _span_self(tracer, root, n) for n in LAKE_SPANS}
+        stage_s, wall = probes["stage_s"], shared["wall_s"]
+        kdocs = shared["docs"] / 1000.0
+        m = {
+            "pipeline.stage_s": stage_s,
+            "ingest.validate_s": probes["validate_s"],
+            **{f"{n}_s": v for n, v in lake_self.items()},
+            "lake.files_written": probes["files"],
+            "lake.bytes_written": probes["bytes"],
+            "lake.files_per_kdoc": probes["files"] / kdocs,
+            "lake.commit_frac": (wall - stage_s) / wall,
+        }
+        extraction = min(stage_s, lake_self["lake.write_results"])
+        parts = {n: v for n, v in lake_self.items()
+                 if n != "lake.write_results"}
+        parts["extraction (inside lake.write_results)"] = extraction
+        parts["results commit (rest of lake.write_results)"] = (
+            lake_self["lake.write_results"] - extraction)
+        return m, parts
+
+
+WORKLOADS = {wl.name: wl for wl in (Extract(), LakeJob())}
