@@ -22,15 +22,13 @@ processes pay the compile cost a single time (mirrors the reference's
 singleton classifiers, and is the right shape for SCALAR pandas UDFs).
 
 The scoring surface is a term-frequency dot product with binary weights —
-the "rules-plus-TF-IDF" classifier named by the north star.  A vectorised
-batch path (:func:`classify_enhanced_batch`) evaluates each pattern once per
-Arrow batch instead of once per row.
+the "rules-plus-TF-IDF" classifier named by the north star.
 """
 
 from __future__ import annotations
 
 import re
-from typing import Iterable, List, Optional, Tuple
+from typing import Optional, Tuple
 
 _I = re.IGNORECASE
 
@@ -190,11 +188,6 @@ def classify_enhanced(text: Optional[str]) -> Tuple[str, float]:
     if runner_up > 0 and (best - runner_up) < 15:
         confidence *= 0.6
     return best_type, confidence
-
-
-def classify_enhanced_batch(texts: Iterable[Optional[str]]) -> List[Tuple[str, float]]:
-    """Batch wrapper used inside the Arrow pandas UDF."""
-    return [classify_enhanced(t) for t in texts]
 
 
 # --------------------------------------------------------------------------

@@ -43,27 +43,34 @@ TEXT_SPAN_CONFIDENCE = 85.0  # backend/ocr_service.py:1536 (pre-extracted text)
 OutSpan = Tuple[str, Optional[str], Optional[str], int]
 
 
-def recover_pages(spans: Sequence[Any]) -> List[Dict[str, Any]]:
-    """Spans (any order) -> offset-ordered pages with recovered text."""
+def recover_span(kind: Optional[str], text: Optional[str],
+                 media_ref: Optional[str]) -> Tuple[str, float]:
+    """One span -> (page text, confidence).
+
+    Media spans go through the OCR decode seam; html spans through the
+    DOM-heuristic boilerplate strip (extractors/boilerplate.py); text
+    spans pass through.  Born-digital spans carry the 85.0 confidence.
+    """
+    if kind == "media":
+        page_text, conf, _qc = decode_media_ref(media_ref or "")
+        return page_text, conf
+    if kind == "html":
+        return html_to_page_text(text or ""), TEXT_SPAN_CONFIDENCE
+    return text or "", TEXT_SPAN_CONFIDENCE
+
+
+def recover_pages(spans: Sequence[Dict[str, Any]]) -> List[Dict[str, Any]]:
+    """Spans (any order) -> offset-ordered pages with recovered text.
+
+    Spans sharing an offset keep their input order (``sorted`` is
+    stable); media_ref is set only on media-derived pages.
+    """
     pages = []
-    for span in sorted(spans, key=lambda s: s["offset"] if isinstance(s, dict) else s.offset):
-        if not isinstance(span, dict):
-            span = {"kind": span.kind, "text": span.text,
-                    "media_ref": span.media_ref, "offset": span.offset}
-        if span["kind"] == "media":
-            text, conf, qc = decode_media_ref(span["media_ref"] or "")
-            pages.append({"text": text, "confidence": conf,
-                          "media_ref": span["media_ref"], "qc": qc})
-        elif span["kind"] == "html":
-            # DOM-heuristic boilerplate strip (extractors/boilerplate.py);
-            # born-digital confidence, no media_ref, no QC metrics
-            pages.append({"text": html_to_page_text(span["text"] or ""),
-                          "confidence": TEXT_SPAN_CONFIDENCE,
-                          "media_ref": None, "qc": None})
-        else:
-            pages.append({"text": span["text"] or "",
-                          "confidence": TEXT_SPAN_CONFIDENCE,
-                          "media_ref": None, "qc": None})
+    for span in sorted(spans, key=lambda s: s["offset"]):
+        text, conf = recover_span(span["kind"], span["text"], span["media_ref"])
+        pages.append({"text": text, "confidence": conf,
+                      "media_ref": (span["media_ref"]
+                                    if span["kind"] == "media" else None)})
     return pages
 
 
@@ -96,10 +103,10 @@ def process_recovered(doc_id: str, pages: Sequence[Dict[str, Any]],
     """Steps 3-5 over already-recovered, quality-passed pages.
 
     This is the exact function the Spark heavy-path finalize stage
-    (mapInPandas) calls per document — the gate has already run natively
-    JVM-side on the first media span's metrics, mirroring the oracle's
-    cheap-first order.  Sharing it is what makes span-sequence equality
-    structural rather than aspirational.
+    (mapInArrow) calls per document, after the gate (document_quality_report)
+    and the per-span recovery (recover_span) ran as Arrow UDFs upstream,
+    mirroring the oracle's cheap-first order.  Sharing it is what makes
+    span-sequence equality structural rather than aspirational.
 
     ``forced_type`` mirrors the reference's explicit ``document_type``
     upload parameter (backend/main.py:175-188): classification and its
@@ -166,7 +173,7 @@ def process_recovered(doc_id: str, pages: Sequence[Dict[str, Any]],
     return result
 
 
-def document_quality_report(spans: Sequence[Any],
+def document_quality_report(spans: Sequence[Dict[str, Any]],
                             skip_quality_check: bool = False
                             ) -> Tuple[bool, List[str], List[str]]:
     """Gate on the FIRST media span's metrics only — decoded BEFORE any
@@ -179,17 +186,14 @@ def document_quality_report(spans: Sequence[Any],
     first_ref = None
     first_key = None
     for s in spans:
-        kind = s["kind"] if isinstance(s, dict) else s.kind
-        if kind != "media":
+        if s["kind"] != "media":
             continue
-        off = s["offset"] if isinstance(s, dict) else s.offset
-        ref = s["media_ref"] if isinstance(s, dict) else s.media_ref
-        # tie-break duplicate offsets by (offset, media_ref) nulls-first,
-        # EXACTLY like the Spark gate's sort_array over struct(offset,
-        # media_ref) — ingest rejects duplicate offsets, but direct
-        # run_pipeline/extract_stream callers can skip ingest, and the two
-        # gates must agree on such docs (ADVICE r1)
-        key = (off, 0 if ref is None else 1, ref or "")
+        ref = s["media_ref"]
+        # duplicate offsets tie-break by (offset, media_ref) nulls-first,
+        # so the choice never depends on span order: ingest rejects
+        # duplicate offsets, but direct run_pipeline / extract_stream
+        # callers can skip ingest
+        key = (s["offset"], 0 if ref is None else 1, ref or "")
         if first_key is None or key < first_key:
             first_key, first_ref = key, ref
     if first_ref is None:
@@ -202,12 +206,7 @@ def document_quality_report(spans: Sequence[Any],
     return passed, issues, warnings
 
 
-def document_quality_ok(spans: Sequence[Any],
-                        skip_quality_check: bool = False) -> bool:
-    return document_quality_report(spans, skip_quality_check)[0]
-
-
-def process_document(doc_id: str, spans: Sequence[Any],
+def process_document(doc_id: str, spans: Sequence[Dict[str, Any]],
                      skip_quality_check: bool = False,
                      forced_type: Optional[str] = None) -> Dict[str, Any]:
     """Full oracle pipeline for one document (gate first, then recover)."""
@@ -218,5 +217,6 @@ def process_document(doc_id: str, spans: Sequence[Any],
                              quality_warnings=warnings)
 
 
-def out_spans_for_document(doc_id: str, spans: Sequence[Any]) -> List[OutSpan]:
+def out_spans_for_document(doc_id: str, spans: Sequence[Dict[str, Any]]
+                           ) -> List[OutSpan]:
     return process_document(doc_id, spans)["out_spans"]

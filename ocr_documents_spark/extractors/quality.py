@@ -4,9 +4,9 @@ The reference computes blur/brightness/contrast/skew with cv2 over pixels
 (backend/image_quality_checker.py:155-202) and gates on scalar thresholds
 (:22-30, :69-142).  In our engine the metrics arrive as data (carried in the
 media payload, or produced by a cv2 pandas UDF in production), so the gate
-itself is pure scalar arithmetic — which also lets the Spark side evaluate it
-natively with column expressions (see operators/gate.py) while this module
-remains the single-node oracle.
+itself is pure scalar arithmetic.  This module is its only implementation:
+both Spark plans and the single-node oracle call it through
+extractors/pipeline_pure.document_quality_report.
 
 Scoring transcribed from backend/image_quality_checker.py:204-240; pass/fail
 ladder from :69-142.
@@ -78,9 +78,7 @@ def quality_report(w: float, h: float, blur: float, brightness: float,
     reference's exact message strings and evaluation order
     (backend/image_quality_checker.py:56-142): resolution -> blur ->
     brightness -> contrast -> skew (warn-only) -> composite score.
-
-    Message numbers print with one decimal; fixture metrics are 1-decimal
-    exact so Python and JVM %.1f render identically (no half-way rounding).
+    Message numbers print with one decimal.
     """
     t = THRESHOLDS
     issues: list = []

@@ -64,9 +64,8 @@ def _merge_table(spark: SparkSession, lake: L.Lake, table: str,
     try:
         present = {r["bucket"] for r in
                    merged.select("bucket").distinct().collect()}
-        if merged.isEmpty() and not present:
-            pass
-        else:
+        # every row has a bucket, so no bucket means no rows to write
+        if present:
             L.write_bucketed(merged, lake, table)
         for b in set(touched) - present:
             L._delete_partition_dir(spark, f"{path}/bucket={b}")
@@ -96,39 +95,37 @@ def incremental_extract(spark: SparkSession, lake: L.Lake,
         stale = (diff.filter(F.col("status")
                              .isin("added", "changed", "removed"))
                  .select("doc_id").persist())
-
-        touched = [r["bucket"] for r in
-                   stale.withColumn("bucket", lake.bucket_col())
-                   .select("bucket").distinct().collect()]
-
-        to_process = new_docs.join(todo, "doc_id", "left_semi")
-        valid, rejects = split_valid(to_process.select("doc_id", "spans"))
-        results = (run_pipeline(valid.select("doc_id", "spans"),
-                                skip_quality_check=skip_quality_check,
-                                forced_type=forced_type)
-                   .withColumn("bucket", lake.bucket_col()).persist())
         try:
-            _merge_table(spark, lake, L.RESULTS, results, stale, touched)
-            _merge_table(spark, lake, L.FIELDS_LONG,
-                         fields_long(results).withColumn(
-                             "bucket", lake.bucket_col()),
-                         stale, touched)
-            _merge_table(spark, lake, L.REJECTS,
-                         rejects.select("doc_id", "reject_reason")
-                         .withColumn("bucket", lake.bucket_col()),
-                         stale, touched)
-            wall = time.perf_counter() - t0
-            L.append(L.bucket_metrics(results, run_id, wall),
-                     lake, L.METRICS)
-            return {"run_id": run_id, **census,
-                    "n_processed": results.count(),
-                    "n_buckets_touched": len(touched),
-                    "wall_s": round(wall, 3)}
+            touched = [r["bucket"] for r in
+                       stale.withColumn("bucket", lake.bucket_col())
+                       .select("bucket").distinct().collect()]
+
+            to_process = new_docs.join(todo, "doc_id", "left_semi")
+            valid, rejects = split_valid(to_process.select("doc_id", "spans"))
+            results = (run_pipeline(valid.select("doc_id", "spans"),
+                                    skip_quality_check=skip_quality_check,
+                                    forced_type=forced_type)
+                       .withColumn("bucket", lake.bucket_col()).persist())
+            try:
+                _merge_table(spark, lake, L.RESULTS, results, stale, touched)
+                _merge_table(spark, lake, L.FIELDS_LONG,
+                             fields_long(results).withColumn(
+                                 "bucket", lake.bucket_col()),
+                             stale, touched)
+                _merge_table(spark, lake, L.REJECTS,
+                             rejects.select("doc_id", "reject_reason")
+                             .withColumn("bucket", lake.bucket_col()),
+                             stale, touched)
+                wall = time.perf_counter() - t0
+                L.append(L.bucket_metrics(results, run_id, wall),
+                         lake, L.METRICS)
+                return {"run_id": run_id, **census,
+                        "n_processed": results.count(),
+                        "n_buckets_touched": len(touched),
+                        "wall_s": round(wall, 3)}
+            finally:
+                results.unpersist()
         finally:
-            results.unpersist()
+            stale.unpersist()
     finally:
         diff.unpersist()
-        try:
-            stale.unpersist()
-        except Exception:
-            pass

@@ -19,13 +19,32 @@ from pyspark.sql import functions as F
 from ocr_documents_spark.jobs import lake as L
 
 
+def _read(spark: SparkSession, lake: L.Lake, table: str, schema: str):
+    """``table`` read as ``schema``, or None when it is absent.
+
+    The existence probe is L._path_exists, the policy
+    lake.completed_buckets uses: an unreadable table raises.  The explicit
+    schema makes an empty table (a partitioned write of zero rows leaves
+    no data file) read as zero rows instead of failing schema inference.
+    """
+    path = lake.path(table)
+    if not L._path_exists(spark, path):
+        return None
+    return spark.read.schema(schema).parquet(path)
+
+
 def summarize(spark: SparkSession, lake_root: str, n_buckets: int) -> dict:
     lake = L.Lake(lake_root, n_buckets)
     done = L.completed_buckets(spark, lake)
     out = {"buckets_total": n_buckets, "buckets_completed": len(done),
            "buckets_pending": n_buckets - len(done)}
-    try:
-        m = spark.read.parquet(lake.path(L.METRICS))
+    m = _read(spark, lake, L.METRICS,
+              "bucket int, committed_at double, n_docs long, "
+              "n_completed long, n_partial long, n_rejected_quality long, "
+              "n_rejected_classification long, n_fields long")
+    if m is None:
+        out["metrics"] = "none"
+    else:
         latest = (m.withColumn(
             "rn", F.row_number().over(
                 Window.partitionBy("bucket").orderBy(F.desc("committed_at"))))
@@ -39,20 +58,13 @@ def summarize(spark: SparkSession, lake_root: str, n_buckets: int) -> dict:
             F.sum("n_fields").alias("fields"),
         ).first()
         out.update({k: int(agg[k] or 0) for k in agg.asDict()})
-    except Exception:
-        out["metrics"] = "none"
-    try:
-        out["rejected_malformed"] = spark.read.parquet(
-            lake.path(L.REJECTS)).count()
-    except Exception:
-        out["rejected_malformed"] = 0
+    rejects = _read(spark, lake, L.REJECTS, "doc_id string")
+    out["rejected_malformed"] = 0 if rejects is None else rejects.count()
     # streaming surface (idempotent per-batch partitions: no replay
     # double-count) — previously the CLI was blind to streamed docs
-    try:
-        sm = spark.read.parquet(lake.path(L.STREAM_METRICS))
-        out["streamed_docs"] = int(sm.agg(F.sum("n_docs")).first()[0] or 0)
-    except Exception:
-        out["streamed_docs"] = 0
+    sm = _read(spark, lake, L.STREAM_METRICS, "n_docs long")
+    out["streamed_docs"] = (
+        0 if sm is None else int(sm.agg(F.sum("n_docs")).first()[0] or 0))
     return out
 
 

@@ -2,21 +2,24 @@
 
 One job, one lineage (mirrors the reference's single live request path,
 backend/main.py:94-234 — see SURVEY.md §3.1), **skew-split** into two paths
-on ``size(spans)``:
+on ``size(spans)``.  Every rule (gate, first-media-span choice, span
+recovery, classify/extract/finalize) is a function of the per-document
+core in extractors/pipeline_pure.py; this module only decides where each
+runs.
 
 * **light path** (~99% of documents, a handful of spans each): a single
-  zero-shuffle ``mapInPandas`` stage runs recover + quality gate + classify
-  + extract per document.  Parallelism comes from the input scan splits —
+  zero-shuffle ``mapInArrow`` stage runs gate + recover + classify +
+  extract per document.  Parallelism comes from the input scan splits —
   no exploded spans ever cross the wire, so the common case is
   scan -> one Arrow stage -> sink.
 * **heavy path** (media-heavy documents, the skew unit — hundreds to
   thousands of media spans in ONE row, invisible to AQE because skew hides
-  inside a single row): native quality gate (ONE probe decode per doc,
+  inside a single row): quality-gate Arrow UDF (ONE probe decode per doc,
   cheap-first; gate-failed docs stay in the same dataflow with spans
-  blanked — no second scan, no duplicate probe eval) ->
+  blanked — no second scan, no duplicate gate eval) ->
   posexplode_outer(spans) -> salted repartition on (doc_id, span_idx) ->
-  recover-text pandas UDF -> groupBy(doc_id) offset-ordered reassembly
-  (native sort_array) -> finalize mapInPandas (synthesizes rejected
+  span-recovery Arrow UDF -> groupBy(doc_id) offset-ordered reassembly
+  (native sort_array) -> finalize ``mapInArrow`` (synthesizes rejected
   results from the carried gate columns).  Exactly two shuffles, and only
   over the skewed ~1%.
 
@@ -28,24 +31,25 @@ Scale design (SURVEY.md §4.2):
   extra heavy-branch scan is skip-heavy.
 * The regroup is a hash aggregation on doc_id whose per-group state is
   bounded by the per-doc span cap, so it partial-aggregates map-side.
-* Everything between Arrow batches is native Catalyst (gate, reassembly),
-  all UDF stages are Arrow-vectorized; there is no per-row Python UDF and
-  no driver-side collect anywhere.
+* Only the reassembly is native Catalyst; every Python stage is
+  Arrow-vectorized and both ``mapInArrow`` stages share one batch adapter
+  (_map_documents).  There is no per-row Python UDF and no driver-side
+  collect anywhere.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (ArrayType, DoubleType, IntegerType, StringType,
-                               StructField, StructType)
+from pyspark.sql.pandas.types import to_arrow_schema, to_arrow_type
+from pyspark.sql.types import (ArrayType, BooleanType, DoubleType,
+                               IntegerType, StringType, StructField,
+                               StructType)
 
-from .operators.gate import (quality_issues_col, quality_passed_col,
-                             quality_warnings_col)
-from .operators.recover import probe_first_media_qc, recover_span
+from .extractors.pipeline_pure import (document_quality_report,
+                                       process_document, process_recovered,
+                                       recover_span, rejected_quality_result)
 
 DOCS_SCHEMA = StructType([
     StructField("doc_id", StringType()),
@@ -87,6 +91,18 @@ RESULT_SCHEMA = StructType([
     # 50<=score<70)
     StructField("quality_issues", ArrayType(StringType())),
     StructField("quality_warnings", ArrayType(StringType())),
+])
+
+# the heavy path's per-document gate verdict and per-span recovery
+GATE_TYPE = StructType([
+    StructField("quality_ok", BooleanType()),
+    StructField("quality_issues", ArrayType(StringType())),
+    StructField("quality_warnings", ArrayType(StringType())),
+])
+
+RECOVERED_TYPE = StructType([
+    StructField("text", StringType()),
+    StructField("confidence", DoubleType()),
 ])
 
 
@@ -137,160 +153,99 @@ def _append_result(rows: dict, r: dict) -> None:
     rows["out_spans"].append([
         {"kind": k, "text": t, "media_ref": m, "order": o}
         for (k, t, m, o) in r["out_spans"]])
-    rows["quality_issues"].append(list(r.get("quality_issues", [])))
-    rows["quality_warnings"].append(list(r.get("quality_warnings", [])))
+    rows["quality_issues"].append(r["quality_issues"])
+    rows["quality_warnings"].append(r["quality_warnings"])
 
 
-_RESULT_KEYS = ("doc_id", "document_type", "classify_confidence",
-                "overall_confidence", "status", "n_pages", "fields",
-                "out_spans", "quality_issues", "quality_warnings")
+def _doc_lists(col: pa.ListArray) -> list:
+    """A list<struct> column -> one list of field-name dicts per row.
 
-
-def _finalize_batches(forced_type: str | None = None):
-    """Classify + extract + status per document over recovered pages.
-
-    Imports inside the function body so the closure ships cleanly via
-    --py-files; rule tables compile once per executor process at import.
+    Arrow-native input adapter: ``to_pylist`` on a
+    list<struct> column builds every element through a scalar object and
+    costs several times more.  Here the column is flattened ONCE per
+    batch into its contiguous child arrays (one ``to_pylist`` each —
+    cheap, they are flat) and per-row lists are slices of one list of
+    dicts.  A null list is an empty one.
     """
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ocr_documents_spark.extractors.pipeline_pure import (
-            process_recovered, rejected_quality_result)
-
-        for pdf in batches:
-            n = len(pdf)
-            # gate riders are present on the heavy path; plain
-            # recover_and_regroup callers (no gate) default to passed
-            oks = pdf["quality_ok"] if "quality_ok" in pdf.columns else [True] * n
-            issues = (pdf["quality_issues"]
-                      if "quality_issues" in pdf.columns else [None] * n)
-            totals = (pdf["n_spans_total"]
-                      if "n_spans_total" in pdf.columns else [0] * n)
-            rows = {k: [] for k in _RESULT_KEYS}
-            for doc_id, pages_raw, warns, ok, iss, total in zip(
-                    pdf["doc_id"], pdf["pages"], pdf["quality_warnings"],
-                    oks, issues, totals):
-                warns = [] if warns is None else list(warns)
-                if ok is not None and not ok:
-                    r = rejected_quality_result(
-                        doc_id, int(total),
-                        None if iss is None else list(iss), warns)
-                else:
-                    pages = [{"text": p["text"] if p["text"] is not None else "",
-                              "confidence": float(p["confidence"]),
-                              "media_ref": p["media_ref"]} for p in pages_raw]
-                    r = process_recovered(doc_id, pages, forced_type,
-                                          quality_warnings=warns)
-                _append_result(rows, r)
-            yield pd.DataFrame(rows)
-    return fn
+    flat = col.flatten()
+    names = [f.name for f in flat.type]
+    items = [dict(zip(names, vals)) for vals in
+             zip(*(flat.field(i).to_pylist() for i in range(len(names))))]
+    out, pos = [], 0
+    for n in col.value_lengths().to_pylist():
+        n = n or 0
+        out.append(items[pos:pos + n])
+        pos += n
+    return out
 
 
-# RESULT_SCHEMA as explicit pyarrow types (mapInArrow yields RecordBatches
-# that must match the declared spark schema exactly)
-def _result_arrow_schema():
-    import pyarrow as pa
-    field_t = pa.struct([("name", pa.string()), ("value", pa.string()),
-                         ("confidence", pa.float64()), ("page", pa.int32()),
-                         ("media_ref", pa.string())])
-    span_t = pa.struct([("kind", pa.string()), ("text", pa.string()),
-                        ("media_ref", pa.string()), ("order", pa.int32())])
-    return pa.schema([
-        ("doc_id", pa.string()), ("document_type", pa.string()),
-        ("classify_confidence", pa.float64()),
-        ("overall_confidence", pa.float64()), ("status", pa.string()),
-        ("n_pages", pa.int32()), ("fields", pa.list_(field_t)),
-        ("out_spans", pa.list_(span_t)),
-        ("quality_issues", pa.list_(pa.string())),
-        ("quality_warnings", pa.list_(pa.string())),
-    ])
+def _map_documents(list_col: str, per_doc, riders: tuple = ()):
+    """The one Arrow batch adapter behind both ``mapInArrow`` stages.
 
-
-def _direct_batches(skip_quality_check: bool, forced_type: str | None = None):
-    """Whole-document single-pass stage for the light path (mapInArrow).
-
-    Runs the same shared per-document functions as the oracle
-    (extractors/pipeline_pure.py), so span-sequence equality holds by
-    construction on this path too.
-
-    Arrow-native batch adapter (guide §4.2): the measured cost of this
-    stage was ~45% INPUT BOUNDARY — Arrow->pandas materializes every
-    span of array<struct> as a per-element dict through numpy object
-    arrays.  Here the list-of-struct column is flattened ONCE per batch
-    into four contiguous child arrays (one ``to_pylist`` each — cheap,
-    they are flat) and per-doc span dicts are rebuilt by slicing, which
-    is severalfold cheaper; the per-document extraction call and its
-    results are bit-identical.
+    Per batch: ``list_col`` goes through _doc_lists once, then
+    ``per_doc(doc_id, items, *rider_values)`` runs once per document and
+    its result dicts are written into one RESULT_SCHEMA ``RecordBatch``.
     """
+    schema = to_arrow_schema(RESULT_SCHEMA)
+
     def fn(batches):
-        import pyarrow as pa
-        from ocr_documents_spark.extractors.pipeline_pure import process_document
-
-        schema = _result_arrow_schema()
         for batch in batches:
-            doc_ids = batch.column(
-                batch.schema.get_field_index("doc_id")).to_pylist()
-            spans_col = batch.column(
-                batch.schema.get_field_index("spans"))
-            lengths = spans_col.value_lengths().to_pylist()
-            flat = spans_col.flatten()
-            kinds = flat.field(0).to_pylist()
-            texts = flat.field(1).to_pylist()
-            refs = flat.field(2).to_pylist()
-            offs = flat.field(3).to_pylist()
-            rows = {k: [] for k in _RESULT_KEYS}
-            pos = 0
-            for i, doc_id in enumerate(doc_ids):
-                ln = lengths[i] or 0
-                spans = [{"kind": kinds[j], "text": texts[j],
-                          "media_ref": refs[j], "offset": offs[j]}
-                         for j in range(pos, pos + ln)]
-                pos += ln
-                r = process_document(
-                    doc_id, spans,
-                    skip_quality_check=skip_quality_check,
-                    forced_type=forced_type)
-                _append_result(rows, r)
+            rows = {name: [] for name in schema.names}
+            for doc_id, items, *extra in zip(
+                    batch.column("doc_id").to_pylist(),
+                    _doc_lists(batch.column(list_col)),
+                    *(batch.column(c).to_pylist() for c in riders)):
+                _append_result(rows, per_doc(doc_id, items, *extra))
             yield pa.RecordBatch.from_pydict(
                 {name: pa.array(rows[name], type=schema.field(name).type)
                  for name in rows}, schema=schema)
     return fn
 
 
-def with_quality_gate(docs: DataFrame, skip_quality_check: bool = False) -> DataFrame:
-    """Cheap-first gate BEFORE any recovery fan-out (Q1-Q6, S3).
-
-    One probe decode of the FIRST media span per document (mirrors the
-    reference's single-page reduced-dpi QC render,
-    backend/image_quality_checker.py:242-254), then the pass/fail ladder as
-    native JVM-side column arithmetic.  Documents that fail never pay
-    recovery: heavy_branch blanks their spans, so they cross the two
-    exchanges as single metadata rows.
-    """
-    # first media span = smallest OFFSET, not array position (spans may
-    # arrive unordered); reorder the struct so sort_array keys on offset
-    first_ref = F.try_element_at(
-        F.sort_array(F.transform(
-            F.filter("spans", lambda s: s["kind"] == F.lit("media")),
-            lambda s: F.struct(s["offset"].alias("offset"),
-                               s["media_ref"].alias("media_ref")))),
-        F.lit(1))["media_ref"]
-    empty = F.array().cast("array<string>")
-    if skip_quality_check:
-        ok, issues, warnings = F.lit(True), empty, empty
-    else:
-        qc = probe_first_media_qc(first_ref)
-        args = (qc["w"], qc["h"], qc["blur"], qc["brightness"], qc["contrast"])
-        no_media = first_ref.isNull()
-        ok = F.when(no_media, F.lit(True)).otherwise(quality_passed_col(*args))
-        issues = F.when(no_media, empty).otherwise(quality_issues_col(*args))
-        warnings = F.when(no_media, empty).otherwise(
-            quality_warnings_col(*args, qc["skew"]))
-    return (docs.withColumn("quality_ok", ok)
-            .withColumn("quality_issues", issues)
-            .withColumn("quality_warnings", warnings))
+def _direct_batches(skip_quality_check: bool, forced_type: str | None = None):
+    """Whole-document single-pass stage (mapInArrow): spans ->
+    process_document, the oracle itself, so span-sequence equality holds
+    by construction on this path."""
+    def per_doc(doc_id, spans):
+        return process_document(doc_id, spans,
+                                skip_quality_check=skip_quality_check,
+                                forced_type=forced_type)
+    return _map_documents("spans", per_doc)
 
 
-def recover_and_regroup(docs: DataFrame, salt: bool = True) -> DataFrame:
+def _finalize_pages(forced_type: str | None = None):
+    """Heavy-path finalize (mapInArrow): recovered pages + the gate's
+    riders -> the rejected result or classify + extract + status."""
+    def per_doc(doc_id, pages, n_spans_total, ok, issues, warnings):
+        if not ok:
+            return rejected_quality_result(doc_id, n_spans_total, issues,
+                                           warnings)
+        return process_recovered(doc_id, pages, forced_type,
+                                 quality_warnings=warnings)
+    return _map_documents("pages", per_doc, (
+        "n_spans_total", "quality_ok", "quality_issues", "quality_warnings"))
+
+
+def _quality_gate(skip_quality_check: bool):
+    """document_quality_report over a batch of ``spans`` -> GATE_TYPE."""
+    @F.arrow_udf(GATE_TYPE)
+    def quality_gate(spans: pa.Array) -> pa.Array:
+        return pa.array([document_quality_report(s, skip_quality_check)
+                         for s in _doc_lists(spans)],
+                        type=to_arrow_type(GATE_TYPE))
+    return quality_gate
+
+
+@F.arrow_udf(RECOVERED_TYPE)
+def recover_spans(kind: pa.Array, text: pa.Array,
+                  media_ref: pa.Array) -> pa.Array:
+    """recover_span over a batch of exploded spans -> RECOVERED_TYPE."""
+    return pa.array([recover_span(*s) for s in zip(
+        kind.to_pylist(), text.to_pylist(), media_ref.to_pylist())],
+        type=to_arrow_type(RECOVERED_TYPE))
+
+
+def recover_and_regroup(docs: DataFrame) -> DataFrame:
     """docs -> one row per doc with offset-ordered recovered pages (+ every
     doc-level column besides doc_id/spans — the gate's quality_* triage
     surface, n_spans_total — carried through the fan-out as riders).
@@ -305,9 +260,6 @@ def recover_and_regroup(docs: DataFrame, salt: bool = True) -> DataFrame:
     explode as a single null-span row (posexplode_outer) and regroup to
     ``pages = []`` — collect_list drops the null page struct.
     """
-    if "quality_warnings" not in docs.columns:
-        docs = docs.withColumn("quality_warnings",
-                               F.array().cast("array<string>"))
     riders = [c for c in docs.columns if c not in ("doc_id", "spans")]
     spans = docs.select("doc_id", *riders,
                         F.posexplode_outer("spans").alias("span_idx", "span"))
@@ -316,31 +268,33 @@ def recover_and_regroup(docs: DataFrame, salt: bool = True) -> DataFrame:
         "doc_id", "span_idx", "span",
         *[F.when(first_row, F.col(c)).alias(c) for c in riders])
 
-    if salt:
-        # spread media-heavy documents across tasks; without this, a doc
-        # with 4096 media spans pins its entire recovery to one input split.
-        # The partition count is EXPLICIT: AQE coalesces shuffles by bytes,
-        # and a few thousand span rows look tiny even when each costs
-        # ~100ms-1s of OCR — byte-based coalescing would serialize exactly
-        # the work this shuffle exists to spread (user-specified counts are
-        # exempt from AQE coalescing).
-        sess = docs.sparkSession
-        n_parts = max(sess.sparkContext.defaultParallelism * 2,
-                      int(sess.conf.get("spark.sql.shuffle.partitions", "200")))
-        spans = spans.repartition(n_parts, "doc_id", "span_idx")
+    # spread media-heavy documents across tasks; without this, a doc
+    # with 4096 media spans pins its entire recovery to one input split.
+    # The partition count is EXPLICIT: AQE coalesces shuffles by bytes,
+    # and a few thousand span rows look tiny even when each costs
+    # ~100ms-1s of OCR — byte-based coalescing would serialize exactly
+    # the work this shuffle exists to spread (user-specified counts are
+    # exempt from AQE coalescing).
+    sess = docs.sparkSession
+    n_parts = max(sess.sparkContext.defaultParallelism * 2,
+                  int(sess.conf.get("spark.sql.shuffle.partitions", "200")))
+    spans = spans.repartition(n_parts, "doc_id", "span_idx")
 
     rec = spans.select(
         "doc_id",
         *riders,
         F.col("span").isNotNull().alias("is_span"),
         F.col("span.offset").alias("offset"),
+        "span_idx",
         F.col("span.media_ref").alias("media_ref"),
-        recover_span(F.col("span.kind"), F.col("span.text"),
-                     F.col("span.media_ref")).alias("rec"),
+        recover_spans(F.col("span.kind"), F.col("span.text"),
+                      F.col("span.media_ref")).alias("rec"),
     )
 
+    # (offset, span_idx) order = recover_pages' stable sort by offset
     page = F.when(F.col("is_span"), F.struct(
         F.col("offset"),
+        F.col("span_idx"),
         F.col("rec.text").alias("text"),
         F.col("media_ref"),
         F.col("rec.confidence").alias("confidence"),
@@ -351,19 +305,17 @@ def recover_and_regroup(docs: DataFrame, salt: bool = True) -> DataFrame:
 
 
 def run_pipeline(docs: DataFrame, skip_quality_check: bool = False,
-                 salt: bool = True,
                  heavy_threshold: int | None = None,
                  forced_type: str | None = None) -> DataFrame:
     """Full extraction: docs(doc_id, spans) -> RESULT_SCHEMA DataFrame.
 
     Skew-split: documents with ``size(spans) <= heavy_threshold`` run the
     zero-shuffle direct stage; bigger ones are gated first (one probe decode
-    per doc), failed ones short-circuit to native result rows, and the rest
-    run the salted explode/regroup path.  ``heavy_threshold=None`` derives
-    the split from the recovery cost model (see auto_heavy_threshold):
-    cheap recovery -> everything direct, zero shuffles; expensive OCR ->
-    media-heavy docs fan out.  ``salt=False`` forces everything through the
-    direct stage regardless.
+    per doc), failed ones short-circuit to rejected result rows, and the
+    rest run the salted explode/regroup path.  ``heavy_threshold=None``
+    derives the split from the recovery cost model (see
+    auto_heavy_threshold): cheap recovery -> everything direct, zero
+    shuffles; expensive OCR -> media-heavy docs fan out.
 
     ``forced_type`` skips classification and extracts every document as
     that type — the reference's explicit ``document_type`` upload parameter
@@ -377,7 +329,7 @@ def run_pipeline(docs: DataFrame, skip_quality_check: bool = False,
     # splits without a shuffle; no-op on a sanely-split scan
     from .functions.fanout import fan_in
     docs = fan_in(docs)
-    if not salt or heavy_threshold >= NO_SALT_CUTOFF:
+    if heavy_threshold >= NO_SALT_CUTOFF:
         return docs.mapInArrow(
             _direct_batches(skip_quality_check, forced_type), RESULT_SCHEMA)
     return (light_branch(docs, heavy_threshold, skip_quality_check,
@@ -404,33 +356,37 @@ def heavy_branch(docs: DataFrame, heavy_threshold: int,
     """Gate → salted recover/regroup/finalize over docs above the split
     (see light_branch for the sharing note).
 
+    The gate runs BEFORE any recovery fan-out (cheap-first, Q1-Q6, S3):
+    one Arrow UDF over ``spans`` calls document_quality_report, which
+    decodes only the first media span (the reference's single-page
+    reduced-dpi QC render, backend/image_quality_checker.py:242-254).
     Gate-FAILED docs ride the SAME dataflow as metadata-only rows: their
     spans are blanked before the explode (no recovery work, one null-span
     row through the two exchanges) and the finalize stage synthesizes the
     rejected result from the carried quality columns via the shared pure
     function.  The earlier two-branch shape (filter quality_ok, union a
-    native rejected projection) planned a SECOND FileScan of the heavy
-    slice and — because Catalyst extracts Python UDFs per Filter/Project
-    operator — evaluated the gate-probe pandas UDF up to FOUR times per
-    document; with a real OCR probe at 10^12 docs that is a 4× tax on the
-    single most expensive gate step.  Single dataflow: one scan, ONE
-    probe evaluation, same two exchanges (plan-asserted in
-    tests/test_plan_shapes.py).
+    rejected projection) planned a SECOND FileScan of the heavy slice
+    and — because Catalyst extracts Python UDFs per Filter/Project
+    operator — evaluated the gate UDF up to FOUR times per document; with
+    a real OCR probe at 10^12 docs that is a 4× tax on the single most
+    expensive gate step.  Single dataflow: one scan, ONE gate evaluation,
+    same two exchanges (plan-asserted in tests/test_plan_shapes.py).
     """
-    gated = with_quality_gate(docs.filter(F.size("spans") > heavy_threshold),
-                              skip_quality_check)
+    heavy = docs.filter(F.size("spans") > heavy_threshold)
+    gated = heavy.withColumn(
+        "gate", _quality_gate(skip_quality_check)(F.col("spans")))
     pruned = gated.select(
         "doc_id",
         F.size("spans").alias("n_spans_total"),
-        "quality_ok",
-        "quality_issues",
-        "quality_warnings",
-        F.when(F.col("quality_ok"), F.col("spans"))
+        "gate.quality_ok",
+        "gate.quality_issues",
+        "gate.quality_warnings",
+        F.when(F.col("gate.quality_ok"), F.col("spans"))
         .otherwise(F.array().cast(docs.schema["spans"].dataType))
         .alias("spans"),
     )
-    return recover_and_regroup(pruned, salt=True).mapInPandas(
-        _finalize_batches(forced_type), RESULT_SCHEMA)
+    return recover_and_regroup(pruned).mapInArrow(
+        _finalize_pages(forced_type), RESULT_SCHEMA)
 
 
 def read_docs(spark: SparkSession, path: str) -> DataFrame:

@@ -65,7 +65,7 @@ def test_all_statuses_exercised(spark_results):
 
 def test_quality_surface_equality(spark_results, corpus):
     """Q5: issues[]/warnings[] must match the oracle byte-for-byte on both
-    physical plans (native format_string vs Python f-strings)."""
+    physical plans."""
     seen_warn = seen_issue = 0
     for d in corpus:
         golden = process_document(d["doc_id"], d["spans"])
@@ -78,20 +78,47 @@ def test_quality_surface_equality(spark_results, corpus):
 
 
 def test_native_gate_messages_match_oracle(spark):
-    """Force the NATIVE gate (heavy path) on hand-built warn/fail docs of
-    every QC variant and compare messages to the pure report."""
+    """Force the heavy-path gate on hand-built warn/fail docs of every QC
+    variant, plus the inputs a second gate implementation got wrong or
+    could get wrong, and compare messages, status and out_spans to the
+    pure report:
+
+    * blur=12.25 — '%.1f' of the exact binary value rounds half-even to
+      12.2 (a Java format_string rounds half-up to 12.3);
+    * spans out of offset order with two media spans sharing the lowest
+      offset, one with a null media_ref (the (offset, media_ref)
+      nulls-first tie-break picks the null one: nothing to gate on, so the
+      rotated sibling's warning must NOT appear, nor the blurry span's
+      failure at offset 5, which comes first in the array);
+    * a heavy born-digital doc with no media span."""
     from ocr_documents_spark.extractors.media import encode_media_ref
     from ocr_documents_spark.fixtures.gen import QC_FAILS, QC_GOOD, QC_WARNS
     from ocr_documents_spark.pipeline import DOCS_SCHEMA, run_pipeline
 
+    def media(doc_id, off, qc):
+        return ("media", None,
+                encode_media_ref(doc_id, off, [[3, 5, f"line {off}", 0.9]], qc),
+                off)
+
     docs = []
-    for i, qc in enumerate(QC_FAILS + QC_WARNS + [QC_GOOD]):
+    for i, qc in enumerate(QC_FAILS + QC_WARNS + [QC_GOOD,
+                                                   dict(QC_GOOD, blur=12.25)]):
         doc_id = f"qc{i:03d}"
-        spans = [("media", None,
-                  encode_media_ref(doc_id, off,
-                                   [[3, 5, f"line {off}", 0.9]], qc), off)
-                 for off in range(8)]  # > heavy_threshold=4 -> native gate
-        docs.append((doc_id, spans))
+        # > heavy_threshold=4 -> heavy-path gate
+        docs.append((doc_id, [media(doc_id, off, qc) for off in range(8)]))
+    docs.append(("unordered", [
+        media("unordered", 5, QC_FAILS[0]),
+        ("text", "INVOICE\nInvoice No: 77\nTotal: 10.00", None, 3),
+        media("unordered", 0, QC_WARNS[0]),
+        ("media", None, None, 0),
+        media("unordered", 2, QC_GOOD),
+        ("text", "Bill To: Acme", None, 1),
+        media("unordered", 7, QC_GOOD),
+        ("text", "Subtotal: 10.00", None, 6),
+    ]))
+    docs.append(("born_digital", [
+        ("text", f"INVOICE line {off}\nInvoice No: {off}", None, off)
+        for off in range(8)]))
     df = spark.createDataFrame(docs, DOCS_SCHEMA)
     got = {r["doc_id"]: r
            for r in run_pipeline(df, heavy_threshold=4).collect()}
@@ -103,6 +130,11 @@ def test_native_gate_messages_match_oracle(spark):
         assert list(got[doc_id]["quality_issues"]) == golden["quality_issues"], doc_id
         assert list(got[doc_id]["quality_warnings"]) == golden["quality_warnings"], doc_id
         assert got[doc_id]["status"] == golden["status"]
+        assert [(s["kind"], s["text"], s["media_ref"], s["order"])
+                for s in got[doc_id]["out_spans"]] == golden["out_spans"], doc_id
+    assert "Image is blurry (score: 12.2)" in got["qc008"]["quality_issues"][0]
+    assert got["unordered"]["status"] != "rejected_quality"
+    assert list(got["unordered"]["quality_warnings"]) == []
 
 
 def test_fields_long_explode(spark, spark_results):

@@ -114,8 +114,8 @@ def test_pipeline_gate_probe_evaluates_once_single_scan(spark, tmp_path):
     probe at 10^12 docs each extra eval node is a full corpus-scale
     decode pass."""
     from ocr_documents_spark.fixtures.gen import generate_docs
-    from ocr_documents_spark.pipeline import (DOCS_SCHEMA, read_docs,
-                                              run_pipeline)
+    from ocr_documents_spark.pipeline import (DOCS_SCHEMA, _quality_gate,
+                                              read_docs, run_pipeline)
     rows = [(d["doc_id"],
              [(s["kind"], s["text"], s["media_ref"], s["offset"])
               for s in d["spans"]]) for d in generate_docs(30)]
@@ -123,7 +123,8 @@ def test_pipeline_gate_probe_evaluates_once_single_scan(spark, tmp_path):
     spark.createDataFrame(rows, DOCS_SCHEMA).write.parquet(path)
     plan = plan_of(run_pipeline(read_docs(spark, path), heavy_threshold=16))
     eval_nodes = [l for l in plan.splitlines() if "ArrowEvalPython" in l]
-    probe_nodes = [l for l in eval_nodes if "probe_first_media_qc" in l]
+    gate_name = _quality_gate(False).__name__
+    probe_nodes = [l for l in eval_nodes if f"{gate_name}(" in l]
     assert len(probe_nodes) == 1, plan
     assert plan.count("FileScan") == 2, plan
 

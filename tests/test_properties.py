@@ -1,9 +1,7 @@
 """Property-based tests (SURVEY.md §5.2.4): hypothesis generators for MRZ
-round-trips with OCR noise, the Emirates-ID date-triage rule, and a
-randomized pure-vs-native equivalence check for the quality gate.
+round-trips with OCR noise and the Emirates-ID date-triage rule.
 """
 
-import random
 import string
 from datetime import datetime, timedelta
 
@@ -13,7 +11,6 @@ from hypothesis import strategies as st
 from ocr_documents_spark.extractors.doc_types import (_fmt_dmy,
                                                       extract_emirates_id,
                                                       extract_passport)
-from ocr_documents_spark.extractors.quality import quality_passed
 
 CC = ["IND", "PAK", "BGD", "PHL", "EGY", "NPL", "LKA"]
 UP = string.ascii_uppercase
@@ -104,30 +101,3 @@ def test_emirates_two_dates_text_order():
     fields = extract_emirates_id(text)
     assert fields["date_of_birth"]["value"] == "01/05/2030"
     assert fields["expiry_date"]["value"] == "02/03/1990"
-
-
-def test_gate_pure_vs_native(spark):
-    """Randomized + boundary equivalence of the Python gate and the native
-    column gate (operators/gate.py) — one Spark job for all cases."""
-    from pyspark.sql import functions as F
-    from ocr_documents_spark.operators.gate import quality_passed_col
-
-    rng = random.Random(1234)
-    cases = []
-    for _ in range(400):
-        cases.append((float(rng.randint(0, 2000)), float(rng.randint(0, 1500)),
-                      round(rng.uniform(0, 200), 2), round(rng.uniform(0, 300), 2),
-                      round(rng.uniform(0, 120), 2)))
-    for w in (599.0, 600.0, 900.0):          # boundary grid
-        for blur in (49.9, 50.0, 100.0):
-            for b in (39.9, 40.0, 240.0, 240.1):
-                for c in (29.9, 30.0, 45.0):
-                    cases.append((w, 400.0, blur, b, c))
-
-    df = spark.createDataFrame(
-        cases, "w double, h double, blur double, brightness double, contrast double")
-    got = {tuple(r[:5]): r["ok"] for r in df.withColumn(
-        "ok", quality_passed_col(F.col("w"), F.col("h"), F.col("blur"),
-                                 F.col("brightness"), F.col("contrast"))).collect()}
-    for case in cases:
-        assert got[case] == quality_passed(*case), case

@@ -223,6 +223,20 @@ def test_lake_status_summary(spark, small_lake):
     assert s["docs"] > 0
 
 
+def test_lake_status_absent_vs_unreadable(spark, tmp_path):
+    """An absent table reports zero; an unreadable one raises."""
+    from ocr_documents_spark.jobs.status import summarize
+    root = str(tmp_path / "lake")
+    s = summarize(spark, root, 4)
+    assert (s["metrics"], s["rejected_malformed"], s["streamed_docs"]) \
+        == ("none", 0, 0)
+    os.makedirs(os.path.join(root, L.METRICS))
+    with open(os.path.join(root, L.METRICS, "part-00000.parquet"), "wb") as f:
+        f.write(b"not a parquet file")
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+        summarize(spark, root, 4)
+
+
 def test_extract_stream_matches_batch(spark, tmp_path):
     docs_path = str(tmp_path / "docs")
     write_docs_parquet(docs_path, 30, docs_per_file=10)
