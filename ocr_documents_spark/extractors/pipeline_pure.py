@@ -191,8 +191,8 @@ def document_quality_report(spans: Sequence[Dict[str, Any]],
         ref = s["media_ref"]
         # duplicate offsets tie-break by (offset, media_ref) nulls-first,
         # so the choice never depends on span order: ingest rejects
-        # duplicate offsets, but direct run_pipeline / extract_stream
-        # callers can skip ingest
+        # duplicate offsets (every lake job and the stream commit run it),
+        # but a direct run_pipeline caller can skip ingest
         key = (s["offset"], 0 if ref is None else 1, ref or "")
         if first_key is None or key < first_key:
             first_key, first_ref = key, ref

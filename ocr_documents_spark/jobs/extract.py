@@ -7,11 +7,13 @@ spark-submit entry point (north rule: ``spark-submit --py-files``):
         --input /lake/docs --lake /lake --buckets 256 --range 0:64
 
 Each invocation claims a bucket range, subtracts already-checkpointed
-buckets (resume), runs the extraction pipeline over just those documents,
-and commits results + EAV fields + per-bucket lineage metrics + checkpoint
-rows.  A failed run leaves no checkpoint for its buckets, so the next run
-re-drives them; the dynamic-partition-overwrite write makes the re-drive
-idempotent (Iceberg path: MERGE INTO, see jobs/lake.py).
+buckets (resume), runs the shared extraction routine ``lake.extracted``
+over just those documents, and commits rejects + results + EAV fields
+(bucketed dynamic overwrite), then per-bucket lineage metrics, then
+checkpoint rows last.  A failed run leaves no checkpoint for its buckets,
+so the next run re-drives them; the dynamic-partition-overwrite write
+makes the re-drive idempotent (Iceberg path: MERGE INTO, see
+jobs/lake.py).
 
 At production scale the input Iceberg table is written
 ``PARTITIONED BY (bucket(N, doc_id))`` so the claim filter partition-prunes
@@ -33,9 +35,8 @@ from pyspark.sql import SparkSession
 
 # absolute imports: spark-submit executes this file as __main__, outside the
 # package; the package itself arrives via --py-files
-from ocr_documents_spark.pipeline import fields_long, read_docs, run_pipeline
+from ocr_documents_spark.pipeline import read_docs
 from ocr_documents_spark.jobs import lake as L
-from ocr_documents_spark.sources.ingest import split_valid
 
 
 def parse_range(spec: str, n_buckets: int) -> List[int]:
@@ -60,38 +61,21 @@ def run(spark: SparkSession, input_path: str, lake_root: str,
         return report
 
     t0 = time.perf_counter()
-    docs = (read_docs(spark, input_path)
-            .withColumn("bucket", lake.bucket_col())
-            .filter(F_isin_buckets(pending)))
-    valid, rejects = split_valid(docs.select("doc_id", "spans", "bucket"))
-    L.write_bucketed(rejects.select("doc_id", "reject_reason", "bucket"),
-                     lake, L.REJECTS)
-    results = (run_pipeline(valid.select("doc_id", "spans"),
-                            skip_quality_check=skip_quality_check,
-                            forced_type=document_type)
-               .withColumn("bucket", lake.bucket_col()))
-
-    # one pass computes results; reuse it for fields + metrics without
-    # re-running the pipeline (the UDF stages are the expensive part)
-    results = results.persist()
-    try:
-        L.write_bucketed(results, lake, L.RESULTS)
-        L.write_bucketed(fields_long(results).withColumn(
-            "bucket", lake.bucket_col()), lake, L.FIELDS_LONG)
+    docs = read_docs(spark, input_path).filter(
+        lake.bucket_col().isin([int(b) for b in pending]))
+    with L.extracted(docs, lake, skip_quality_check=skip_quality_check,
+                     forced_type=document_type) as tables:
+        # rejects, results, fields_long: bucketed dynamic overwrite
+        for table, df in tables.items():
+            L.write_bucketed(df, lake, table)
+        results = tables[L.RESULTS]
         wall = time.perf_counter() - t0
         L.append(L.bucket_metrics(results, run_id, wall), lake, L.METRICS)
         # checkpoint LAST: a crash before this line replays the buckets
         L.append(L.checkpoint_rows(spark, run_id, pending), lake, L.CHECKPOINTS)
         report["n_docs"] = results.count()
         report["wall_s"] = round(wall, 3)
-    finally:
-        results.unpersist()
     return report
-
-
-def F_isin_buckets(buckets: List[int]):
-    from pyspark.sql import functions as F
-    return F.col("bucket").isin([int(b) for b in buckets])
 
 
 def main(argv: List[str] | None = None) -> int:

@@ -15,6 +15,12 @@ Implements the north-rule job-control contract (SURVEY.md §4.2):
   the results commit, so a crash between the two replays the bucket —
   never loses it.  ``pending = claimed − checkpointed`` is the resume set.
 
+Each rule is written once, here: ``extracted`` (validate → extract →
+bucket → fields_long) for the batch, incremental and streaming jobs,
+``_overwrite_partitions`` for every dynamic overwrite, ``merge_bucketed``
+for re-drives, deletes and stream compaction, and ``read_table`` for
+every read.
+
 On a cluster with an Iceberg catalog the same protocol maps 1:1:
 ``CREATE TABLE … PARTITIONED BY (bucket(N, doc_id))``, ``MERGE INTO`` for
 results, plain appends for metrics/checkpoints.  This sandbox has no
@@ -31,11 +37,17 @@ from __future__ import annotations
 import os
 import time
 import uuid
+from contextlib import contextmanager
 from dataclasses import dataclass
-from typing import List, Sequence
+from typing import Dict, Iterator, List, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (DoubleType, IntegerType, LongType,
+                               StringType, StructField, StructType)
+
+from ..pipeline import RESULT_SCHEMA, fields_long, run_pipeline
+from ..sources.ingest import split_valid
 
 RESULTS = "results"
 FIELDS_LONG = "fields_long"
@@ -46,12 +58,50 @@ REJECTS = "rejects"
 # streaming surface: its OWN tables, partitioned (ingest_batch, bucket), so
 # at-least-once micro-batch replays overwrite their own partitions instead
 # of appending duplicates, and batch/stream writers never mix directory
-# layouts under one table path.  A periodic compaction job folds
-# results_stream into results via the same bucketed dynamic overwrite.
+# layouts under one table path.  compact_stream folds results_stream and
+# fields_long_stream into the main tables through merge_bucketed.
 STREAM_RESULTS = "results_stream"
 STREAM_FIELDS = "fields_long_stream"
 STREAM_REJECTS = "rejects_stream"
 STREAM_METRICS = "metrics_stream"
+STREAM = {REJECTS: STREAM_REJECTS, RESULTS: STREAM_RESULTS,
+          FIELDS_LONG: STREAM_FIELDS, METRICS: STREAM_METRICS}
+
+# Declared table schemas.  Every lake read goes through read_table with
+# these, so an empty table (a partitioned write of zero rows leaves no data
+# file) reads as zero rows instead of failing schema inference.
+_BUCKET = StructField("bucket", IntegerType())
+_FIELD = RESULT_SCHEMA["fields"].dataType.elementType
+SCHEMAS = {
+    REJECTS: StructType([RESULT_SCHEMA["doc_id"],
+                         StructField("reject_reason", StringType()), _BUCKET]),
+    RESULTS: StructType(RESULT_SCHEMA.fields + [_BUCKET]),
+    # pipeline.fields_long's projection: one row per element of ``fields``
+    FIELDS_LONG: StructType(
+        [RESULT_SCHEMA["doc_id"], RESULT_SCHEMA["document_type"]]
+        + [StructField(name, _FIELD[src].dataType) for src, name in (
+            ("name", "field_name"), ("value", "field_value"),
+            ("confidence", "confidence"), ("page", "page_number"))]
+        + [_BUCKET]),
+    # bucket_metrics' aggregate
+    METRICS: StructType(
+        [_BUCKET]
+        + [StructField(c, LongType()) for c in (
+            "n_docs", "n_spans", "n_completed", "n_partial",
+            "n_rejected_quality", "n_rejected_classification", "n_fields")]
+        + [StructField("avg_confidence", DoubleType()),
+           StructField("approx_distinct_doc_ids", LongType()),
+           StructField("run_id", StringType()),
+           StructField("run_wall_s", DoubleType()),
+           StructField("committed_at", DoubleType())]),
+    CHECKPOINTS: StructType([StructField("run_id", StringType()), _BUCKET,
+                             StructField("committed_at", DoubleType())]),
+}
+# a stream table is its main table plus the micro-batch partition column
+SCHEMAS.update({
+    stream: StructType(SCHEMAS[main].fields
+                       + [StructField("ingest_batch", IntegerType())])
+    for main, stream in STREAM.items()})
 
 
 @dataclass
@@ -66,20 +116,27 @@ class Lake:
         return F.pmod(F.xxhash64(doc_id_col), F.lit(self.n_buckets)).cast("int")
 
 
-def completed_buckets(spark: SparkSession, lake: Lake) -> List[int]:
-    """Buckets already checkpointed (any prior run).
+def read_table(spark: SparkSession, lake: Lake,
+               table: str) -> DataFrame | None:
+    """``table`` read with its declared schema, or None when it is absent.
 
-    'No checkpoint table yet' is detected with an explicit existence check,
-    not a broad except: a transient read failure (corrupt footer, perms, FS
-    hiccup) must PROPAGATE — treating it as 'nothing completed' would
-    re-drive every bucket and, worse, the same pattern in compact_stream
-    could drop rows.
+    An explicit existence check, not a broad except: a read failure must
+    PROPAGATE — read as 'no table', it would re-drive every bucket or
+    make a merge overwrite buckets without their other rows.
     """
-    path = lake.path(CHECKPOINTS)
+    path = lake.path(table)
     if not _path_exists(spark, path):
+        return None
+    return spark.read.schema(SCHEMAS[table]).parquet(path)
+
+
+def completed_buckets(spark: SparkSession, lake: Lake) -> List[int]:
+    """Buckets already checkpointed (any prior run)."""
+    done = read_table(spark, lake, CHECKPOINTS)
+    if done is None:
         return []
-    rows = spark.read.parquet(path).select("bucket").distinct().collect()
-    return sorted(r["bucket"] for r in rows)
+    return sorted(r["bucket"]
+                  for r in done.select("bucket").distinct().collect())
 
 
 def pending_buckets(spark: SparkSession, lake: Lake,
@@ -88,24 +145,71 @@ def pending_buckets(spark: SparkSession, lake: Lake,
     return [b for b in claimed if b not in done]
 
 
-def write_bucketed(df: DataFrame, lake: Lake, table: str) -> None:
-    """Replace exactly the bucket partitions present in ``df``.
+@contextmanager
+def extracted(docs: DataFrame, lake: Lake, skip_quality_check: bool = False,
+              forced_type: str | None = None) -> Iterator[Dict[str, DataFrame]]:
+    """Validate and extract ``docs(doc_id, spans)`` once; yield the frames
+    to commit, each with ``bucket``: ``{REJECTS, RESULTS, FIELDS_LONG}``.
 
-    Dynamic partition overwrite = idempotent re-drive: rerunning a failed
-    bucket rewrites its partition in place, never duplicates.
+    ``results`` stays persisted until exit, so fields_long and metrics
+    reuse it instead of re-running the UDF stages.  No Spark action runs
+    here: the caller's writes run the job.
     """
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    valid, rejects = split_valid(docs.select("doc_id", "spans"))
+    results = (run_pipeline(valid, skip_quality_check=skip_quality_check,
+                            forced_type=forced_type)
+               .withColumn("bucket", lake.bucket_col()).persist())
     try:
-        (df.write.partitionBy("bucket").mode("overwrite")
-           .parquet(lake.path(table)))
+        yield {REJECTS: rejects.select("doc_id", "reject_reason")
+               .withColumn("bucket", lake.bucket_col()),
+               RESULTS: results,
+               FIELDS_LONG: fields_long(results)
+               .withColumn("bucket", lake.bucket_col())}
     finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        results.unpersist()
+
+
+def _overwrite_partitions(df: DataFrame, path: str,
+                          partition_cols: Sequence[str]) -> None:
+    """Replace exactly the ``partition_cols`` partitions present in
+    ``df`` (dynamic overwrite), so a re-driven write never duplicates."""
+    (df.write.option("partitionOverwriteMode", "dynamic")
+       .partitionBy(*partition_cols).mode("overwrite").parquet(path))
+
+
+def write_bucketed(df: DataFrame, lake: Lake, table: str) -> None:
+    """Replace exactly the bucket partitions present in ``df``."""
+    _overwrite_partitions(df, lake.path(table), ["bucket"])
 
 
 def append(df: DataFrame, lake: Lake, table: str) -> None:
     df.write.mode("append").parquet(lake.path(table))
+
+
+def merge_bucketed(lake: Lake, table: str, fresh: DataFrame,
+                   stale_ids: DataFrame, touched: Sequence[int]) -> None:
+    """``MERGE INTO table USING fresh``: in the ``touched`` buckets (which
+    hold every ``fresh`` row), the rows of ``stale_ids(doc_id)`` give way
+    to ``fresh`` and the others stay.  A touched bucket the merge empties
+    is dropped: dynamic overwrite cannot delete a partition it writes no
+    rows to.  An absent table is created from ``fresh``."""
+    spark = fresh.sparkSession
+    main = read_table(spark, lake, table)
+    merged = fresh if main is None else (
+        main.filter(F.col("bucket").isin(list(touched)))
+        .join(stale_ids, "doc_id", "left_anti")
+        .unionByName(fresh))
+    merged = merged.persist()
+    try:
+        present = {r["bucket"] for r in
+                   merged.select("bucket").distinct().collect()}
+        # every row has a bucket, so no bucket means no rows to write
+        if present:
+            write_bucketed(merged, lake, table)
+        for b in set(touched) - present:
+            _delete_partition_dir(spark, f"{lake.path(table)}/bucket={b}")
+    finally:
+        merged.unpersist()
 
 
 def bucket_metrics(results_with_bucket: DataFrame, run_id: str,
@@ -136,7 +240,7 @@ def checkpoint_rows(spark: SparkSession, run_id: str,
                     buckets: Sequence[int]) -> DataFrame:
     return spark.createDataFrame(
         [(run_id, int(b), time.time()) for b in buckets],
-        "run_id string, bucket int, committed_at double")
+        SCHEMAS[CHECKPOINTS])
 
 
 def new_run_id() -> str:
@@ -167,9 +271,9 @@ def apply_field_corrections(spark: SparkSession, lake: Lake,
             .withColumn("bucket", lake.bucket_col())
             .withColumn("__matched", F.lit(True)))
     buckets = [r["bucket"] for r in corr.select("bucket").distinct().collect()]
-    if not buckets:
+    fl = read_table(spark, lake, FIELDS_LONG)
+    if not buckets or fl is None:
         return 0
-    fl = spark.read.parquet(lake.path(FIELDS_LONG))
     updated = (fl.filter(F.col("bucket").isin(buckets))
                .join(F.broadcast(corr.select("doc_id", "field_name",
                                              "__new", "__matched")),
@@ -211,71 +315,49 @@ def _path_exists(spark: SparkSession, path: str) -> bool:
 
 def delete_document(spark: SparkSession, lake: Lake, doc_id: str) -> None:
     """S8 delete + cascade (backend/main_v1.py:328-346): row-level delete
-    via rewrite of the single bucket holding the doc (Iceberg path:
-    ``DELETE FROM lake.results WHERE doc_id = …``).
+    via a merge of nothing over the single bucket holding the doc (Iceberg
+    path: ``DELETE FROM lake.results WHERE doc_id = …``).
 
     The bucket is COMPUTED from the doc_id (pmod(xxhash64(doc_id), n)) so
     the scan partition-prunes to that one directory instead of reading the
     full table to discover where the doc lives.
     """
-    b = doc_bucket(spark, lake, doc_id)
+    stale = spark.createDataFrame([(doc_id,)], "doc_id string")
+    touched = [doc_bucket(spark, lake, doc_id)]
     for table in (RESULTS, FIELDS_LONG):
-        df = spark.read.parquet(lake.path(table)).filter(F.col("bucket") == b)
-        kept = df.filter(F.col("doc_id") != doc_id)
-        if kept.isEmpty():
-            # dynamic overwrite only replaces partitions PRESENT in the new
-            # data; an emptied bucket must be dropped explicitly
-            _delete_partition_dir(spark, f"{lake.path(table)}/bucket={b}")
-        else:
-            write_bucketed(kept, lake, table)
+        merge_bucketed(lake, table, spark.createDataFrame([], SCHEMAS[table]),
+                       stale, touched)
 
 
 def compact_stream(spark: SparkSession, lake: Lake) -> dict:
     """Fold the streaming surface into the main lake tables.
 
-    For every doc in results_stream, its LATEST micro-batch row wins; main
-    rows for those docs are replaced, everything else is untouched — the
+    For every doc in results_stream, its LATEST micro-batch rows win: the
     parquet stand-in for ``MERGE INTO lake.results USING results_stream ON
-    doc_id`` followed by truncating the staging table.  Only buckets that
-    streamed data are rewritten (dynamic overwrite).  Idempotent: a crash
-    after the main write but before the stream clear re-merges the same
-    rows (the anti-join prevents duplicates).
+    doc_id`` (and the same for fields_long), followed by truncating the
+    staging tables.  Only buckets that streamed data are rewritten.
+    Idempotent: a crash after a main write but before the stream clear
+    re-merges the same rows.
     """
-    # explicit existence check, NOT a broad except: a transient read error
-    # here must propagate — if it were swallowed as 'nothing staged' the
-    # caller would believe compaction succeeded with zero docs
-    if not _path_exists(spark, lake.path(STREAM_RESULTS)):
+    stream = read_table(spark, lake, STREAM_RESULTS)
+    if stream is None:
         return {"docs": 0, "buckets": 0}
-    stream = spark.read.parquet(lake.path(STREAM_RESULTS))
-    latest_batch = (stream.groupBy("doc_id")
-                    .agg(F.max("ingest_batch").alias("ingest_batch")))
-
-    n_docs = latest_batch.count()
+    latest = (stream.groupBy("doc_id")
+              .agg(F.max("ingest_batch").alias("ingest_batch")))
+    n_docs = latest.count()
     buckets = [r["bucket"]
                for r in stream.select("bucket").distinct().collect()]
 
-    for table, stream_table in ((RESULTS, STREAM_RESULTS),
-                                (FIELDS_LONG, STREAM_FIELDS)):
-        sdf = (spark.read.parquet(lake.path(stream_table))
-               .join(latest_batch, ["doc_id", "ingest_batch"])
-               .drop("ingest_batch"))
-        # pure-streaming lake (no main table yet) is the ONLY case where the
-        # stream becomes the whole partition content; a failed read of an
-        # EXISTING main table must abort — merging without it would
-        # dynamically overwrite the touched buckets with only streamed docs,
-        # silently dropping every other main-table row in them
-        if _path_exists(spark, lake.path(table)):
-            main = (spark.read.parquet(lake.path(table))
-                    .filter(F.col("bucket").isin(buckets)))
-            merged = (main.join(latest_batch.select("doc_id"),
-                                "doc_id", "left_anti")
-                      .unionByName(sdf))
-        else:
-            merged = sdf
-        write_bucketed(merged, lake, table)
+    for table in (RESULTS, FIELDS_LONG):
+        staged = read_table(spark, lake, STREAM[table])
+        if staged is None:  # a crash between the committer's writes
+            staged = spark.createDataFrame([], SCHEMAS[STREAM[table]])
+        fresh = (staged.join(latest, ["doc_id", "ingest_batch"])
+                 .drop("ingest_batch"))
+        merge_bucketed(lake, table, fresh, latest.select("doc_id"), buckets)
 
-    for stream_table in (STREAM_RESULTS, STREAM_FIELDS):
-        _delete_partition_dir(spark, lake.path(stream_table))
+    for table in (RESULTS, FIELDS_LONG):
+        _delete_partition_dir(spark, lake.path(STREAM[table]))
     return {"docs": n_docs, "buckets": len(buckets)}
 
 

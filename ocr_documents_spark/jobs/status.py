@@ -3,7 +3,8 @@
 The reference's clients poll GET /api/documents/{id}/status and list
 endpoints (backend/main_v1.py:254-325); against the lake the same answers
 come from the checkpoints + metrics + rejects tables without touching
-results data.
+results data.  Every table is read through ``lake.read_table``: an absent
+table reports none/zero, an unreadable one raises.
 
 Usage: python -m ocr_documents_spark.jobs.status --lake /lake --buckets 256
 """
@@ -19,29 +20,12 @@ from pyspark.sql import functions as F
 from ocr_documents_spark.jobs import lake as L
 
 
-def _read(spark: SparkSession, lake: L.Lake, table: str, schema: str):
-    """``table`` read as ``schema``, or None when it is absent.
-
-    The existence probe is L._path_exists, the policy
-    lake.completed_buckets uses: an unreadable table raises.  The explicit
-    schema makes an empty table (a partitioned write of zero rows leaves
-    no data file) read as zero rows instead of failing schema inference.
-    """
-    path = lake.path(table)
-    if not L._path_exists(spark, path):
-        return None
-    return spark.read.schema(schema).parquet(path)
-
-
 def summarize(spark: SparkSession, lake_root: str, n_buckets: int) -> dict:
     lake = L.Lake(lake_root, n_buckets)
     done = L.completed_buckets(spark, lake)
     out = {"buckets_total": n_buckets, "buckets_completed": len(done),
            "buckets_pending": n_buckets - len(done)}
-    m = _read(spark, lake, L.METRICS,
-              "bucket int, committed_at double, n_docs long, "
-              "n_completed long, n_partial long, n_rejected_quality long, "
-              "n_rejected_classification long, n_fields long")
+    m = L.read_table(spark, lake, L.METRICS)
     if m is None:
         out["metrics"] = "none"
     else:
@@ -58,11 +42,11 @@ def summarize(spark: SparkSession, lake_root: str, n_buckets: int) -> dict:
             F.sum("n_fields").alias("fields"),
         ).first()
         out.update({k: int(agg[k] or 0) for k in agg.asDict()})
-    rejects = _read(spark, lake, L.REJECTS, "doc_id string")
+    rejects = L.read_table(spark, lake, L.REJECTS)
     out["rejected_malformed"] = 0 if rejects is None else rejects.count()
     # streaming surface (idempotent per-batch partitions: no replay
     # double-count) — previously the CLI was blind to streamed docs
-    sm = _read(spark, lake, L.STREAM_METRICS, "n_docs long")
+    sm = L.read_table(spark, lake, L.STREAM_METRICS)
     out["streamed_docs"] = (
         0 if sm is None else int(sm.agg(F.sum("n_docs")).first()[0] or 0))
     return out

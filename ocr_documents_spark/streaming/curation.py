@@ -89,139 +89,133 @@ def curation_committer(lake, bench: DataFrame | None = None,
 
     def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
         sess = batch_df.sparkSession
-        prev = sess.conf.get("spark.sql.sources.partitionOverwriteMode",
-                             "static")
-        sess.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            bid = F.lit(int(batch_id))
-            funnel: dict[str, int | None] = {c: None for c in METRICS_COLUMNS}
-            funnel["input"] = batch_df.count()
+        bid = F.lit(int(batch_id))
+        funnel: dict[str, int | None] = {c: None for c in METRICS_COLUMNS}
+        funnel["input"] = batch_df.count()
 
-            cur = (scrub_corpus(batch_df, "text", "__clean")
-                   .drop("text").withColumnRenamed("__clean", "text"))
-            keep = (quality_filter_report(cur)
-                    .filter(F.col("keep")).select("doc_id"))
-            cur = cur.join(keep, "doc_id", "left_semi").localCheckpoint()
-            funnel["after_quality"] = cur.count()
+        cur = (scrub_corpus(batch_df, "text", "__clean")
+               .drop("text").withColumnRenamed("__clean", "text"))
+        keep = (quality_filter_report(cur)
+                .filter(F.col("keep")).select("doc_id"))
+        cur = cur.join(keep, "doc_id", "left_semi").localCheckpoint()
+        funnel["after_quality"] = cur.count()
 
-            # exact dups within the batch: deterministic min-doc_id
-            # winner, keyed by the SHARED exact-content equivalence
-            # (D.exact_fingerprint — whitespace-normalized, the same key
-            # the batch dedup's BUCKET_CAP star guard assumes has
-            # already collapsed identical content; raw md5(text) would
-            # leave whitespace variants as an uncollapsed identical
-            # cluster in every band bucket)
-            fp = cur.withColumn("__fp", D.exact_fingerprint("text"))
-            canon = fp.groupBy("__fp").agg(F.min("doc_id").alias("doc_id"))
-            cur = (fp.join(canon, ["__fp", "doc_id"], "left_semi")
-                   .drop("__fp").localCheckpoint())
-            n_after_exact = cur.count()
-            # signatures once per batch: bands feed candidate generation
-            # AND the index write; the packed array feeds the estimate
-            # gate and the sig-index write
-            sig = D.minhash_signatures(cur, n_hashes, bands) \
-                .localCheckpoint()
-            sig_arr = sig.select(
-                "doc_id", D.signature_col(n_hashes).alias("sig"))
+        # exact dups within the batch: deterministic min-doc_id
+        # winner, keyed by the SHARED exact-content equivalence
+        # (D.exact_fingerprint — whitespace-normalized, the same key
+        # the batch dedup's BUCKET_CAP star guard assumes has
+        # already collapsed identical content; raw md5(text) would
+        # leave whitespace variants as an uncollapsed identical
+        # cluster in every band bucket)
+        fp = cur.withColumn("__fp", D.exact_fingerprint("text"))
+        canon = fp.groupBy("__fp").agg(F.min("doc_id").alias("doc_id"))
+        cur = (fp.join(canon, ["__fp", "doc_id"], "left_semi")
+               .drop("__fp").localCheckpoint())
+        n_after_exact = cur.count()
+        # signatures once per batch: bands feed candidate generation
+        # AND the index write; the packed array feeds the estimate
+        # gate and the sig-index write
+        sig = D.minhash_signatures(cur, n_hashes, bands) \
+            .localCheckpoint()
+        sig_arr = sig.select(
+            "doc_id", D.signature_col(n_hashes).alias("sig"))
 
-            # near-dups within the batch: band collision -> estimated-
-            # Jaccard gate -> min-id canonical per confirmed pair
-            pairs = D.candidate_pairs(sig, bands, bucket_cap)
-            gated = (pairs
-                     .join(sig_arr.select(
-                         F.col("doc_id").alias("a_doc_id"),
-                         F.col("sig").alias("a_sig")), "a_doc_id")
-                     .join(sig_arr.select(
-                         F.col("doc_id").alias("b_doc_id"),
-                         F.col("sig").alias("b_sig")), "b_doc_id")
-                     .withColumn("est",
-                                 D.estimated_jaccard(F.col("a_sig"),
-                                                     F.col("b_sig")))
-                     .localCheckpoint())
-            funnel["batch_band_hits"] = gated.count()
-            losers = (gated.filter(F.col("est") >= est_threshold)
-                      .select(F.greatest("a_doc_id", "b_doc_id")
-                              .alias("doc_id")).distinct())
-            cur = cur.join(losers, "doc_id", "left_anti").localCheckpoint()
-            n = cur.count()
-            funnel["after_batch_dedup"] = n
-            funnel["batch_est_drops"] = n_after_exact - n
+        # near-dups within the batch: band collision -> estimated-
+        # Jaccard gate -> min-id canonical per confirmed pair
+        pairs = D.candidate_pairs(sig, bands, bucket_cap)
+        gated = (pairs
+                 .join(sig_arr.select(
+                     F.col("doc_id").alias("a_doc_id"),
+                     F.col("sig").alias("a_sig")), "a_doc_id")
+                 .join(sig_arr.select(
+                     F.col("doc_id").alias("b_doc_id"),
+                     F.col("sig").alias("b_sig")), "b_doc_id")
+                 .withColumn("est",
+                             D.estimated_jaccard(F.col("a_sig"),
+                                                 F.col("b_sig")))
+                 .localCheckpoint())
+        funnel["batch_band_hits"] = gated.count()
+        losers = (gated.filter(F.col("est") >= est_threshold)
+                  .select(F.greatest("a_doc_id", "b_doc_id")
+                          .alias("doc_id")).distinct())
+        cur = cur.join(losers, "doc_id", "left_anti").localCheckpoint()
+        n = cur.count()
+        funnel["after_batch_dedup"] = n
+        funnel["batch_est_drops"] = n_after_exact - n
 
-            # cross-batch: probe the lake's accumulated band index, then
-            # verify each collision against the PERSISTED signatures.
-            # BOTH index tables must exist: a crash between the two
-            # sequential index writes leaves a band index without its
-            # sibling sig index, and the replayed batch must degrade to
-            # "no verifiable state" (and then rewrite both), not crash
-            if (L._path_exists(sess, lake.path(BAND_INDEX))
-                    and L._path_exists(sess, lake.path(SIG_INDEX))):
-                # a replayed batch must not collide with its own
-                # previously-written state
-                not_self = F.col("ingest_batch") != int(batch_id)
-                index = (sess.read.parquet(lake.path(BAND_INDEX))
-                         .filter(not_self))
-                stored_sigs = (sess.read.parquet(lake.path(SIG_INDEX))
-                               .filter(not_self))
-                # probe with the batch-dedup SURVIVORS only: an already-
-                # dropped doc can never be dropped again, so its
-                # collisions would only inflate index_band_hits
-                sig_cur = sig.join(cur.select("doc_id"), "doc_id",
-                                   "left_semi")
-                hits = (D.incremental_candidates(
-                            None, index, n_hashes, bands,
-                            signatures=sig_cur)
-                        .withColumnRenamed("new_doc_id", "doc_id"))
-                verified = (hits
-                            .join(sig_arr, "doc_id")
-                            .join(stored_sigs.select(
-                                F.col("doc_id").alias("index_doc_id"),
-                                F.col("sig").alias("i_sig")),
-                                "index_doc_id")
-                            .withColumn("est",
-                                        D.estimated_jaccard(
-                                            F.col("sig"), F.col("i_sig")))
-                            .localCheckpoint())
-                funnel["index_band_hits"] = verified.count()
-                drops = (verified.filter(F.col("est") >= est_threshold)
-                         .select("doc_id").distinct())
-                cur = cur.join(drops, "doc_id", "left_anti")
-            else:
-                funnel["index_band_hits"] = 0
-            cur = cur.localCheckpoint()
-            n = cur.count()
-            funnel["after_index_dedup"] = n
-            funnel["index_est_drops"] = funnel["after_batch_dedup"] - n
+        # cross-batch: probe the lake's accumulated band index, then
+        # verify each collision against the PERSISTED signatures.
+        # BOTH index tables must exist: a crash between the two
+        # sequential index writes leaves a band index without its
+        # sibling sig index, and the replayed batch must degrade to
+        # "no verifiable state" (and then rewrite both), not crash
+        if (L._path_exists(sess, lake.path(BAND_INDEX))
+                and L._path_exists(sess, lake.path(SIG_INDEX))):
+            # a replayed batch must not collide with its own
+            # previously-written state
+            not_self = F.col("ingest_batch") != int(batch_id)
+            index = (sess.read.parquet(lake.path(BAND_INDEX))
+                     .filter(not_self))
+            stored_sigs = (sess.read.parquet(lake.path(SIG_INDEX))
+                           .filter(not_self))
+            # probe with the batch-dedup SURVIVORS only: an already-
+            # dropped doc can never be dropped again, so its
+            # collisions would only inflate index_band_hits
+            sig_cur = sig.join(cur.select("doc_id"), "doc_id",
+                               "left_semi")
+            hits = (D.incremental_candidates(
+                        None, index, n_hashes, bands,
+                        signatures=sig_cur)
+                    .withColumnRenamed("new_doc_id", "doc_id"))
+            verified = (hits
+                        .join(sig_arr, "doc_id")
+                        .join(stored_sigs.select(
+                            F.col("doc_id").alias("index_doc_id"),
+                            F.col("sig").alias("i_sig")),
+                            "index_doc_id")
+                        .withColumn("est",
+                                    D.estimated_jaccard(
+                                        F.col("sig"), F.col("i_sig")))
+                        .localCheckpoint())
+            funnel["index_band_hits"] = verified.count()
+            drops = (verified.filter(F.col("est") >= est_threshold)
+                     .select("doc_id").distinct())
+            cur = cur.join(drops, "doc_id", "left_anti")
+        else:
+            funnel["index_band_hits"] = 0
+        cur = cur.localCheckpoint()
+        n = cur.count()
+        funnel["after_index_dedup"] = n
+        funnel["index_est_drops"] = funnel["after_batch_dedup"] - n
 
-            if bench is not None:
-                cur = decontaminate(cur, bench).localCheckpoint()
-                funnel["after_decontaminate"] = cur.count()
+        if bench is not None:
+            cur = decontaminate(cur, bench).localCheckpoint()
+            funnel["after_decontaminate"] = cur.count()
 
-            out = (cur.withColumn("bucket", lake.bucket_col())
-                   .withColumn("ingest_batch", bid))
-            (out.write.partitionBy("ingest_batch", "bucket")
-             .mode("overwrite").parquet(lake.path(CURATED)))
-            # index state for future batches: survivors only, bands and
-            # signatures written together (the sig is what lets the next
-            # batch VERIFY a collision against this one)
-            surv_sig = (sig.join(cur.select("doc_id"), "doc_id",
-                                 "left_semi").localCheckpoint())
-            new_bands = (D.band_index(surv_sig, bands)
-                         .withColumn("ingest_batch", bid))
-            (new_bands.write.partitionBy("ingest_batch")
-             .mode("overwrite").parquet(lake.path(BAND_INDEX)))
-            (surv_sig.select("doc_id",
-                             D.signature_col(n_hashes).alias("sig"))
-             .withColumn("ingest_batch", bid)
-             .write.partitionBy("ingest_batch")
-             .mode("overwrite").parquet(lake.path(SIG_INDEX)))
-            metrics = sess.createDataFrame(
-                [tuple([int(batch_id)]
-                       + [None if funnel[c] is None else int(funnel[c])
-                          for c in METRICS_COLUMNS])], METRICS_SCHEMA)
-            (metrics.write.partitionBy("ingest_batch")
-             .mode("overwrite").parquet(lake.path(CURATION_METRICS)))
-        finally:
-            sess.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        out = (cur.withColumn("bucket", lake.bucket_col())
+               .withColumn("ingest_batch", bid))
+        L._overwrite_partitions(out, lake.path(CURATED),
+                                ["ingest_batch", "bucket"])
+        # index state for future batches: survivors only, bands and
+        # signatures written together (the sig is what lets the next
+        # batch VERIFY a collision against this one)
+        surv_sig = (sig.join(cur.select("doc_id"), "doc_id",
+                             "left_semi").localCheckpoint())
+        new_bands = (D.band_index(surv_sig, bands)
+                     .withColumn("ingest_batch", bid))
+        L._overwrite_partitions(new_bands, lake.path(BAND_INDEX),
+                                ["ingest_batch"])
+        L._overwrite_partitions(
+            surv_sig.select("doc_id",
+                            D.signature_col(n_hashes).alias("sig"))
+            .withColumn("ingest_batch", bid),
+            lake.path(SIG_INDEX), ["ingest_batch"])
+        metrics = sess.createDataFrame(
+            [tuple([int(batch_id)]
+                   + [None if funnel[c] is None else int(funnel[c])
+                      for c in METRICS_COLUMNS])], METRICS_SCHEMA)
+        L._overwrite_partitions(metrics, lake.path(CURATION_METRICS),
+                                ["ingest_batch"])
 
     return commit_batch
 

@@ -7,8 +7,9 @@ terminal.  These operators give the engine that continuous-ingest form:
 
 * ``extract_stream``   — run the extraction pipeline over a streaming docs
   source (files arriving in a lake directory), micro-batch at a time via
-  ``foreachBatch`` so the exact batch pipeline (including its skew split
-  and ingest validation) is reused unchanged; commits are idempotent
+  ``foreachBatch``; each micro-batch runs the batch job's own extraction
+  routine (``jobs/lake.extracted``: ingest validation, the skew-split
+  pipeline, fields_long) unchanged, and commits are idempotent
   (ingest_batch, bucket)-partitioned dynamic overwrites into the lake's
   dedicated streaming tables.
 * ``dedup_ingest``     — ``dropDuplicatesWithinWatermark`` over doc_id for
@@ -20,6 +21,7 @@ terminal.  These operators give the engine that continuous-ingest form:
 
 from __future__ import annotations
 
+import time
 from typing import Iterable
 
 import pandas as pd
@@ -203,42 +205,24 @@ def extract_stream(spark, docs_path: str, lake_root: str, n_buckets: int,
 
 
 def stream_committer(lake):
-    """The per-micro-batch lake commit (exposed for direct replay tests)."""
-    from ..pipeline import fields_long, run_pipeline
+    """The per-micro-batch lake commit (exposed for direct replay tests):
+    the tables of ``lake.extracted`` plus the batch's lineage metrics,
+    each written over its own (ingest_batch, bucket) partitions of the
+    streaming table ``lake.STREAM`` maps it to."""
     from ..jobs import lake as L
-    from ..sources.ingest import split_valid
-
-    def _write(df: DataFrame, table: str) -> None:
-        (df.write.partitionBy("ingest_batch", "bucket")
-           .mode("overwrite").parquet(lake.path(table)))
 
     def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import time as _time
-        t0 = _time.perf_counter()
-        sess = batch_df.sparkSession
-        prev = sess.conf.get("spark.sql.sources.partitionOverwriteMode",
-                             "static")
-        sess.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            bid = F.lit(int(batch_id))
-            valid, rejects = split_valid(batch_df.select("doc_id", "spans"))
-            _write(rejects.select("doc_id", "reject_reason")
-                   .withColumn("bucket", lake.bucket_col())
-                   .withColumn("ingest_batch", bid), L.STREAM_REJECTS)
-            results = (run_pipeline(valid.select("doc_id", "spans"))
-                       .withColumn("bucket", lake.bucket_col())
-                       .withColumn("ingest_batch", bid)).persist()
-            try:
-                _write(results, L.STREAM_RESULTS)
-                _write(fields_long(results)
-                       .withColumn("bucket", lake.bucket_col())
-                       .withColumn("ingest_batch", bid), L.STREAM_FIELDS)
-                _write(L.bucket_metrics(results, f"stream-{batch_id}",
-                                        _time.perf_counter() - t0)
-                       .withColumn("ingest_batch", bid), L.STREAM_METRICS)
-            finally:
-                results.unpersist()
-        finally:
-            sess.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        t0 = time.perf_counter()
+
+        def write(df: DataFrame, table: str) -> None:
+            L._overwrite_partitions(
+                df.withColumn("ingest_batch", F.lit(int(batch_id))),
+                lake.path(L.STREAM[table]), ["ingest_batch", "bucket"])
+
+        with L.extracted(batch_df, lake) as tables:
+            for table, df in tables.items():
+                write(df, table)
+            write(L.bucket_metrics(tables[L.RESULTS], f"stream-{batch_id}",
+                                   time.perf_counter() - t0), L.METRICS)
 
     return commit_batch

@@ -9,9 +9,10 @@ import pytest
 import pyspark.sql.functions as F
 
 from ocr_documents_spark.fixtures.gen import generate_docs
+from ocr_documents_spark.jobs import extract as job
 from ocr_documents_spark.jobs import incremental as I
 from ocr_documents_spark.jobs import lake as L
-from ocr_documents_spark.pipeline import DOCS_SCHEMA, fields_long, run_pipeline
+from ocr_documents_spark.pipeline import DOCS_SCHEMA
 
 N_BUCKETS = 4
 
@@ -23,14 +24,13 @@ def _df(spark, docs):
     return spark.createDataFrame(rows, DOCS_SCHEMA)
 
 
-def _full_extract(spark, docs_df, root):
-    lake = L.Lake(root, N_BUCKETS)
-    results = (run_pipeline(docs_df.select("doc_id", "spans"))
-               .withColumn("bucket", lake.bucket_col()))
-    L.write_bucketed(results, lake, L.RESULTS)
-    L.write_bucketed(fields_long(results).withColumn(
-        "bucket", lake.bucket_col()), lake, L.FIELDS_LONG)
-    return lake
+def _extracted_lake(spark, docs_df, root):
+    """The production order: the snapshot lands as parquet, then the batch
+    job extracts every bucket of it into a fresh lake."""
+    docs_df.write.parquet(f"{root}-docs")
+    job.run(spark, f"{root}-docs", root, N_BUCKETS,
+            claimed=list(range(N_BUCKETS)))
+    return L.Lake(root, N_BUCKETS)
 
 
 def _table_rows(spark, lake, table):
@@ -79,12 +79,12 @@ def snapshots(spark):
 
 def test_incremental_equals_full_reextraction(spark, snapshots, tmp_path):
     old, new, removed_ids, changed_id, victim_bucket = snapshots
-    inc_lake = _full_extract(spark, old, str(tmp_path / "inc"))
+    inc_lake = _extracted_lake(spark, old, str(tmp_path / "inc"))
     rep = I.incremental_extract(spark, inc_lake, old, new)
     assert rep["removed"] == len(removed_ids)
     assert rep["changed"] == 1 and rep["added"] == 3
     assert rep["n_processed"] == 4          # only the diff ran the pipeline
-    full_lake = _full_extract(spark, new, str(tmp_path / "full"))
+    full_lake = _extracted_lake(spark, new, str(tmp_path / "full"))
     for table in (L.RESULTS, L.FIELDS_LONG):
         assert _table_rows(spark, inc_lake, table) \
             == _table_rows(spark, full_lake, table)
@@ -95,7 +95,7 @@ def test_incremental_equals_full_reextraction(spark, snapshots, tmp_path):
 
 def test_reapply_is_idempotent(spark, snapshots, tmp_path):
     old, new, *_ = snapshots
-    lake = _full_extract(spark, old, str(tmp_path / "re"))
+    lake = _extracted_lake(spark, old, str(tmp_path / "re"))
     I.incremental_extract(spark, lake, old, new)
     first = {t: _table_rows(spark, lake, t)
              for t in (L.RESULTS, L.FIELDS_LONG)}

@@ -221,6 +221,14 @@ def test_lake_status_summary(spark, small_lake):
     assert s["docs"] == (s["completed"] + s["partial"]
                          + s["rejected_quality"] + s["rejected_classification"])
     assert s["docs"] > 0
+    # the declared schemas every lake read uses are the written ones
+    for t in (L.RESULTS, L.FIELDS_LONG, L.METRICS, L.CHECKPOINTS):
+        assert _types(spark.read.parquet(small_lake.path(t)).schema) \
+            == _types(L.SCHEMAS[t])
+
+
+def _types(schema):
+    return {f.name: f.dataType for f in schema.fields}
 
 
 def test_lake_status_absent_vs_unreadable(spark, tmp_path):
@@ -288,7 +296,10 @@ def test_stream_commit_replay_is_idempotent(spark, tmp_path):
 def test_compact_stream_merges_into_main_lake(spark, tmp_path):
     """Compaction folds results_stream into results: latest stream row
     wins per doc, untouched docs survive, staging tables are cleared, and
-    a second compaction is a no-op."""
+    a second compaction is a no-op.  A doc re-streamed without fields
+    loses its old field rows even when that empties its bucket, and a
+    stream with no field rows at all compacts."""
+    from ocr_documents_spark.extractors.pipeline_pure import process_document
     from ocr_documents_spark.pipeline import DOCS_SCHEMA
     from ocr_documents_spark.streaming.sessionize import stream_committer
 
@@ -304,6 +315,9 @@ def test_compact_stream_merges_into_main_lake(spark, tmp_path):
         [(d["doc_id"], [(s["kind"], s["text"], s["media_ref"], s["offset"])
                         for s in d["spans"]]) for d in docs], DOCS_SCHEMA)
     stream_committer(lake)(df, 0)
+    for t in (L.STREAM_RESULTS, L.STREAM_FIELDS, L.STREAM_METRICS):
+        assert _types(spark.read.parquet(lake.path(t)).schema) \
+            == _types(L.SCHEMAS[t])
 
     report = L.compact_stream(spark, lake)
     assert report == {"docs": 10, "buckets": report["buckets"]}
@@ -313,6 +327,40 @@ def test_compact_stream_merges_into_main_lake(spark, tmp_path):
     assert not os.path.exists(lake.path(L.STREAM_RESULTS))
     # idempotent / no-op when nothing is staged
     assert L.compact_stream(spark, lake) == {"docs": 0, "buckets": 0}
+
+    # a one-doc batch lake: d0 is the only field-bearing doc in its bucket
+    d0 = generate_docs(1)[0]
+    write_docs_parquet(str(tmp_path / "c1"), 1, docs_per_file=1)
+    lake1 = L.Lake(str(tmp_path / "lake1"), 4)
+    job.run(spark, str(tmp_path / "c1"), lake1.root, 4, claimed=[0, 1, 2, 3])
+    b0 = L.doc_bucket(spark, lake1, d0["doc_id"])
+    other = next(d for d in generate_docs(40)[1:]
+                 if L.doc_bucket(spark, lake1, d["doc_id"]) != b0
+                 and process_document(d["doc_id"], d["spans"])["fields"])
+    field_less = (d0["doc_id"], [("text", "hello world", None, 0)])
+
+    def d0_fields():
+        return L.read_table(spark, lake1, L.FIELDS_LONG).filter(
+            f"doc_id = '{d0['doc_id']}'").count()
+
+    assert d0_fields() > 0
+    # re-streamed without fields, beside a field-bearing doc elsewhere
+    stream_committer(lake1)(spark.createDataFrame(
+        [field_less, (other["doc_id"], [(s["kind"], s["text"],
+                                          s["media_ref"], s["offset"])
+                                         for s in other["spans"]])],
+        DOCS_SCHEMA), 0)
+    assert L.compact_stream(spark, lake1)["docs"] == 2
+    assert d0_fields() == 0
+    r0 = L.read_table(spark, lake1, L.RESULTS).filter(
+        f"doc_id = '{d0['doc_id']}'").collect()
+    assert [(r["status"], len(r["fields"])) for r in r0] \
+        == [("rejected_classification", 0)]
+    # a stream whose docs yield no field rows at all
+    stream_committer(lake1)(spark.createDataFrame([field_less], DOCS_SCHEMA), 1)
+    assert L.compact_stream(spark, lake1) == {"docs": 1, "buckets": 1}
+    assert d0_fields() == 0
+    assert L.read_table(spark, lake1, L.RESULTS).count() == 2
 
 
 def test_stream_dedup_within_watermark(spark, tmp_path):
