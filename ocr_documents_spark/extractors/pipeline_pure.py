@@ -215,8 +215,3 @@ def process_document(doc_id: str, spans: Sequence[Dict[str, Any]],
         return rejected_quality_result(doc_id, len(spans), issues, warnings)
     return process_recovered(doc_id, recover_pages(spans), forced_type,
                              quality_warnings=warnings)
-
-
-def out_spans_for_document(doc_id: str, spans: Sequence[Dict[str, Any]]
-                           ) -> List[OutSpan]:
-    return process_document(doc_id, spans)["out_spans"]

@@ -37,6 +37,7 @@ from pyspark.sql import SparkSession
 # package; the package itself arrives via --py-files
 from ocr_documents_spark.pipeline import read_docs
 from ocr_documents_spark.jobs import lake as L
+from ocr_documents_spark.session import get_spark
 
 
 def parse_range(spec: str, n_buckets: int) -> List[int]:
@@ -92,7 +93,7 @@ def main(argv: List[str] | None = None) -> int:
                         "type (reference: explicit document_type upload)")
     args = p.parse_args(argv)
 
-    spark = SparkSession.builder.appName("ocr-documents-extract").getOrCreate()
+    spark = get_spark("ocr-documents-extract")
     claimed = (parse_range(args.range_spec, args.buckets)
                if args.range_spec else list(range(args.buckets)))
     report = run(spark, args.input, args.lake, args.buckets, claimed,

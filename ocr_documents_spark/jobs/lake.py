@@ -24,8 +24,7 @@ every read.
 On a cluster with an Iceberg catalog the same protocol maps 1:1:
 ``CREATE TABLE … PARTITIONED BY (bucket(N, doc_id))``, ``MERGE INTO`` for
 results, plain appends for metrics/checkpoints.  This sandbox has no
-Iceberg runtime jar, so the protocol rides parquet; the SQL the Iceberg
-path would issue is in ``iceberg_merge_sql`` for parity review.
+Iceberg runtime jar, so the protocol rides parquet.
 
 Reference lineage: the v1 status ladder pending → processing → completed
 (backend/main_v1.py:117-157) is exactly this checkpoint table, with the
@@ -112,8 +111,8 @@ class Lake:
     def path(self, table: str) -> str:
         return os.path.join(self.root, table)
 
-    def bucket_col(self, doc_id_col: str = "doc_id") -> F.Column:
-        return F.pmod(F.xxhash64(doc_id_col), F.lit(self.n_buckets)).cast("int")
+    def bucket_col(self) -> F.Column:
+        return F.pmod(F.xxhash64("doc_id"), F.lit(self.n_buckets)).cast("int")
 
 
 def read_table(spark: SparkSession, lake: Lake,
@@ -369,14 +368,3 @@ def export_results_csv(results: DataFrame, path: str) -> None:
         F.round("overall_confidence", 2).alias("confidence"),
         F.size("fields").alias("n_fields"), "n_pages")
      .coalesce(1).write.option("header", True).mode("overwrite").csv(path))
-
-
-def iceberg_merge_sql(catalog_table: str = "lake.results") -> str:
-    """The MERGE the Iceberg path issues instead of dynamic overwrite."""
-    return f"""
-MERGE INTO {catalog_table} t
-USING batch_results s
-ON t.doc_id = s.doc_id
-WHEN MATCHED THEN UPDATE SET *
-WHEN NOT MATCHED THEN INSERT *
-""".strip()

@@ -18,6 +18,7 @@ from pyspark.sql import SparkSession, Window
 from pyspark.sql import functions as F
 
 from ocr_documents_spark.jobs import lake as L
+from ocr_documents_spark.session import get_spark
 
 
 def summarize(spark: SparkSession, lake_root: str, n_buckets: int) -> dict:
@@ -65,7 +66,7 @@ def main(argv=None) -> int:
         for t in list_document_types():
             print(f"{t['type']}: {t['n_fields']} fields")
         return 0
-    spark = SparkSession.builder.appName("lake-status").getOrCreate()
+    spark = get_spark("lake-status")
     print(summarize(spark, args.lake, args.buckets))
     spark.stop()
     return 0

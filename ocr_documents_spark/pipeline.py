@@ -122,7 +122,8 @@ import os as _os
 RECOVER_MS_PER_SPAN = float(
     _os.environ.get("SPARK_GRAFT_RECOVER_MS_PER_SPAN", "0.05"))
 TARGET_TASK_SECONDS = 5.0
-# kept as the explicit-override unit tests' forced-salt threshold
+# floor of the cost-model split: a document this short never pays the two
+# shuffles, however dear its spans are
 HEAVY_SPAN_THRESHOLD = 64
 
 
@@ -364,13 +365,12 @@ def heavy_branch(docs: DataFrame, heavy_threshold: int,
     spans are blanked before the explode (no recovery work, one null-span
     row through the two exchanges) and the finalize stage synthesizes the
     rejected result from the carried quality columns via the shared pure
-    function.  The earlier two-branch shape (filter quality_ok, union a
-    rejected projection) planned a SECOND FileScan of the heavy slice
-    and — because Catalyst extracts Python UDFs per Filter/Project
-    operator — evaluated the gate UDF up to FOUR times per document; with
-    a real OCR probe at 10^12 docs that is a 4× tax on the single most
-    expensive gate step.  Single dataflow: one scan, ONE gate evaluation,
-    same two exchanges (plan-asserted in tests/test_plan_shapes.py).
+    function.  One dataflow, because Catalyst extracts a Python UDF once
+    per Filter/Project operator that references it: a filter-and-union
+    split would re-scan the heavy slice and re-run the gate, the single
+    most expensive gate step with a real OCR probe.  One scan, ONE gate
+    evaluation per document, two exchanges (plan-asserted in
+    tests/test_plan_shapes.py).
     """
     heavy = docs.filter(F.size("spans") > heavy_threshold)
     gated = heavy.withColumn(

@@ -999,11 +999,7 @@ def ensure_golden() -> dict[str, str]:
 def _synthetic_docs_df(spark):
     from .fixtures.gen import generate_docs
     from .pipeline import DOCS_SCHEMA
-    rows = [(d["doc_id"],
-             [(s["kind"], s["text"], s["media_ref"], s["offset"])
-              for s in d["spans"]])
-            for d in generate_docs(_PIPELINE_DOCS)]
-    return spark.createDataFrame(rows, DOCS_SCHEMA)
+    return spark.createDataFrame(generate_docs(_PIPELINE_DOCS), DOCS_SCHEMA)
 
 
 def q27_extraction_pipeline(spark, sf_dir):

@@ -1,10 +1,19 @@
-"""SparkSession factory tuned for the extraction workload.
+"""The one SparkSession builder: every entry point — the spark-submit jobs,
+the CLIs, the tools, the tests and the benchmark — calls ``get_spark``.
 
-Local testing runs ``local[$SPARK_GRAFT_CPUS]`` in one JVM, but every knob
-below is the one you would set on a 1000-executor cluster: AQE for runtime
-re-planning and skew-join splitting, Arrow for all Python UDF traffic, and a
-shuffle-partition count sized so post-explode span batches stay well inside
-executor memory at the target SF.
+Its settings fall into two groups:
+
+* **engine settings** hold wherever the engine runs, under ``spark-submit``
+  as much as in a local test: Arrow for all Python UDF traffic at
+  ``ARROW_BATCH_ROWS`` rows per batch, AQE with partition coalescing and
+  skew-join splitting, and UTC session time;
+* **local sizing** applies only when ``get_spark`` starts the JVM itself
+  (master ``local[$SPARK_GRAFT_CPUS]``, driver heap, shuffle width, no UI).
+  A launcher that already owns the JVM — ``spark-submit``, or any process
+  pyspark reaches through ``PYSPARK_GATEWAY_PORT`` — keeps its own values.
+
+Explicit ``master``/``shuffle_partitions`` arguments and ``extra_conf``
+apply in both cases, ``extra_conf`` last.
 """
 
 from __future__ import annotations
@@ -22,53 +31,37 @@ DEFAULT_SHUFFLE_PARTITIONS = 32
 # bounds heavy-path span batches identically.
 ARROW_BATCH_ROWS = 1024
 
+ENGINE_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": str(ARROW_BATCH_ROWS),
+    "spark.sql.session.timeZone": "UTC",
+}
+
 
 def get_spark(app_name: str = "ocr-documents-spark",
               master: str | None = None,
               shuffle_partitions: int | None = None,
               extra_conf: dict | None = None) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = master or f"local[{cpus}]"
-    shuffle_partitions = shuffle_partitions or int(
-        os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS))
-
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_ROWS))
-        # on a real lake these stay at cluster defaults (128m); locally the
-        # bench shrinks them via env so a few-MB corpus still fans out to
-        # every core the way a many-file 100 TB table naturally would
-        .config("spark.sql.files.maxPartitionBytes",
-                os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "128m"))
-        .config("spark.sql.files.openCostInBytes",
-                os.environ.get("SPARK_GRAFT_OPEN_COST_BYTES", "4194304"))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
-    )
-    # Shuffle/spill scratch space.  On a real cluster this is the
-    # executor-local NVMe array; on this single-box sandbox the default
-    # (/tmp) is one virtual disk shared by all 32 task threads.  Point
-    # it at tmpfs (SPARK_GRAFT_LOCAL_DIR=/dev/shm/...) to take disk I/O
-    # out of the scratch path the way per-executor NVMe does in
-    # production.  NOTE the measured caveat (BENCH.md §3 decomposition):
-    # the 10-15x shuffle-write-time inflation at local[32] SURVIVES a
-    # tmpfs scratch dir — it is compress/copy CPU contending with the
-    # Python workers, not I/O — so do not expect this knob alone to
-    # restore 8->32 scaling on one box.  Also measured (BENCH.md §3
-    # knob A/B): spark.shuffle.compress=false makes local[32] WORSE
-    # (1.62x -> 1.20x) — uncompressed blocks push 1.5x the bytes
-    # through the same shared copy path — and a 24g heap changes
-    # nothing; the defaults are the tuned state.
-    local_dir = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
-    if local_dir:
-        builder = builder.config("spark.local.dir", local_dir)
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
-    return builder.getOrCreate()
+    conf = {"spark.app.name": app_name, **ENGINE_CONF}
+    # pyspark reads PYSPARK_GATEWAY_PORT to join a JVM a launcher started
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        conf.update({
+            "spark.master": f"local[{cpus}]",
+            "spark.sql.shuffle.partitions": str(DEFAULT_SHUFFLE_PARTITIONS),
+            # Spark's own split defaults, spelled out so that a
+            # spark-defaults.conf cannot change how a local scan splits
+            "spark.sql.files.maxPartitionBytes": "128m",
+            "spark.sql.files.openCostInBytes": "4194304",
+            "spark.driver.memory": "8g",
+            "spark.ui.enabled": "false",
+        })
+    if master:
+        conf["spark.master"] = master
+    if shuffle_partitions:
+        conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+    conf.update(extra_conf or {})
+    return SparkSession.builder.config(map=conf).getOrCreate()

@@ -69,10 +69,7 @@ def test_forced_type_processes_labor_contract(spark):
             docs_raw.append(d)
         i += 1
 
-    docs = spark.createDataFrame(
-        [(d["doc_id"],
-          [(s["kind"], s["text"], s["media_ref"], s["offset"])
-           for s in d["spans"]]) for d in docs_raw], DOCS_SCHEMA)
+    docs = spark.createDataFrame(docs_raw, DOCS_SCHEMA)
     rows = {r["doc_id"]: r
             for r in run_pipeline(docs, forced_type="LABOR_CONTRACT").collect()}
     for d in docs_raw:

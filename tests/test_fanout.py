@@ -10,11 +10,14 @@ this file pins its contract:
 * well-split input   -> the plan is returned UNCHANGED (same object),
   so zero-Exchange operators stay zero-Exchange at lake scale;
 * values are untouched either way.
+
+``fan_in`` is the dual every ``run_pipeline`` call passes through: an
+over-split input merges without a shuffle, a sane one is untouched.
 """
 
 from pyspark.sql import functions as F
 
-from ocr_documents_spark.functions.fanout import cpu_parts, fan_out
+from ocr_documents_spark.functions.fanout import cpu_parts, fan_in, fan_out
 
 
 def test_underspread_input_fans_out(spark):
@@ -45,3 +48,17 @@ def test_keyless_fan_out_round_robins(spark):
     out = fan_out(df)
     assert out.rdd.getNumPartitions() == cpu_parts(df)
     assert out.agg(F.sum("x")).collect()[0][0] == sum(range(50))
+
+
+def test_oversplit_input_fans_in_without_shuffle(spark):
+    target = 2 * spark.sparkContext.defaultParallelism
+    df = spark.range(0, 1000, 1, 4 * target + 1)
+    out = fan_in(df)
+    assert out.rdd.getNumPartitions() == target
+    assert "Exchange" not in out._jdf.queryExecution().executedPlan().toString()
+    assert out.agg(F.sum("id")).collect()[0][0] == sum(range(1000))
+
+
+def test_sanely_split_input_is_not_fanned_in(spark):
+    df = spark.range(0, 1000, 1, 4 * 2 * spark.sparkContext.defaultParallelism)
+    assert fan_in(df) is df

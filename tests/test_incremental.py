@@ -17,13 +17,6 @@ from ocr_documents_spark.pipeline import DOCS_SCHEMA
 N_BUCKETS = 4
 
 
-def _df(spark, docs):
-    rows = [(d["doc_id"],
-             [(s["kind"], s["text"], s["media_ref"], s["offset"])
-              for s in d["spans"]]) for d in docs]
-    return spark.createDataFrame(rows, DOCS_SCHEMA)
-
-
 def _extracted_lake(spark, docs_df, root):
     """The production order: the snapshot lands as parquet, then the batch
     job extracts every bucket of it into a fresh lake."""
@@ -40,7 +33,7 @@ def _table_rows(spark, lake, table):
 @pytest.fixture(scope="module")
 def snapshots(spark):
     base = generate_docs(60)
-    old = _df(spark, base)
+    old = spark.createDataFrame(base, DOCS_SCHEMA)
     # doc 7: mutate one span's text (changed); pick one whole bucket to
     # empty via removals; add 3 brand-new docs
     lake_probe = L.Lake("/unused", N_BUCKETS)
@@ -59,21 +52,18 @@ def snapshots(spark):
     assert 0 < len(removed_ids) < 40
     changed_id = next(i for i in buckets if i not in removed_ids)
 
-    new_rows = []
+    new_docs = []
     for d in base:
         if d["doc_id"] in removed_ids:
             continue
-        spans = [(s["kind"], s["text"], s["media_ref"], s["offset"])
-                 for s in d["spans"]]
         if d["doc_id"] == changed_id:
-            k, t, m, o = spans[0]
-            spans = [(k, (t or "") + " amended clause", m, o)] + spans[1:]
-        new_rows.append((d["doc_id"], spans))
-    for d in generate_docs(3, seed=99):
-        new_rows.append((f"newdoc-{d['doc_id']}",
-                         [(s["kind"], s["text"], s["media_ref"],
-                           s["offset"]) for s in d["spans"]]))
-    new = spark.createDataFrame(new_rows, DOCS_SCHEMA)
+            first = d["spans"][0]
+            first = dict(first, text=(first["text"] or "") + " amended clause")
+            d = dict(d, spans=[first] + d["spans"][1:])
+        new_docs.append(d)
+    new_docs += [dict(d, doc_id=f"newdoc-{d['doc_id']}")
+                 for d in generate_docs(3, seed=99)]
+    new = spark.createDataFrame(new_docs, DOCS_SCHEMA)
     return old, new, removed_ids, changed_id, victim_bucket
 
 

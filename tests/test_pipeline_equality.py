@@ -23,11 +23,7 @@ def corpus():
                 ids=["auto-direct", "forced-salt"])
 def spark_results(request, spark, corpus):
     from ocr_documents_spark.pipeline import DOCS_SCHEMA, run_pipeline
-    docs = spark.createDataFrame(
-        [(d["doc_id"],
-          [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in d["spans"]])
-         for d in corpus],
-        DOCS_SCHEMA)
+    docs = spark.createDataFrame(corpus, DOCS_SCHEMA)
     rows = run_pipeline(docs, heavy_threshold=request.param).collect()
     return {r["doc_id"]: r for r in rows}
 

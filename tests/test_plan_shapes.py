@@ -85,20 +85,14 @@ def test_candidate_ops_never_go_allpairs(spark, sf_dir):
 def test_pipeline_default_plan_is_single_scan_no_shuffle(spark):
     from ocr_documents_spark.fixtures.gen import generate_docs
     from ocr_documents_spark.pipeline import DOCS_SCHEMA, run_pipeline
-    docs = spark.createDataFrame(
-        [(d["doc_id"],
-          [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in d["spans"]])
-         for d in generate_docs(30)], DOCS_SCHEMA)
+    docs = spark.createDataFrame(generate_docs(30), DOCS_SCHEMA)
     assert exchange_count(run_pipeline(docs)) == 0  # cheap decode -> direct
 
 
 def test_pipeline_forced_salt_has_exactly_two_shuffles(spark):
     from ocr_documents_spark.fixtures.gen import generate_docs
     from ocr_documents_spark.pipeline import DOCS_SCHEMA, run_pipeline
-    docs = spark.createDataFrame(
-        [(d["doc_id"],
-          [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in d["spans"]])
-         for d in generate_docs(30)], DOCS_SCHEMA)
+    docs = spark.createDataFrame(generate_docs(30), DOCS_SCHEMA)
     # salt fan-out + doc_id regroup, nothing else
     assert exchange_count(run_pipeline(docs, heavy_threshold=16)) == 2
 
@@ -116,11 +110,8 @@ def test_pipeline_gate_probe_evaluates_once_single_scan(spark, tmp_path):
     from ocr_documents_spark.fixtures.gen import generate_docs
     from ocr_documents_spark.pipeline import (DOCS_SCHEMA, _quality_gate,
                                               read_docs, run_pipeline)
-    rows = [(d["doc_id"],
-             [(s["kind"], s["text"], s["media_ref"], s["offset"])
-              for s in d["spans"]]) for d in generate_docs(30)]
     path = str(tmp_path / "docs")
-    spark.createDataFrame(rows, DOCS_SCHEMA).write.parquet(path)
+    spark.createDataFrame(generate_docs(30), DOCS_SCHEMA).write.parquet(path)
     plan = plan_of(run_pipeline(read_docs(spark, path), heavy_threshold=16))
     eval_nodes = [l for l in plan.splitlines() if "ArrowEvalPython" in l]
     gate_name = _quality_gate(False).__name__

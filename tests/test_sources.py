@@ -3,7 +3,7 @@ parity with the parquet path and the pure oracle."""
 
 from __future__ import annotations
 
-from ocr_documents_spark.extractors.pipeline_pure import out_spans_for_document
+from ocr_documents_spark.extractors.pipeline_pure import process_document
 from ocr_documents_spark.fixtures.gen import generate_docs
 from ocr_documents_spark.pipeline import DOCS_SCHEMA, run_pipeline
 from ocr_documents_spark.sources.formats import read_docs_json, write_docs_json
@@ -11,12 +11,8 @@ from ocr_documents_spark.sources.formats import read_docs_json, write_docs_json
 
 def test_jsonl_roundtrip_and_pipeline_parity(spark, tmp_path):
     docs = generate_docs(30)
-    rows = [(d["doc_id"],
-             [(s["kind"], s["text"], s["media_ref"], s["offset"])
-              for s in d["spans"]])
-            for d in docs]
     path = str(tmp_path / "docs_jsonl")
-    write_docs_json(spark.createDataFrame(rows, DOCS_SCHEMA), path)
+    write_docs_json(spark.createDataFrame(docs, DOCS_SCHEMA), path)
 
     back = read_docs_json(spark, path)
     assert back.schema == DOCS_SCHEMA
@@ -26,8 +22,8 @@ def test_jsonl_roundtrip_and_pipeline_parity(spark, tmp_path):
                          for s in r["out_spans"]]
            for r in run_pipeline(back).collect()}
     for d in docs:
-        assert got[d["doc_id"]] == out_spans_for_document(
-            d["doc_id"], d["spans"])
+        assert got[d["doc_id"]] == process_document(
+            d["doc_id"], d["spans"])["out_spans"]
 
 
 def test_jsonl_malformed_line_quarantined(spark, tmp_path):

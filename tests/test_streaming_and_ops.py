@@ -277,9 +277,7 @@ def test_stream_commit_replay_is_idempotent(spark, tmp_path):
 
     lake = L.Lake(str(tmp_path / "slake"), 4)
     docs = generate_docs(20)
-    df = spark.createDataFrame(
-        [(d["doc_id"], [(s["kind"], s["text"], s["media_ref"], s["offset"])
-                        for s in d["spans"]]) for d in docs], DOCS_SCHEMA)
+    df = spark.createDataFrame(docs, DOCS_SCHEMA)
     commit = stream_committer(lake)
     commit(df, 7)
     counts1 = {t: spark.read.parquet(lake.path(t)).count()
@@ -311,9 +309,7 @@ def test_compact_stream_merges_into_main_lake(spark, tmp_path):
 
     # stream 10 docs: 5 overlap the batch lake (updates), 5 are new
     docs = generate_docs(35)[25:]
-    df = spark.createDataFrame(
-        [(d["doc_id"], [(s["kind"], s["text"], s["media_ref"], s["offset"])
-                        for s in d["spans"]]) for d in docs], DOCS_SCHEMA)
+    df = spark.createDataFrame(docs, DOCS_SCHEMA)
     stream_committer(lake)(df, 0)
     for t in (L.STREAM_RESULTS, L.STREAM_FIELDS, L.STREAM_METRICS):
         assert _types(spark.read.parquet(lake.path(t)).schema) \

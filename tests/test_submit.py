@@ -13,6 +13,10 @@ A second invocation over the same bucket range proves checkpoint
 resume through the same surface: the job must report every bucket as
 ``resumed_skipped`` and touch zero documents.
 
+Under spark-submit the launcher owns the JVM: ``session.get_spark`` must
+keep the launcher's master and ``--conf`` values and still pin the
+engine's own settings (the Arrow batch size).
+
 Reference lineage: the v1 async lifecycle (backend/main_v1.py:111-157)
 re-expressed as resumable batch jobs — here exercised exactly the way
 a cluster operator would launch it.
@@ -22,6 +26,7 @@ import ast
 import glob
 import os
 import subprocess
+import textwrap
 
 import duckdb
 import pytest
@@ -64,6 +69,16 @@ def submit(corpus, lake_root, neutral_cwd) -> dict:
     return ast.literal_eval(report_lines[-1])
 
 
+@pytest.fixture(scope="module")
+def engine_zip(tmp_path_factory):
+    """The package zipped the way tools/submit_job.sh ships it."""
+    path = str(tmp_path_factory.mktemp("submit_zip") / "engine.zip")
+    subprocess.run(["zip", "-qr", path, "ocr_documents_spark",
+                    "-x", "*.pyc", "-x", "*__pycache__*"],
+                   cwd=REPO, check=True)
+    return path
+
+
 def lake_files(lake_root, table):
     return glob.glob(os.path.join(lake_root, table, "**", "*.parquet"),
                      recursive=True)
@@ -93,3 +108,29 @@ def test_submit_runs_from_zip_and_resumes(corpus, lake_root, neutral_cwd):
     n2 = duckdb.sql("SELECT count(*) FROM read_parquet(?)",
                     params=[lake_files(lake_root, "results")]).fetchone()[0]
     assert n2 == N_DOCS
+
+
+def test_submit_session_keeps_launcher_conf(engine_zip, neutral_cwd,
+                                            tmp_path):
+    script = tmp_path / "conf_probe.py"
+    script.write_text(textwrap.dedent("""
+        from ocr_documents_spark.session import get_spark
+        spark = get_spark("submit-conf-probe")
+        print("CONF", spark.sparkContext.master,
+              spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"),
+              spark.conf.get("spark.sql.shuffle.partitions"))
+        spark.stop()
+    """))
+    proc = subprocess.run(
+        ["spark-submit", "--master", "local[2]",
+         "--conf", "spark.sql.shuffle.partitions=3",
+         "--py-files", engine_zip, str(script)],
+        cwd=neutral_cwd, capture_output=True, text=True, timeout=600)
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    conf_lines = [l.split() for l in proc.stdout.splitlines()
+                  if l.startswith("CONF ")]
+    assert conf_lines, proc.stdout[-4000:]
+    _, master, batch_rows, shuffle_partitions = conf_lines[-1]
+    assert master == "local[2]"
+    assert batch_rows == "1024"
+    assert shuffle_partitions == "3"

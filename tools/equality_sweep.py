@@ -42,10 +42,7 @@ def main(n_docs: int = 2000) -> int:
     spark = get_spark("equality-sweep")
     spark.sparkContext.setLogLevel("ERROR")
     corpus = generate_docs(n_docs)
-    docs = spark.createDataFrame(
-        [(d["doc_id"],
-          [(s["kind"], s["text"], s["media_ref"], s["offset"])
-           for s in d["spans"]]) for d in corpus], DOCS_SCHEMA)
+    docs = spark.createDataFrame(corpus, DOCS_SCHEMA)
     golden = {d["doc_id"]: process_document(d["doc_id"], d["spans"])
               for d in corpus}
 

@@ -108,11 +108,8 @@ def measure(parallelism: int, mult: int) -> dict:
     spark.sparkContext.setLogLevel("ERROR")
 
     # warm: python workers, Arrow serializers, codegen for all stage shapes
-    warm_rows = [(d["doc_id"],
-                  [(s["kind"], s["text"], s["media_ref"], s["offset"])
-                   for s in d["spans"]])
-                 for d in generate_docs(parallelism * 4)]
-    warm = spark.createDataFrame(warm_rows, DOCS_SCHEMA).repartition(parallelism)
+    warm = spark.createDataFrame(generate_docs(parallelism * 4),
+                                 DOCS_SCHEMA).repartition(parallelism)
     warm_pipeline = run_pipeline(warm, heavy_threshold=4)
     warm_pipeline.write.format("noop").mode("overwrite").save()
     warm_pipeline.write.format("noop").mode("overwrite").save()
