@@ -56,13 +56,16 @@ def neutral_cwd(tmp_path_factory):
     return str(tmp_path_factory.mktemp("neutral_cwd"))
 
 
-def submit(corpus, lake_root, neutral_cwd) -> dict:
-    env = {**os.environ, "SPARK_MASTER": "local[4]"}
+def submit(corpus, lake_root, neutral_cwd, tmpdir) -> dict:
+    env = {**os.environ, "SPARK_MASTER": "local[4]", "TMPDIR": str(tmpdir)}
     proc = subprocess.run(
         [SCRIPT, corpus, lake_root, str(N_BUCKETS), f"0:{N_BUCKETS}"],
         cwd=neutral_cwd, env=env, capture_output=True, text=True,
         timeout=600)
     assert proc.returncode == 0, proc.stderr[-4000:]
+    # the script removes the engine.zip it shipped
+    assert not glob.glob(os.path.join(tmpdir, "**", "engine.zip"),
+                         recursive=True)
     report_lines = [l for l in proc.stdout.splitlines()
                     if l.startswith("{'run_id'")]
     assert report_lines, proc.stdout[-4000:]
@@ -84,8 +87,9 @@ def lake_files(lake_root, table):
                      recursive=True)
 
 
-def test_submit_runs_from_zip_and_resumes(corpus, lake_root, neutral_cwd):
-    first = submit(corpus, lake_root, neutral_cwd)
+def test_submit_runs_from_zip_and_resumes(corpus, lake_root, neutral_cwd,
+                                          tmp_path):
+    first = submit(corpus, lake_root, neutral_cwd, tmp_path)
     assert first["claimed"] == N_BUCKETS
     assert first["pending"] == N_BUCKETS
     assert first["resumed_skipped"] == 0
@@ -101,7 +105,7 @@ def test_submit_runs_from_zip_and_resumes(corpus, lake_root, neutral_cwd):
     assert lake_files(lake_root, "metrics")
 
     # resume through the SAME spark-submit surface: nothing re-runs
-    second = submit(corpus, lake_root, neutral_cwd)
+    second = submit(corpus, lake_root, neutral_cwd, tmp_path)
     assert second["resumed_skipped"] == N_BUCKETS
     assert second["pending"] == 0
     assert second["n_docs"] == 0

@@ -11,9 +11,11 @@ INPUT="${1:?input docs path}"; LAKE="${2:?lake root}"
 BUCKETS="${3:-256}"; RANGE="${4:-0:${3:-256}}"
 MASTER="${SPARK_MASTER:-local[${SPARK_GRAFT_CPUS:-32}]}"
 
-ZIP="$(mktemp -d)/engine.zip"
+TMP="$(mktemp -d)"
+trap 'rm -rf "$TMP"' EXIT
+ZIP="$TMP/engine.zip"
 (cd "$REPO" && zip -qr "$ZIP" ocr_documents_spark -x '*.pyc' -x '*__pycache__*')
 
-exec spark-submit --master "$MASTER" --py-files "$ZIP" \
+spark-submit --master "$MASTER" --py-files "$ZIP" \
     "$REPO/ocr_documents_spark/jobs/extract.py" \
     --input "$INPUT" --lake "$LAKE" --buckets "$BUCKETS" --range "$RANGE"
