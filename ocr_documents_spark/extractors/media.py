@@ -15,10 +15,14 @@ extraction pipeline — of::
     {"tokens": [[y, x, "token_text", conf], ...],   # unsorted, EasyOCR-like
      "qc": {"w", "h", "blur", "brightness", "contrast", "skew"}}
 
-Recovery mirrors the reference's EasyOCR post-processing exactly:
-tokens sorted by (top-left y, x) (reference: backend/ocr_service.py:41),
-joined with newlines (:52), stripped (:57); confidence is the mean token
-confidence scaled to percent (:49-55).
+``read_media_ref`` is the one parser of this format.  Page recovery and
+the gate's QC probe (``decode_media_ref``), the frame sampler and the
+metadata UDF (functions/multimodal.py) all read refs through it, so they
+agree on what an unreadable payload is.  Recovery mirrors the reference's
+EasyOCR post-processing exactly: tokens sorted by (top-left y, x)
+(reference: backend/ocr_service.py:41), joined with newlines (:52),
+stripped (:57); confidence is the mean token confidence scaled to
+percent (:49-55).
 """
 
 from __future__ import annotations
@@ -29,7 +33,7 @@ import os
 import time
 import zlib
 from operator import itemgetter
-from typing import Any
+from typing import Any, Optional
 
 MEDIA_REF_PREFIX = "m:"
 
@@ -38,7 +42,8 @@ MEDIA_REF_PREFIX = "m:"
 # tools/skew_demo.py.  0 (default) = the pure deterministic decoder.
 _SIM_OCR_MS = float(os.environ.get("SPARK_GRAFT_SIMULATED_OCR_MS", "0"))
 
-# QC metrics reported when a media payload is unreadable: fails every gate.
+# QC metrics of an unreadable media payload (fails every gate); also the
+# value of each key a payload's qc lacks.
 _QC_UNREADABLE = {
     "w": 0, "h": 0, "blur": 0.0, "brightness": 0.0, "contrast": 0.0, "skew": 0.0,
 }
@@ -51,27 +56,40 @@ def encode_media_ref(doc_id: str, offset: int, tokens: list, qc: dict) -> str:
     return f"{MEDIA_REF_PREFIX}{doc_id}:{offset}:{payload}"
 
 
-def decode_media_ref(media_ref: str) -> tuple[str, float, dict[str, Any]]:
-    """Recover ``(page_text, confidence_pct, qc_metrics)`` from a media ref.
-
-    This is the pluggable OCR seam: swap the payload decode for a real
-    engine call and keep the (sort, join, mean-confidence) contract.
-    """
-    if _SIM_OCR_MS > 0:
-        time.sleep(_SIM_OCR_MS / 1000.0)
+def read_media_ref(media_ref: Optional[str]
+                   ) -> tuple[str, int, list, dict[str, Any]]:
+    """Parse a media ref -> ``(doc_id, offset, tokens, qc)``, tokens sorted
+    by (y, x) and ``qc`` holding exactly the six QC keys (absent ones
+    zero).  Anything unreadable — a None or short ref, a bad payload, a
+    ``qc`` that is not an object — gives ``("", 0, [], all-zero QC)``,
+    which fails every gate, rather than raising."""
     try:
-        payload = media_ref.split(":", 3)[3]
+        _prefix, doc_id, offset, payload = media_ref.split(":", 3)
         blob = zlib.decompress(base64.b64decode(payload))
         # decode utf-8 explicitly: json.loads on bytes runs BOM sniffing
         # (json.detect_encoding) per call, a measured ~10% of the decode;
         # the payload contract is json.dumps utf-8 (never a BOM), and a
         # malformed payload still lands in the except arm either way
         doc = json.loads(blob.decode("utf-8"))
+        qc = doc.get("qc", {})
+        qc = {k: qc.get(k, zero) for k, zero in _QC_UNREADABLE.items()}
+        tokens = sorted(doc.get("tokens", []), key=itemgetter(0, 1))
+        return doc_id, int(offset), tokens, qc
     except Exception:
-        return "", 0.0, dict(_QC_UNREADABLE)
+        return "", 0, [], dict(_QC_UNREADABLE)
 
-    tokens = sorted(doc.get("tokens", []), key=itemgetter(0, 1))
+
+def decode_media_ref(media_ref: Optional[str]
+                     ) -> tuple[str, float, dict[str, Any]]:
+    """Recover ``(page_text, confidence_pct, qc_metrics)`` from a media ref.
+
+    This is the pluggable OCR seam: swap ``read_media_ref`` for a real
+    engine call and keep the (sort, join, mean-confidence) contract.
+    """
+    if _SIM_OCR_MS > 0:
+        time.sleep(_SIM_OCR_MS / 1000.0)
+    _doc_id, _offset, tokens, qc = read_media_ref(media_ref)
     text = "\n".join(t[2] for t in tokens).strip()
     confs = [float(t[3]) * 100.0 for t in tokens]
     avg_conf = sum(confs) / len(confs) if confs else 0.0
-    return text, avg_conf, doc.get("qc", dict(_QC_UNREADABLE))
+    return text, avg_conf, qc

@@ -52,7 +52,7 @@ def recover_span(kind: Optional[str], text: Optional[str],
     spans pass through.  Born-digital spans carry the 85.0 confidence.
     """
     if kind == "media":
-        page_text, conf, _qc = decode_media_ref(media_ref or "")
+        page_text, conf, _qc = decode_media_ref(media_ref)
         return page_text, conf
     if kind == "html":
         return html_to_page_text(text or ""), TEXT_SPAN_CONFIDENCE
@@ -199,10 +199,7 @@ def document_quality_report(spans: Sequence[Dict[str, Any]],
     if first_ref is None:
         return True, [], []  # born-digital document: nothing to gate on
     _text, _conf, qc = decode_media_ref(first_ref)
-    passed, _score, issues, warnings = quality_report(
-        qc.get("w", 0), qc.get("h", 0), qc.get("blur", 0.0),
-        qc.get("brightness", 0.0), qc.get("contrast", 0.0),
-        qc.get("skew", 0.0))
+    passed, _score, issues, warnings = quality_report(**qc)
     return passed, issues, warnings
 
 

@@ -2,11 +2,12 @@
 
 The reference computes blur/brightness/contrast/skew with cv2 over pixels
 (backend/image_quality_checker.py:155-202) and gates on scalar thresholds
-(:22-30, :69-142).  In our engine the metrics arrive as data (carried in the
-media payload, or produced by a cv2 pandas UDF in production), so the gate
-itself is pure scalar arithmetic.  This module is its only implementation:
-both Spark plans and the single-node oracle call it through
-extractors/pipeline_pure.document_quality_report.
+(:22-30, :69-142).  In our engine the metrics arrive as data (the ``qc``
+of the media payload, read by extractors/media.py, or produced by a real
+decoder behind that seam in production), so the gate itself is pure scalar
+arithmetic.  ``quality_report`` is its one verdict: both Spark plans and
+the single-node oracle call it through
+extractors/pipeline_pure.document_quality_report with the six QC keys.
 
 Scoring transcribed from backend/image_quality_checker.py:204-240; pass/fail
 ladder from :69-142.
@@ -55,21 +56,6 @@ def quality_score(w: float, h: float, blur: float, brightness: float,
         score -= 10
 
     return max(0.0, min(100.0, score))
-
-
-def quality_passed(w: float, h: float, blur: float, brightness: float,
-                   contrast: float) -> bool:
-    """Conjunctive gate (reference :69-142): every hard check AND score>=50."""
-    t = THRESHOLDS
-    if w < t["min_width"] or h < t["min_height"]:
-        return False
-    if blur < t["blur_threshold"]:
-        return False
-    if brightness < t["brightness_min"] or brightness > t["brightness_max"]:
-        return False
-    if contrast < t["contrast_min"]:
-        return False
-    return quality_score(w, h, blur, brightness, contrast) >= 50.0
 
 
 def quality_report(w: float, h: float, blur: float, brightness: float,

@@ -28,6 +28,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+FAN_IN_FACTOR = 2      # fan_in's target: this many x cluster parallelism
+FAN_IN_MAX_EXCESS = 4  # fan_in merges only inputs over this many x target
+
 
 def cpu_parts(df: DataFrame) -> int:
     """Partition count for CPU-bound shuffles: every core busy, and never
@@ -37,19 +40,19 @@ def cpu_parts(df: DataFrame) -> int:
                int(sess.conf.get("spark.sql.shuffle.partitions", "200")))
 
 
-def fan_in(df: DataFrame, factor: int = 2,
-           max_excess: int = 4) -> DataFrame:
+def fan_in(df: DataFrame) -> DataFrame:
     """The dual fix: MERGE an over-split scan before a per-row Python
     stage.  Every task pays a fixed Python-worker cost (a warm identity
     pass over 4 one-row tasks: ~0.19 s, against ~0.05 s without the
     Python stage; ~0.5 s when every task gets a fresh worker), so a
     many-thousand-tiny-file scan feeding mapInArrow spends more on task
     churn than on work (guide §2.2/§6: fewer, larger map tasks; small
-    files hurt twice).  ``coalesce`` (no shuffle) to ``factor``x cluster
-    parallelism, applied only when the scan is more than ``max_excess``x
-    over-split — on a sanely-split input this is a no-op."""
-    target = df.sparkSession.sparkContext.defaultParallelism * factor
-    if df.rdd.getNumPartitions() > max_excess * target:
+    files hurt twice).  ``coalesce`` (no shuffle) to ``FAN_IN_FACTOR``x
+    cluster parallelism, applied only when the scan is more than
+    ``FAN_IN_MAX_EXCESS``x over-split — on a sanely-split input this is
+    a no-op."""
+    target = df.sparkSession.sparkContext.defaultParallelism * FAN_IN_FACTOR
+    if df.rdd.getNumPartitions() > FAN_IN_MAX_EXCESS * target:
         return df.coalesce(target)
     return df
 

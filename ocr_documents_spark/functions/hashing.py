@@ -33,11 +33,6 @@ def md5_int60(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
-def minhash_agg(shingle: Column, salt: int) -> Column:
-    """Aggregate expression: min over group of md5(salt || ':' || shingle)."""
-    return F.min(F.md5(F.concat(F.lit(f"{salt}:"), shingle)))
-
-
 def simhash_bit_votes(token_hash: Column, bit: int) -> Column:
     """+1/-1 vote for one bit position, to be summed per document."""
     return F.when(F.shiftright(token_hash, bit).bitwiseAND(F.lit(1)) == 1,

@@ -4,12 +4,12 @@ opaque media references.
 The engine treats image/PDF-page/audio content as opaque payloads addressed
 by ``media_ref`` (at production scale: an object-store key next to a
 ``binary`` column), with decode / feature-extract / resize implemented as
-Arrow-batched pandas UDFs.  The image/audio libraries are NOT in this
-container, so the raw-byte decode seam is STUBBED (``decode_image_bytes``
-raises ``NotImplementedError``); the synthetic ``m:`` refs decode through
-the deterministic seam in extractors/media.py.  Everything Spark-side —
-schema, UDF signature, Arrow batch shape, where the explode/regroup happens
-— is real and tested (tests/test_queries spot checks + q32).
+Arrow-batched pandas UDFs.  No imaging library is in this container, so
+every reader here goes through the one OCR seam in extractors/media.py
+(``read_media_ref``): a real decoder replaces that one function.
+Everything Spark-side — schema, UDF signature, Arrow batch shape, where the
+explode/regroup happens — is real and tested (tests/test_multimodal.py,
+and the q32/q47 golden-parquet oracles in queries.py).
 
 Reference lineage: EasyOCR's (bbox, text, conf) token stream and the
 image-quality metrics (backend/ocr_service.py:38-52,
@@ -19,7 +19,7 @@ metadata.
 
 from __future__ import annotations
 
-from typing import List
+from typing import List, Optional
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -27,6 +27,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (DoubleType, IntegerType, StringType,
                                StructField, StructType)
+
+from ..extractors.media import read_media_ref
 
 MEDIA_META_TYPE = StructType([
     StructField("w", IntegerType()),
@@ -40,21 +42,9 @@ MEDIA_META_TYPE = StructType([
 ])
 
 
-def decode_image_bytes(data: bytes) -> dict:
-    """Production decode slot (cv2/PIL): bytes -> pixel array + metrics.
-
-    STUB — the container has no imaging libraries.  A deployment installs
-    cv2 on executors and replaces this body; the UDFs below are already
-    batch-shaped for it.
-    """
-    raise NotImplementedError(
-        "raw image decode requires cv2/PIL on executors; this sandbox "
-        "carries media metadata inside the deterministic m:<...> refs")
-
-
 # --- frame sampling (video-shaped media) ----------------------------------
 # A media payload's token rows stand in for a clip's frames (25 fps ->
-# ts_ms = idx * 40); production replaces the payload parse with
+# ts_ms = idx * 40); production replaces read_media_ref with
 # cv2.VideoCapture grabs at the SAME sampled indices.  The sampling math,
 # schema, mapInPandas batch shape, and the post-UDF native resize are the
 # real deliverable and are value-checked against a pure-oracle golden
@@ -90,26 +80,17 @@ def sample_frame_indices(n_frames: int, k: int) -> List[int]:
     return out
 
 
-def frame_rows_for_ref(media_ref: str, k: int) -> List[dict]:
+def frame_rows_for_ref(media_ref: Optional[str], k: int) -> List[dict]:
     """Pure per-ref frame sampler (shared by the Spark UDF and the golden
     oracle).  Frames are the payload's tokens in (y, x) decode order;
     unreadable payloads yield no frames (a corrupt clip must not kill
     the job)."""
-    import base64
-    import json
-    import zlib
-    try:
-        doc_id, offset, payload = media_ref.split(":", 3)[1:4]
-        doc = json.loads(zlib.decompress(base64.b64decode(payload)))
-    except Exception:
-        return []
-    qc = doc.get("qc", {})
-    frames = sorted(doc.get("tokens", []), key=lambda t: (t[0], t[1]))
-    return [{"doc_id": doc_id, "media_offset": int(offset),
+    doc_id, offset, frames, qc = read_media_ref(media_ref)
+    return [{"doc_id": doc_id, "media_offset": offset,
              "frame_idx": i, "ts_ms": i * FRAME_MS,
              "frame_text": str(frames[i][2]),
              "frame_conf": float(frames[i][3]),
-             "w": int(qc.get("w", 0)), "h": int(qc.get("h", 0))}
+             "w": int(qc["w"]), "h": int(qc["h"])}
             for i in sample_frame_indices(len(frames), k)]
 
 
@@ -123,7 +104,7 @@ def sample_frames(media: DataFrame, k: int = 4,
         for pdf in batches:
             rows: List[dict] = []
             for ref in pdf[ref_col]:
-                rows.extend(frame_rows_for_ref(ref or "", k))
+                rows.extend(frame_rows_for_ref(ref, k))
             yield pd.DataFrame(
                 rows, columns=[f.name for f in FRAME_SAMPLE_SCHEMA])
     return media.mapInPandas(fn, FRAME_SAMPLE_SCHEMA)
@@ -144,35 +125,21 @@ def resize_dims(w: Column, h: Column, target: int) -> Column:
         F.when(zero, F.lit(0)).otherwise(out_h).alias("out_h"))
 
 
-def media_meta_for_ref(ref) -> dict:
+def media_meta_for_ref(ref: Optional[str]) -> dict:
     """Pure per-ref metadata decode — the single implementation behind the
-    :func:`media_meta` Arrow UDF AND the q32 golden-parquet oracle, so both
-    sides of the driver's value check ride identical arithmetic.
+    :func:`media_meta` pandas UDF AND the q32 golden-parquet oracle, so
+    both sides of q32's value check ride identical arithmetic.
     Unreadable payloads yield the all-zero QC row (fails every downstream
     gate) rather than raising — corrupt objects must not kill a 10^12-doc
     job."""
-    import json
-    import base64
-    import zlib
-
-    from ocr_documents_spark.extractors.media import _QC_UNREADABLE
-
-    qc, tokens = dict(_QC_UNREADABLE), []
-    if ref is not None:
-        try:
-            payload = ref.split(":", 3)[3]
-            doc = json.loads(zlib.decompress(base64.b64decode(payload)))
-            qc = doc.get("qc", qc)
-            tokens = doc.get("tokens", [])
-        except Exception:
-            pass
+    _doc_id, _offset, tokens, qc = read_media_ref(ref)
     confs = [float(t[3]) for t in tokens]
     return {
-        "w": int(qc.get("w", 0)), "h": int(qc.get("h", 0)),
-        "blur": float(qc.get("blur", 0.0)),
-        "brightness": float(qc.get("brightness", 0.0)),
-        "contrast": float(qc.get("contrast", 0.0)),
-        "skew": float(qc.get("skew", 0.0)),
+        "w": int(qc["w"]), "h": int(qc["h"]),
+        "blur": float(qc["blur"]),
+        "brightness": float(qc["brightness"]),
+        "contrast": float(qc["contrast"]),
+        "skew": float(qc["skew"]),
         "n_tokens": len(tokens),
         "mean_token_conf":
             round(sum(confs) / len(confs), 6) if confs else 0.0,

@@ -28,15 +28,6 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def sign_bucket(a: Column, dims: int = 3) -> Column:
-    """Deterministic spatial hash: sign pattern of the first `dims`
-    coordinates.  The bucket key for the LSH-bucketed ANN path — at scale
-    this is the shuffle key that keeps candidate generation local."""
-    parts = [F.when(F.element_at(a, i + 1) >= 0, F.lit("1")).otherwise(F.lit("0"))
-             for i in range(dims)]
-    return F.concat(*parts)
-
-
 def sign_bucket_dims(a: Column, dims: list[int]) -> Column:
     """Sign-pattern bucket over an arbitrary (seeded-random) set of 1-based
     coordinates — axis-aligned hyperplane LSH with configurable bit width.

@@ -42,14 +42,9 @@ from typing import Sequence
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.zorder import zorder_key
+from .lake import _hadoop_fs
 
 DEFAULT_TARGET_BYTES = 128 << 20  # the usual lake file-size target
-
-
-def _fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath, jvm
 
 
 def _is_data_file(name: str) -> bool:
@@ -68,7 +63,7 @@ def partition_file_stats(spark: SparkSession,
                          table_path: str) -> list[tuple[str, int, int]]:
     """-> [(partition_relpath, n_data_files, total_bytes)] from ONE
     FileSystem listing — the control-plane read, no data scan."""
-    fs, root, _ = _fs(spark, table_path)
+    fs, root = _hadoop_fs(spark, table_path)
     out = []
 
     def scan_dir(dirpath, rel):
@@ -116,8 +111,8 @@ def compact_table(spark: SparkSession, table_path: str,
     doubles as ``OPTIMIZE ... ZORDER BY``.
     """
     plans = plan_compaction(spark, table_path, target_bytes, min_files)
-    fs, _, jvm = _fs(spark, table_path)
-    Path = jvm.org.apache.hadoop.fs.Path
+    fs, _ = _hadoop_fs(spark, table_path)
+    Path = spark._jvm.org.apache.hadoop.fs.Path
     report = {"partitions": len(plans), "files_before": 0, "files_after": 0}
     for p in plans:
         src = os.path.join(table_path, p.relpath) if p.relpath else table_path

@@ -293,12 +293,16 @@ def doc_bucket(spark: SparkSession, lake: Lake, doc_id: str) -> int:
         lake.bucket_col().alias("b")).first()["b"]
 
 
+def _hadoop_fs(spark: SparkSession, path: str):
+    """-> (Hadoop FileSystem, Path) for ``path`` — works on any FS the
+    cluster mounts, not just local disk."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
+
+
 def _delete_partition_dir(spark: SparkSession, path: str) -> None:
-    """Drop a partition directory via the Hadoop FileSystem API (works on
-    any FS the cluster mounts, not just local disk)."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    """Drop a partition directory via the Hadoop FileSystem API."""
+    fs, hpath = _hadoop_fs(spark, path)
     fs.delete(hpath, True)
 
 
@@ -306,9 +310,7 @@ def _path_exists(spark: SparkSession, path: str) -> bool:
     """Hadoop FileSystem existence probe — the deliberate alternative to a
     bare ``except Exception`` around a read: only a genuinely-absent table
     is 'not there'; every other failure mode stays fatal."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, hpath = _hadoop_fs(spark, path)
     return bool(fs.exists(hpath))
 
 

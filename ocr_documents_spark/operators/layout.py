@@ -18,8 +18,7 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, StringType
 
 from ..extractors import layout as L
-
-TOKEN_BOX_FIELDS = ("x0", "y0", "x1", "y1", "word")
+from ..functions.fanout import cpu_parts
 
 
 def scatter_tokens(words: Column, hdr: Column, n_left: Column) -> Column:
@@ -78,10 +77,7 @@ def with_scattered_tokens(df: DataFrame, doc_id: str = "doc_id",
     # (user counts are exempt from AQE coalescing): the shuffled columns
     # are tiny in bytes but the downstream scatter + XY-cut is CPU-heavy,
     # exactly the shape AQE's byte-based coalescing would serialize.
-    n_parts = max(df.sparkSession.sparkContext.defaultParallelism,
-                  int(df.sparkSession.conf.get(
-                      "spark.sql.shuffle.partitions", "200")))
-    base = base.repartition(n_parts, doc_id)
+    base = base.repartition(cpu_parts(df), doc_id)
     return base.select(
         doc_id,
         scatter_tokens(F.col("__words"), F.col("__hdr"),

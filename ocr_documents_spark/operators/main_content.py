@@ -15,8 +15,7 @@ the heuristics and their citations live in extractors/boilerplate.py.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import Column
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (DoubleType, IntegerType, StringType,
                                StructField, StructType)
@@ -54,12 +53,6 @@ def main_content_udf(raw_html: pd.Series) -> pd.DataFrame:
         for k in cols:
             cols[k].append(r[k])
     return pd.DataFrame(cols)
-
-
-def with_main_content(df: DataFrame, html_col: str = "html",
-                      out_col: str = "mc") -> DataFrame:
-    """Append the extracted-content struct column; no shuffle."""
-    return df.withColumn(out_col, main_content_udf(F.col(html_col)))
 
 
 def strip_boilerplate(html: Column) -> Column:

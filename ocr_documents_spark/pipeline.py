@@ -333,29 +333,24 @@ def run_pipeline(docs: DataFrame, skip_quality_check: bool = False,
     if heavy_threshold >= NO_SALT_CUTOFF:
         return docs.mapInArrow(
             _direct_batches(skip_quality_check, forced_type), RESULT_SCHEMA)
-    return (light_branch(docs, heavy_threshold, skip_quality_check,
-                         forced_type)
-            .unionByName(heavy_branch(docs, heavy_threshold,
-                                      skip_quality_check, forced_type)))
+    return (_light_branch(docs, heavy_threshold, skip_quality_check,
+                          forced_type)
+            .unionByName(_heavy_branch(docs, heavy_threshold,
+                                       skip_quality_check, forced_type)))
 
 
-def light_branch(docs: DataFrame, heavy_threshold: int,
-                 skip_quality_check: bool = False,
-                 forced_type: str | None = None) -> DataFrame:
-    """The zero-shuffle direct stage over docs at/below the split.
-
-    Shared by run_pipeline and tools/heavy_diag.py so the diagnostic
-    always measures the production branch shape, never a hand-copy.
-    """
+def _light_branch(docs: DataFrame, heavy_threshold: int,
+                  skip_quality_check: bool,
+                  forced_type: str | None) -> DataFrame:
+    """The zero-shuffle direct stage over docs at/below the split."""
     return docs.filter(F.size("spans") <= heavy_threshold).mapInArrow(
         _direct_batches(skip_quality_check, forced_type), RESULT_SCHEMA)
 
 
-def heavy_branch(docs: DataFrame, heavy_threshold: int,
-                 skip_quality_check: bool = False,
-                 forced_type: str | None = None) -> DataFrame:
-    """Gate → salted recover/regroup/finalize over docs above the split
-    (see light_branch for the sharing note).
+def _heavy_branch(docs: DataFrame, heavy_threshold: int,
+                  skip_quality_check: bool,
+                  forced_type: str | None) -> DataFrame:
+    """Gate → salted recover/regroup/finalize over docs above the split.
 
     The gate runs BEFORE any recovery fan-out (cheap-first, Q1-Q6, S3):
     one Arrow UDF over ``spans`` calls document_quality_report, which

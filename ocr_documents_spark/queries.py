@@ -975,8 +975,8 @@ def ensure_golden() -> dict[str, str]:
                 else:
                     r["out_w"] = r["out_h"] = 0
                 frame_rows.append(r)
-            # q32: the same pure decode the media_meta Arrow UDF runs,
-            # one row per media span
+            # q32: the same pure decode the media_meta pandas UDF runs
+            # (read_media_ref, the one OCR seam), one row per media span
             m = media_meta_for_ref(s["media_ref"])
             media_rows.append({"doc_id": d["doc_id"], "w": m["w"],
                                "n_tokens": m["n_tokens"],
@@ -1084,11 +1084,11 @@ def q31_vector_norms(spark, sf_dir):
 
 def q32_media_features(spark, sf_dir):
     """Multimodal plumbing: explode media spans, extract typed metadata per
-    ref via an Arrow-batched UDF (decode stub seam in
-    functions/multimodal.py).  Value-checked via the q47-style
-    golden-parquet mechanism: the pure media_meta_for_ref decode
-    materializes per-span rows and the DuckDB oracle aggregates them with
-    the identical arithmetic."""
+    ref via an Arrow-batched pandas UDF (media_meta, which reads each ref
+    through the one OCR seam, extractors/media.read_media_ref).
+    Value-checked via the q47-style golden-parquet mechanism: the pure
+    media_meta_for_ref decode materializes per-span rows and the DuckDB
+    oracle aggregates them with the identical arithmetic."""
     from .functions.multimodal import media_meta
     docs = _synthetic_docs_df(spark)
     media = (docs.select("doc_id", F.explode("spans").alias("s"))
@@ -1117,7 +1117,7 @@ def q47_frame_samples(spark, sf_dir):
     then the aspect-preserving 224px letterbox geometry as native exact
     integer arithmetic.  Value-checked against the pure oracle's golden
     parquet — the same decode seam both sides; production swaps
-    cv2.VideoCapture into frame_rows_for_ref."""
+    cv2.VideoCapture into extractors/media.read_media_ref."""
     from .functions.multimodal import resize_dims, sample_frames
     docs = _synthetic_docs_df(spark)
     media = (docs.select(F.explode("spans").alias("s"))

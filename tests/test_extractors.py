@@ -178,11 +178,11 @@ def test_classifier_simple():
 
 def test_quality_gate_thresholds():
     ok = dict(w=1240, h=920, blur=260.0, brightness=138.0, contrast=62.0)
-    assert quality.quality_passed(**ok)
-    assert not quality.quality_passed(**{**ok, "blur": 12.0})
-    assert not quality.quality_passed(**{**ok, "brightness": 21.0})
-    assert not quality.quality_passed(**{**ok, "brightness": 250.0})
-    assert not quality.quality_passed(**{**ok, "contrast": 11.0})
-    assert not quality.quality_passed(**{**ok, "w": 340.0, "h": 260.0})
+    assert quality.quality_report(**ok)[0]
+    assert not quality.quality_report(**{**ok, "blur": 12.0})[0]
+    assert not quality.quality_report(**{**ok, "brightness": 21.0})[0]
+    assert not quality.quality_report(**{**ok, "brightness": 250.0})[0]
+    assert not quality.quality_report(**{**ok, "contrast": 11.0})[0]
+    assert not quality.quality_report(**{**ok, "w": 340.0, "h": 260.0})[0]
     # borderline: passes hard gates but composite score drives outcome
     assert quality.quality_score(1240, 920, 260.0, 138.0, 62.0) >= 90
