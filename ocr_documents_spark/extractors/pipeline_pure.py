@@ -44,34 +44,31 @@ OutSpan = Tuple[str, Optional[str], Optional[str], int]
 
 
 def recover_span(kind: Optional[str], text: Optional[str],
-                 media_ref: Optional[str]) -> Tuple[str, float]:
-    """One span -> (page text, confidence).
+                 media_ref: Optional[str]) -> Dict[str, Any]:
+    """One span -> its page ``{text, confidence, media_ref}``.
 
     Media spans go through the OCR decode seam; html spans through the
     DOM-heuristic boilerplate strip (extractors/boilerplate.py); text
     spans pass through.  Born-digital spans carry the 85.0 confidence.
+    ``media_ref`` is kept only on media-derived pages.
     """
     if kind == "media":
         page_text, conf, _qc = decode_media_ref(media_ref)
-        return page_text, conf
+        return {"text": page_text, "confidence": conf, "media_ref": media_ref}
     if kind == "html":
-        return html_to_page_text(text or ""), TEXT_SPAN_CONFIDENCE
-    return text or "", TEXT_SPAN_CONFIDENCE
+        text = html_to_page_text(text or "")
+    return {"text": text or "", "confidence": TEXT_SPAN_CONFIDENCE,
+            "media_ref": None}
 
 
 def recover_pages(spans: Sequence[Dict[str, Any]]) -> List[Dict[str, Any]]:
     """Spans (any order) -> offset-ordered pages with recovered text.
 
     Spans sharing an offset keep their input order (``sorted`` is
-    stable); media_ref is set only on media-derived pages.
+    stable).
     """
-    pages = []
-    for span in sorted(spans, key=lambda s: s["offset"]):
-        text, conf = recover_span(span["kind"], span["text"], span["media_ref"])
-        pages.append({"text": text, "confidence": conf,
-                      "media_ref": (span["media_ref"]
-                                    if span["kind"] == "media" else None)})
-    return pages
+    return [recover_span(s["kind"], s["text"], s["media_ref"])
+            for s in sorted(spans, key=lambda s: s["offset"])]
 
 
 def rejected_quality_result(doc_id: str, n_spans: int,
@@ -176,29 +173,18 @@ def process_recovered(doc_id: str, pages: Sequence[Dict[str, Any]],
 def document_quality_report(spans: Sequence[Dict[str, Any]],
                             skip_quality_check: bool = False
                             ) -> Tuple[bool, List[str], List[str]]:
-    """Gate on the FIRST media span's metrics only — decoded BEFORE any
-    other recovery work (cheap-first; the reference renders only page 1 at
-    reduced dpi for the same reason, backend/image_quality_checker.py:245).
+    """Gate on the FIRST media page's metrics only (page order; a missing
+    or unreadable ref fails) — decoded BEFORE any other recovery work
+    (cheap-first; the reference renders only page 1 at reduced dpi for the
+    same reason, backend/image_quality_checker.py:245).
     -> (passed, issues, warnings) — the full Q5 surface.
     """
-    if skip_quality_check:
+    media = [s for s in spans if s["kind"] == "media"]
+    if skip_quality_check or not media:
         return True, [], []
-    first_ref = None
-    first_key = None
-    for s in spans:
-        if s["kind"] != "media":
-            continue
-        ref = s["media_ref"]
-        # duplicate offsets tie-break by (offset, media_ref) nulls-first,
-        # so the choice never depends on span order: ingest rejects
-        # duplicate offsets (every lake job and the stream commit run it),
-        # but a direct run_pipeline caller can skip ingest
-        key = (s["offset"], 0 if ref is None else 1, ref or "")
-        if first_key is None or key < first_key:
-            first_key, first_ref = key, ref
-    if first_ref is None:
-        return True, [], []  # born-digital document: nothing to gate on
-    _text, _conf, qc = decode_media_ref(first_ref)
+    # min, like recover_pages' sort, keeps input order among equal offsets
+    _text, _conf, qc = decode_media_ref(
+        min(media, key=lambda s: s["offset"])["media_ref"])
     passed, _score, issues, warnings = quality_report(**qc)
     return passed, issues, warnings
 

@@ -66,10 +66,11 @@ def run(spark: SparkSession, input_path: str, lake_root: str,
         lake.bucket_col().isin([int(b) for b in pending]))
     with L.extracted(docs, lake, skip_quality_check=skip_quality_check,
                      forced_type=document_type) as tables:
-        # rejects, results, fields_long: bucketed dynamic overwrite
+        # bucketed dynamic overwrite: rejects, results, then fields_long
         for table, df in tables.items():
             L.write_bucketed(df, lake, table)
         results = tables[L.RESULTS]
+        L.write_bucketed(L.bucketed_fields(lake, results), lake, L.FIELDS_LONG)
         wall = time.perf_counter() - t0
         L.append(L.bucket_metrics(results, run_id, wall), lake, L.METRICS)
         # checkpoint LAST: a crash before this line replays the buckets

@@ -10,9 +10,10 @@ cost a full re-extraction.  This job closes the loop on
 2. only ``added`` + ``changed`` documents run the shared extraction
    routine ``lake.extracted`` (the expensive Arrow stages see 0.5% of
    the corpus, not 100%);
-3. each of its tables (rejects, results, fields_long) commits through
+3. each of its tables (rejects, results) commits through
    ``lake.merge_bucketed``, which rewrites ONLY the buckets holding
-   touched ids — the parquet stand-in for ``MERGE INTO``;
+   touched ids — the parquet stand-in for ``MERGE INTO`` — and re-derives
+   fields_long in the touched buckets from the merged results;
 4. ``removed`` ids cascade out of results/fields/rejects in the same
    merge — the S8 delete semantics applied set-wise.
 
@@ -44,9 +45,7 @@ def span_payload(docs: DataFrame) -> DataFrame:
 
 
 def incremental_extract(spark: SparkSession, lake: L.Lake,
-                        old_docs: DataFrame, new_docs: DataFrame,
-                        skip_quality_check: bool = False,
-                        forced_type: str | None = None) -> dict:
+                        old_docs: DataFrame, new_docs: DataFrame) -> dict:
     """Apply snapshot ``new_docs`` to a lake currently holding the full
     extraction of ``old_docs``.  Returns the diff census + work report.
     """
@@ -66,8 +65,8 @@ def incremental_extract(spark: SparkSession, lake: L.Lake,
                    stale.withColumn("bucket", lake.bucket_col())
                    .select("bucket").distinct().collect()]
         todo = diff.filter(F.col("status").isin("added", "changed"))
-        with L.extracted(new_docs.join(todo, "doc_id", "left_semi"), lake,
-                         skip_quality_check, forced_type) as tables:
+        with L.extracted(new_docs.join(todo, "doc_id", "left_semi"),
+                         lake) as tables:
             for table, fresh in tables.items():
                 L.merge_bucketed(lake, table, fresh, stale, touched)
             results = tables[L.RESULTS]

@@ -16,10 +16,11 @@ Implements the north-rule job-control contract (SURVEY.md §4.2):
   never loses it.  ``pending = claimed − checkpointed`` is the resume set.
 
 Each rule is written once, here: ``extracted`` (validate → extract →
-bucket → fields_long) for the batch, incremental and streaming jobs,
+bucket) for the batch, incremental and streaming jobs, ``bucketed_fields``
+for every fields_long row (so it never disagrees with results),
 ``_overwrite_partitions`` for every dynamic overwrite, ``merge_bucketed``
-for re-drives, deletes and stream compaction, and ``read_table`` for
-every read.
+for re-drives, deletes, corrections and stream compaction, and
+``read_table`` for every read.
 
 On a cluster with an Iceberg catalog the same protocol maps 1:1:
 ``CREATE TABLE … PARTITIONED BY (bucket(N, doc_id))``, ``MERGE INTO`` for
@@ -57,14 +58,13 @@ REJECTS = "rejects"
 # streaming surface: its OWN tables, partitioned (ingest_batch, bucket), so
 # at-least-once micro-batch replays overwrite their own partitions instead
 # of appending duplicates, and batch/stream writers never mix directory
-# layouts under one table path.  compact_stream folds results_stream and
-# fields_long_stream into the main tables through merge_bucketed.
+# layouts under one table path.  compact_stream folds results_stream into
+# results through merge_bucketed, which re-derives fields_long.
 STREAM_RESULTS = "results_stream"
-STREAM_FIELDS = "fields_long_stream"
 STREAM_REJECTS = "rejects_stream"
 STREAM_METRICS = "metrics_stream"
 STREAM = {REJECTS: STREAM_REJECTS, RESULTS: STREAM_RESULTS,
-          FIELDS_LONG: STREAM_FIELDS, METRICS: STREAM_METRICS}
+          METRICS: STREAM_METRICS}
 
 # Declared table schemas.  Every lake read goes through read_table with
 # these, so an empty table (a partitioned write of zero rows leaves no data
@@ -148,7 +148,7 @@ def pending_buckets(spark: SparkSession, lake: Lake,
 def extracted(docs: DataFrame, lake: Lake, skip_quality_check: bool = False,
               forced_type: str | None = None) -> Iterator[Dict[str, DataFrame]]:
     """Validate and extract ``docs(doc_id, spans)`` once; yield the frames
-    to commit, each with ``bucket``: ``{REJECTS, RESULTS, FIELDS_LONG}``.
+    to commit, each with ``bucket``: ``{REJECTS, RESULTS}``.
 
     ``results`` stays persisted until exit, so fields_long and metrics
     reuse it instead of re-running the UDF stages.  No Spark action runs
@@ -161,11 +161,14 @@ def extracted(docs: DataFrame, lake: Lake, skip_quality_check: bool = False,
     try:
         yield {REJECTS: rejects.select("doc_id", "reject_reason")
                .withColumn("bucket", lake.bucket_col()),
-               RESULTS: results,
-               FIELDS_LONG: fields_long(results)
-               .withColumn("bucket", lake.bucket_col())}
+               RESULTS: results}
     finally:
         results.unpersist()
+
+
+def bucketed_fields(lake: Lake, results: DataFrame) -> DataFrame:
+    """``pipeline.fields_long(results)``, each row in its doc's bucket."""
+    return fields_long(results).withColumn("bucket", lake.bucket_col())
 
 
 def _overwrite_partitions(df: DataFrame, path: str,
@@ -191,7 +194,8 @@ def merge_bucketed(lake: Lake, table: str, fresh: DataFrame,
     hold every ``fresh`` row), the rows of ``stale_ids(doc_id)`` give way
     to ``fresh`` and the others stay.  A touched bucket the merge empties
     is dropped: dynamic overwrite cannot delete a partition it writes no
-    rows to.  An absent table is created from ``fresh``."""
+    rows to.  An absent table is created from ``fresh``.  A merge into
+    results re-derives fields_long in the touched buckets."""
     spark = fresh.sparkSession
     main = read_table(spark, lake, table)
     merged = fresh if main is None else (
@@ -200,13 +204,20 @@ def merge_bucketed(lake: Lake, table: str, fresh: DataFrame,
         .unionByName(fresh))
     merged = merged.persist()
     try:
-        present = {r["bucket"] for r in
-                   merged.select("bucket").distinct().collect()}
-        # every row has a bucket, so no bucket means no rows to write
-        if present:
-            write_bucketed(merged, lake, table)
-        for b in set(touched) - present:
-            _delete_partition_dir(spark, f"{lake.path(table)}/bucket={b}")
+        writes = [(table, merged)]
+        # fields_long first: ``merged`` reads the results table it
+        # replaces, and once that path is written Spark recomputes every
+        # persisted frame reading it from the NEW files
+        if table == RESULTS:
+            writes.insert(0, (FIELDS_LONG, bucketed_fields(lake, merged)))
+        for name, df in writes:
+            present = {r["bucket"]
+                       for r in df.select("bucket").distinct().collect()}
+            # every row has a bucket, so no bucket means no rows to write
+            if present:
+                write_bucketed(df, lake, name)
+            for b in set(touched) - present:
+                _delete_partition_dir(spark, f"{lake.path(name)}/bucket={b}")
     finally:
         merged.unpersist()
 
@@ -250,39 +261,40 @@ def apply_field_corrections(spark: SparkSession, lake: Lake,
                             corrections: DataFrame) -> int:
     """S9 manual field update (backend/main_v1.py:349-370) as a MERGE.
 
-    ``corrections(doc_id, field_name, new_value)`` updates matching rows of
-    fields_long.  Parquet stand-in for ``MERGE INTO lake.fields_long USING
-    corrections ON (doc_id, field_name) WHEN MATCHED THEN UPDATE``: only the
-    buckets containing corrected documents are rewritten (dynamic partition
-    overwrite), everything else is untouched — same touched-partition cost
-    profile as Iceberg's copy-on-write MERGE.
+    ``corrections(doc_id, field_name, new_value)`` sets the ``value`` of
+    matching ``results.fields`` elements (``out_spans`` keeps what the
+    extraction emitted).  Parquet stand-in for ``MERGE INTO lake.results
+    USING corrections ON doc_id WHEN MATCHED THEN UPDATE``: only the
+    buckets containing corrected documents are rewritten (merge_bucketed),
+    everything else is untouched — same touched-partition cost profile as
+    Iceberg's copy-on-write MERGE.  Returns the number of touched buckets.
 
     MERGE semantics (like SQL MERGE, where duplicate source keys are an
     error): corrections are deduplicated per (doc_id, field_name) —
-    ``max(new_value)`` keeps the deterministic non-null winner — so a
-    duplicated source row can never fan out extra fields_long rows, and an
-    explicit NULL ``new_value`` CLEARS the field (match flag, not
-    coalesce).
+    ``max(new_value)`` keeps the deterministic non-null winner — and an
+    explicit NULL ``new_value`` CLEARS the field (match, not coalesce).
+    A field the document lacks, or a NULL ``field_name``, matches nothing.
     """
-    corr = (corrections
+    corr = (corrections.filter(F.col("field_name").isNotNull())
             .groupBy("doc_id", "field_name")
-            .agg(F.max("new_value").alias("__new"))
-            .withColumn("bucket", lake.bucket_col())
-            .withColumn("__matched", F.lit(True)))
+            .agg(F.max("new_value").alias("new_value"))
+            .groupBy("doc_id")
+            .agg(F.map_from_entries(F.collect_list(
+                F.struct("field_name", "new_value"))).alias("__new"))
+            .withColumn("bucket", lake.bucket_col()))
     buckets = [r["bucket"] for r in corr.select("bucket").distinct().collect()]
-    fl = read_table(spark, lake, FIELDS_LONG)
-    if not buckets or fl is None:
+    results = read_table(spark, lake, RESULTS)
+    if not buckets or results is None:
         return 0
-    updated = (fl.filter(F.col("bucket").isin(buckets))
-               .join(F.broadcast(corr.select("doc_id", "field_name",
-                                             "__new", "__matched")),
-                     ["doc_id", "field_name"], "left")
-               .withColumn("field_value",
-                           F.when(F.col("__matched").isNotNull(),
-                                  F.col("__new"))
-                           .otherwise(F.col("field_value")))
-               .drop("__new", "__matched"))
-    write_bucketed(updated, lake, FIELDS_LONG)
+    new = F.col("__new")
+    fresh = (results.filter(F.col("bucket").isin(buckets))
+             .join(F.broadcast(corr.drop("bucket")), "doc_id")
+             .withColumn("fields", F.transform("fields", lambda f: f.withField(
+                 "value", F.when(F.map_contains_key(new, f["name"]),
+                                 F.element_at(new, f["name"]))
+                 .otherwise(f["value"]))))
+             .drop("__new"))
+    merge_bucketed(lake, RESULTS, fresh, corr.select("doc_id"), buckets)
     return len(buckets)
 
 
@@ -323,22 +335,21 @@ def delete_document(spark: SparkSession, lake: Lake, doc_id: str) -> None:
     the scan partition-prunes to that one directory instead of reading the
     full table to discover where the doc lives.
     """
-    stale = spark.createDataFrame([(doc_id,)], "doc_id string")
-    touched = [doc_bucket(spark, lake, doc_id)]
-    for table in (RESULTS, FIELDS_LONG):
-        merge_bucketed(lake, table, spark.createDataFrame([], SCHEMAS[table]),
-                       stale, touched)
+    merge_bucketed(lake, RESULTS,
+                   spark.createDataFrame([], SCHEMAS[RESULTS]),
+                   spark.createDataFrame([(doc_id,)], "doc_id string"),
+                   [doc_bucket(spark, lake, doc_id)])
 
 
 def compact_stream(spark: SparkSession, lake: Lake) -> dict:
     """Fold the streaming surface into the main lake tables.
 
-    For every doc in results_stream, its LATEST micro-batch rows win: the
+    For every doc in results_stream, its LATEST micro-batch row wins: the
     parquet stand-in for ``MERGE INTO lake.results USING results_stream ON
-    doc_id`` (and the same for fields_long), followed by truncating the
-    staging tables.  Only buckets that streamed data are rewritten.
-    Idempotent: a crash after a main write but before the stream clear
-    re-merges the same rows.
+    doc_id`` (``merge_bucketed`` re-derives fields_long), followed by
+    truncating the staging table.  Only buckets that streamed data are
+    rewritten.  Idempotent: a crash after a main write but before the
+    stream clear re-merges the same rows.
     """
     stream = read_table(spark, lake, STREAM_RESULTS)
     if stream is None:
@@ -349,16 +360,9 @@ def compact_stream(spark: SparkSession, lake: Lake) -> dict:
     buckets = [r["bucket"]
                for r in stream.select("bucket").distinct().collect()]
 
-    for table in (RESULTS, FIELDS_LONG):
-        staged = read_table(spark, lake, STREAM[table])
-        if staged is None:  # a crash between the committer's writes
-            staged = spark.createDataFrame([], SCHEMAS[STREAM[table]])
-        fresh = (staged.join(latest, ["doc_id", "ingest_batch"])
-                 .drop("ingest_batch"))
-        merge_bucketed(lake, table, fresh, latest.select("doc_id"), buckets)
-
-    for table in (RESULTS, FIELDS_LONG):
-        _delete_partition_dir(spark, lake.path(STREAM[table]))
+    fresh = stream.join(latest, ["doc_id", "ingest_batch"]).drop("ingest_batch")
+    merge_bucketed(lake, RESULTS, fresh, latest.select("doc_id"), buckets)
+    _delete_partition_dir(spark, lake.path(STREAM_RESULTS))
     return {"docs": n_docs, "buckets": len(buckets)}
 
 

@@ -103,6 +103,7 @@ GATE_TYPE = StructType([
 RECOVERED_TYPE = StructType([
     StructField("text", StringType()),
     StructField("confidence", DoubleType()),
+    StructField("media_ref", StringType()),
 ])
 
 
@@ -287,7 +288,6 @@ def recover_and_regroup(docs: DataFrame) -> DataFrame:
         F.col("span").isNotNull().alias("is_span"),
         F.col("span.offset").alias("offset"),
         "span_idx",
-        F.col("span.media_ref").alias("media_ref"),
         recover_spans(F.col("span.kind"), F.col("span.text"),
                       F.col("span.media_ref")).alias("rec"),
     )
@@ -297,7 +297,7 @@ def recover_and_regroup(docs: DataFrame) -> DataFrame:
         F.col("offset"),
         F.col("span_idx"),
         F.col("rec.text").alias("text"),
-        F.col("media_ref"),
+        F.col("rec.media_ref").alias("media_ref"),
         F.col("rec.confidence").alias("confidence"),
     ))
     return rec.groupBy("doc_id").agg(

@@ -9,7 +9,7 @@ terminal.  These operators give the engine that continuous-ingest form:
   source (files arriving in a lake directory), micro-batch at a time via
   ``foreachBatch``; each micro-batch runs the batch job's own extraction
   routine (``jobs/lake.extracted``: ingest validation, the skew-split
-  pipeline, fields_long) unchanged, and commits are idempotent
+  pipeline) unchanged, and commits are idempotent
   (ingest_batch, bucket)-partitioned dynamic overwrites into the lake's
   dedicated streaming tables.
 * ``dedup_ingest``     — ``dropDuplicatesWithinWatermark`` over doc_id for
@@ -175,7 +175,7 @@ def dedup_ingest(docs: DataFrame, within: str = "30 minutes",
 
 
 def extract_stream(spark, docs_path: str, lake_root: str, n_buckets: int,
-                   checkpoint_dir: str, schema=None,
+                   checkpoint_dir: str,
                    dedup_within: str | None = "30 minutes"):
     """Continuous extraction over a docs directory: each micro-batch runs
     the unchanged batch pipeline (ingest validation included — rejects are
@@ -187,13 +187,13 @@ def extract_stream(spark, docs_path: str, lake_root: str, n_buckets: int,
     at-least-once replay of a micro-batch rewrites its own partitions to
     the same bytes instead of appending duplicates.  Per-batch lineage rows
     land in metrics_stream the same way, so the status CLI sees streamed
-    documents.
+    documents.  No fields_long is staged: compact_stream derives it.
     """
     from ..pipeline import DOCS_SCHEMA
     from ..jobs import lake as L
 
     lake = L.Lake(lake_root, n_buckets)
-    stream = (spark.readStream.schema(schema or DOCS_SCHEMA)
+    stream = (spark.readStream.schema(DOCS_SCHEMA)
               .option("maxFilesPerTrigger", 8)
               .parquet(docs_path))
     if dedup_within:

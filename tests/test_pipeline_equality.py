@@ -73,23 +73,11 @@ def test_quality_surface_equality(spark_results, corpus):
     assert seen_warn > 0 and seen_issue > 0  # corpus exercises both channels
 
 
-def test_native_gate_messages_match_oracle(spark):
-    """Force the heavy-path gate on hand-built warn/fail docs of every QC
-    variant, plus the inputs a second gate implementation got wrong or
-    could get wrong, and compare messages, status and out_spans to the
-    pure report:
-
-    * blur=12.25 — '%.1f' of the exact binary value rounds half-even to
-      12.2 (a Java format_string rounds half-up to 12.3);
-    * spans out of offset order with two media spans sharing the lowest
-      offset, one with a null media_ref (the (offset, media_ref)
-      nulls-first tie-break picks the null one: nothing to gate on, so the
-      rotated sibling's warning must NOT appear, nor the blurry span's
-      failure at offset 5, which comes first in the array);
-    * a heavy born-digital doc with no media span."""
+def _gate_docs():
+    """Hand-built heavy docs (8 spans each) for the gate tests; see
+    test_native_gate_messages_match_oracle for what each one pins."""
     from ocr_documents_spark.extractors.media import encode_media_ref
     from ocr_documents_spark.fixtures.gen import QC_FAILS, QC_GOOD, QC_WARNS
-    from ocr_documents_spark.pipeline import DOCS_SCHEMA, run_pipeline
 
     def media(doc_id, off, qc):
         return ("media", None,
@@ -115,22 +103,76 @@ def test_native_gate_messages_match_oracle(spark):
     docs.append(("born_digital", [
         ("text", f"INVOICE line {off}\nInvoice No: {off}", None, off)
         for off in range(8)]))
+    docs.append(("stray_refs", [media("stray_refs", 0, QC_GOOD)] + [
+        ("text", f"INVOICE\nInvoice No: {off}\nTotal: 10.00",
+         f"stray-ref-{off}", off) for off in range(1, 8)]))
+    docs.append(("null_ref_first", [("media", None, None, 0)] + [
+        media("null_ref_first", off, QC_GOOD) for off in range(1, 8)]))
+    return docs
+
+
+def _compare_to_oracle(spark, docs, heavy_threshold, skip_quality_check):
+    """run_pipeline over ``docs`` -> its rows by doc_id, after asserting
+    every doc's messages, status and out_spans equal the pure report's."""
+    from ocr_documents_spark.pipeline import DOCS_SCHEMA, run_pipeline
+
     df = spark.createDataFrame(docs, DOCS_SCHEMA)
-    got = {r["doc_id"]: r
-           for r in run_pipeline(df, heavy_threshold=4).collect()}
+    got = {r["doc_id"]: r for r in run_pipeline(
+        df, skip_quality_check=skip_quality_check,
+        heavy_threshold=heavy_threshold).collect()}
     assert len(got) == len(docs)
     for doc_id, spans in docs:
         golden = process_document(
             doc_id, [{"kind": k, "text": t, "media_ref": m, "offset": o}
-                     for (k, t, m, o) in spans])
+                     for (k, t, m, o) in spans],
+            skip_quality_check=skip_quality_check)
         assert list(got[doc_id]["quality_issues"]) == golden["quality_issues"], doc_id
         assert list(got[doc_id]["quality_warnings"]) == golden["quality_warnings"], doc_id
         assert got[doc_id]["status"] == golden["status"]
         assert [(s["kind"], s["text"], s["media_ref"], s["order"])
                 for s in got[doc_id]["out_spans"]] == golden["out_spans"], doc_id
-    assert "Image is blurry (score: 12.2)" in got["qc008"]["quality_issues"][0]
-    assert got["unordered"]["status"] != "rejected_quality"
-    assert list(got["unordered"]["quality_warnings"]) == []
+    return got
+
+
+def test_native_gate_messages_match_oracle(spark):
+    """Run hand-built warn/fail docs of every QC variant, plus the inputs
+    a second gate implementation got wrong or could get wrong, through
+    both plans (heavy_threshold=4 forces the heavy-path gate) and compare
+    messages, status and out_spans to the pure report:
+
+    * blur=12.25 — '%.1f' of the exact binary value rounds half-even to
+      12.2 (a Java format_string rounds half-up to 12.3);
+    * spans out of offset order with two media spans sharing the lowest
+      offset, the rotated one first in the array and then one with a
+      null media_ref: the gate reads the first media page in page order
+      (stable offset order), so the rotated span's warning appears, and
+      the blurry span's failure at offset 5, first in the array, does not;
+    * a heavy born-digital doc with no media span;
+    * text spans carrying a stray media_ref: their raw_text pages keep
+      no ref on the heavy plan either;
+    * a first media page with a null media_ref: unreadable, so it fails
+      the gate like any bad image."""
+    for heavy_threshold in (None, 4):
+        got = _compare_to_oracle(spark, _gate_docs(), heavy_threshold,
+                                 skip_quality_check=False)
+        assert "Image is blurry (score: 12.2)" in got["qc008"]["quality_issues"][0]
+        assert got["unordered"]["status"] != "rejected_quality"
+        assert list(got["unordered"]["quality_warnings"]) == [
+            "Document appears rotated by 7.3°. This may affect extraction "
+            "accuracy."]
+        assert got["null_ref_first"]["status"] == "rejected_quality"
+
+
+@pytest.mark.parametrize("heavy_threshold", [None, 4],
+                         ids=["auto-direct", "forced-salt"])
+def test_skip_quality_check_matches_oracle(spark, heavy_threshold):
+    """Q7 skip switch: with ``skip_quality_check`` no document is gated,
+    on either plan, and every result equals the oracle's."""
+    got = _compare_to_oracle(spark, _gate_docs(), heavy_threshold,
+                             skip_quality_check=True)
+    assert all(r["status"] != "rejected_quality" for r in got.values())
+    assert all(not r["quality_issues"] and not r["quality_warnings"]
+               for r in got.values())
 
 
 def test_fields_long_explode(spark, spark_results):

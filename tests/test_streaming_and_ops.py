@@ -271,7 +271,7 @@ def test_extract_stream_matches_batch(spark, tmp_path):
 def test_stream_commit_replay_is_idempotent(spark, tmp_path):
     """foreachBatch is at-least-once: replaying the SAME micro-batch must
     rewrite its (ingest_batch, bucket) partitions, never duplicate rows —
-    in results, fields, and the metrics sidecar alike."""
+    in results and the metrics sidecar alike."""
     from ocr_documents_spark.pipeline import DOCS_SCHEMA
     from ocr_documents_spark.streaming.sessionize import stream_committer
 
@@ -281,10 +281,10 @@ def test_stream_commit_replay_is_idempotent(spark, tmp_path):
     commit = stream_committer(lake)
     commit(df, 7)
     counts1 = {t: spark.read.parquet(lake.path(t)).count()
-               for t in (L.STREAM_RESULTS, L.STREAM_FIELDS, L.STREAM_METRICS)}
+               for t in (L.STREAM_RESULTS, L.STREAM_METRICS)}
     commit(df, 7)  # replay
     counts2 = {t: spark.read.parquet(lake.path(t)).count()
-               for t in (L.STREAM_RESULTS, L.STREAM_FIELDS, L.STREAM_METRICS)}
+               for t in (L.STREAM_RESULTS, L.STREAM_METRICS)}
     assert counts1 == counts2
     assert counts1[L.STREAM_RESULTS] == 20
     res = spark.read.parquet(lake.path(L.STREAM_RESULTS))
@@ -311,7 +311,7 @@ def test_compact_stream_merges_into_main_lake(spark, tmp_path):
     docs = generate_docs(35)[25:]
     df = spark.createDataFrame(docs, DOCS_SCHEMA)
     stream_committer(lake)(df, 0)
-    for t in (L.STREAM_RESULTS, L.STREAM_FIELDS, L.STREAM_METRICS):
+    for t in (L.STREAM_RESULTS, L.STREAM_METRICS):
         assert _types(spark.read.parquet(lake.path(t)).schema) \
             == _types(L.SCHEMAS[t])
 
@@ -403,7 +403,21 @@ def small_lake(spark, tmp_path_factory):
     return L.Lake(root, 4)
 
 
+def _fields_of_results(spark, lake):
+    """fields_long as the explode of results.fields: sorted row tuples."""
+    from ocr_documents_spark.pipeline import fields_long
+    return sorted((tuple(r) for r in fields_long(
+        L.read_table(spark, lake, L.RESULTS)).collect()), key=repr)
+
+
+def _fields_long_rows(spark, lake):
+    return sorted((tuple(r) for r in L.read_table(spark, lake, L.FIELDS_LONG)
+                   .drop("bucket").collect()), key=repr)
+
+
 def test_field_correction_merge(spark, small_lake):
+    """A correction lands in results.fields and fields_long alike, and a
+    second correction in the same bucket keeps the first one in both."""
     fl = spark.read.parquet(small_lake.path(L.FIELDS_LONG))
     victim = fl.filter(fl.field_value.isNotNull()).first()
     corrections = spark.createDataFrame(
@@ -419,6 +433,21 @@ def test_field_correction_merge(spark, small_lake):
         (after.doc_id == victim["doc_id"])
         & (after.field_name == victim["field_name"])).collect()
     assert [r["field_value"] for r in updated] == ["CORRECTED_VALUE"]
+    assert _fields_long_rows(spark, small_lake) \
+        == _fields_of_results(spark, small_lake)
+
+    # a second doc in the same bucket: the first correction survives
+    second = after.filter((after.bucket == victim["bucket"])
+                          & (after.doc_id != victim["doc_id"])).first()
+    assert L.apply_field_corrections(spark, small_lake, spark.createDataFrame(
+        [(second["doc_id"], second["field_name"], "SECOND_VALUE")],
+        "doc_id string, field_name string, new_value string")) == 1
+    rows = _fields_long_rows(spark, small_lake)
+    assert rows == _fields_of_results(spark, small_lake)
+    assert len(rows) == n_before
+    values = {(r[0], r[2]): r[3] for r in rows}
+    assert values[(victim["doc_id"], victim["field_name"])] == "CORRECTED_VALUE"
+    assert values[(second["doc_id"], second["field_name"])] == "SECOND_VALUE"
 
 
 def test_field_correction_null_clears_and_duplicates_collapse(spark, small_lake):
