@@ -266,8 +266,8 @@ def extract_main_content(raw_html: str) -> Dict[str, object]:
 
 def html_to_page_text(raw_html: str) -> str:
     """html span -> recovered page text: content blocks joined with
-    newlines, so downstream line-oriented extractors (MRZ, key-value
-    mining) see the same line structure a text span would carry."""
+    newlines, so the line-oriented extractors (MRZ, label lookups) see
+    the same line structure a text span would carry."""
     return "\n".join(extract_main_content(raw_html)["content_blocks"])
 
 

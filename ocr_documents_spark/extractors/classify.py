@@ -19,7 +19,8 @@ Two rule-based classifiers, matching the reference's scoring semantics:
 
 Rule tables are data; patterns are pre-compiled once at import so executor
 processes pay the compile cost a single time (mirrors the reference's
-singleton classifiers, and is the right shape for SCALAR pandas UDFs).
+singleton classifiers; the Spark pipeline calls classify_enhanced once per
+document inside its ``mapInArrow`` stage).
 
 The scoring surface is a term-frequency dot product with binary weights —
 the "rules-plus-TF-IDF" classifier named by the north star.

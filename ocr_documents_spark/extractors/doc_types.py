@@ -4,11 +4,14 @@ Every function is pure ``text -> {field: {value, confidence, source}}`` and
 preserves the reference's dict-insertion order, confidence constants, and
 regex/state-machine semantics — these are the per-row invariant that the
 Spark pipeline must reproduce span-for-span.  File:line citations point into
-/root/reference/.
+the reference implementation.
 
-Two dispatch targets in the reference do not exist at runtime
+Three dispatch targets in the reference do not exist at runtime
 (LABOR_CONTRACT, PURCHASE_ORDER, and INVOICE live only as intended code —
 SURVEY.md §0.1.1); we implement the intended logic and note it per function.
+
+Shared idioms: ``_first`` (an ordered cascade that stops at its first match),
+``_label_value`` (visit-visa label lookup) and the invoice field tables.
 """
 
 from __future__ import annotations
@@ -16,7 +19,7 @@ from __future__ import annotations
 import json
 import re
 from datetime import datetime, timedelta
-from typing import Dict, List, Optional, Tuple
+from typing import Callable, Dict, List, Optional, Tuple
 
 from .fields_generic import extract_config_fallback
 from .registry import FALLBACK_FIELD_PATTERNS
@@ -29,6 +32,15 @@ _ARABIC = re.compile(r"[؀-ۿ]+")
 
 def _field(value, conf: float, source: str) -> Dict:
     return {"value": value, "confidence": conf, "source": source}
+
+
+def _first(text: str, patterns, flags: int = 0) -> Optional[re.Match]:
+    """The first match of an ordered pattern cascade, else None."""
+    for pat in patterns:
+        m = re.search(pat, text, flags)
+        if m:
+            return m
+    return None
 
 
 # ---------------------------------------------------------------------------
@@ -253,17 +265,16 @@ def _number_in_range(text: str, lo: int, hi: int) -> Optional[str]:
 
 
 def _labor_expiry(text: str) -> Optional[str]:
-    for pat in _LABOR_DATE_PATTERNS:
-        m = pat.search(text)
-        if m:
-            ds = m.group(1)
-            for fmt in ("%d/%m/%Y", "%Y/%m/%d", "%d-%m-%Y", "%Y-%m-%d", "%d %b %Y"):
-                try:
-                    return _fmt_dmy(datetime.strptime(ds, fmt))
-                except Exception:
-                    continue
-            return ds
-    return None
+    m = _first(text, _LABOR_DATE_PATTERNS)
+    if not m:
+        return None
+    ds = m.group(1)
+    for fmt in ("%d/%m/%Y", "%Y/%m/%d", "%d-%m-%Y", "%Y-%m-%d", "%d %b %Y"):
+        try:
+            return _fmt_dmy(datetime.strptime(ds, fmt))
+        except Exception:
+            continue
+    return ds
 
 
 def _labor_profession(text: str) -> Optional[str]:
@@ -301,11 +312,9 @@ def _labor_nationality(text: str) -> Optional[str]:
 
 
 def _labor_establishment(text: str) -> Optional[str]:
-    for pat in _ESTABLISHMENT_PATTERNS:
-        m = pat.search(text)
-        if m:
-            company = m.group(1) if m.lastindex == 1 else m.group(0)
-            return _ESTABLISHMENT_LABEL.sub("", company).strip().upper()
+    m = _first(text, _ESTABLISHMENT_PATTERNS)
+    if m:
+        return _ESTABLISHMENT_LABEL.sub("", m.group(1)).strip().upper()
     lower = text.lower()
     if "llc" in lower or "l.l.c" in lower:
         m = re.search(r"([A-Z][A-Za-z\s&\-]{5,50}(?:LLC|L\.L\.C))", text, _I)
@@ -363,12 +372,10 @@ def extract_residence_visa(text: str) -> Dict:
         if m:
             out["uid_number"] = _field(m.group(1), 85.0, "VISA_OCR")
 
-    for pat in (r"(?:File|FILE)\s*[:\s]*(\d{3}/\d{4}/\d+)",
-                r"(\d{3}/\d{4}/\d+)", r"(\d{3}/\d{4})"):
-        m = re.search(pat, text)
-        if m:
-            out["file_number"] = _field(m.group(1), 90.0, "VISA_OCR")
-            break
+    m = _first(text, (r"(?:File|FILE)\s*[:\s]*(\d{3}/\d{4}/\d+)",
+                      r"(\d{3}/\d{4}/\d+)", r"(\d{3}/\d{4})"))
+    if m:
+        out["file_number"] = _field(m.group(1), 90.0, "VISA_OCR")
 
     candidates = []
     for name in re.findall(r"\b([A-Z\s]{15,})\b", text):
@@ -468,16 +475,10 @@ def extract_emirates_id(text: str) -> Dict:
             out["nationality"] = _field(country.title(), 90.0, "EMIRATES_OCR")
             break
 
-    for pat in (r"\b([MF])\b", r"(?:Sex)[:\s]*([MF]+)"):
-        m = re.search(pat, text, _I)
-        if m:
-            sex = m.group(1).upper()
-            if sex == "M":
-                out["gender"] = _field("Male", 85.0, "EMIRATES_OCR")
-                break
-            if sex == "F":
-                out["gender"] = _field("Female", 85.0, "EMIRATES_OCR")
-                break
+    m = _first(text, (r"\b([MF])\b", r"(?:Sex)[:\s]*([MF]+)"), _I)
+    gender = {"M": "Male", "F": "Female"}.get(m.group(1).upper()) if m else None
+    if gender:
+        out["gender"] = _field(gender, 85.0, "EMIRATES_OCR")
     return out
 
 
@@ -499,6 +500,23 @@ def _label_or_next(lines: List[str], idx: int, pattern: str,
         m = re.search(pattern, lines[idx + 1])
         if m:
             return m.group(), conf_next
+    return None
+
+
+def _label_value(lines: List[str], is_label: Callable[[str], bool],
+                 conf_here: float, conf_next: float) -> Optional[Tuple[str, float]]:
+    """Value after a label line's first colon, else the next line if it is
+    non-empty and digit-free; label lines are tried in order."""
+    for i, line in enumerate(lines):
+        if is_label(line.upper()):
+            if ":" in line:
+                value = line.split(":", 1)[1].strip()
+                if value:
+                    return value, conf_here
+            if i + 1 < len(lines):
+                nxt = lines[i + 1].strip()
+                if nxt and not any(c.isdigit() for c in nxt):
+                    return nxt, conf_next
     return None
 
 
@@ -565,33 +583,13 @@ def extract_visit_visa(text: str) -> Dict:
                     out["full_name"] = _field(nxt, 85.0, src)
                     break
 
-    for i, line in enumerate(lines):
-        u = line.upper()
-        if "NATIONALITY" in u or "CITIZEN" in u:
-            if ":" in line:
-                nat = line.split(":", 1)[1].strip()
-                if nat:
-                    out["nationality"] = _field(nat, 90.0, src)
-                    break
-            if i + 1 < len(lines):
-                nxt = lines[i + 1].strip()
-                if nxt and not any(c.isdigit() for c in nxt):
-                    out["nationality"] = _field(nxt, 88.0, src)
-                    break
+    hit = _label_value(lines, lambda u: "NATIONALITY" in u or "CITIZEN" in u, 90.0, 88.0)
+    if hit:
+        out["nationality"] = _field(*hit, src)
 
-    for i, line in enumerate(lines):
-        u = line.upper()
-        if "PLACE" in u and "BIRTH" in u:
-            if ":" in line:
-                place = line.split(":", 1)[1].strip()
-                if place:
-                    out["place_of_birth"] = _field(place, 88.0, src)
-                    break
-            if i + 1 < len(lines):
-                nxt = lines[i + 1].strip()
-                if nxt and not any(c.isdigit() for c in nxt):
-                    out["place_of_birth"] = _field(nxt, 85.0, src)
-                    break
+    hit = _label_value(lines, lambda u: "PLACE" in u and "BIRTH" in u, 88.0, 85.0)
+    if hit:
+        out["place_of_birth"] = _field(*hit, src)
 
     for line in lines:
         u = line.upper()
@@ -613,19 +611,10 @@ def extract_visit_visa(text: str) -> Dict:
                     out["passport_number"] = _field(m.group(1), 90.0, src)
                     break
 
-    for i, line in enumerate(lines):
-        u = line.upper()
-        if "PROFESSION" in u or "OCCUPATION" in u or "JOB" in u:
-            if ":" in line:
-                prof = line.split(":", 1)[1].strip()
-                if prof:
-                    out["profession"] = _field(prof, 85.0, src)
-                    break
-            if i + 1 < len(lines):
-                nxt = lines[i + 1].strip()
-                if nxt and not any(c.isdigit() for c in nxt):
-                    out["profession"] = _field(nxt, 82.0, src)
-                    break
+    hit = _label_value(
+        lines, lambda u: "PROFESSION" in u or "OCCUPATION" in u or "JOB" in u, 85.0, 82.0)
+    if hit:
+        out["profession"] = _field(*hit, src)
     return out
 
 
@@ -738,21 +727,17 @@ def extract_visa_cancellation(text: str) -> Dict:
                 out["full_name"] = _field(name.upper(), 85.0, src)
                 break
 
-    for pat in (r"passport\s*(?:no|number|#)?\s*[:\-]?\s*([A-Z0-9]{6,9})",
-                r"passport\s*([A-Z0-9]{6,9})",
-                r"([A-Z]{1,2}\d{6,8})"):
-        m = re.search(pat, text, _I)
-        if m:
-            out["passport_number"] = _field(m.group(1).upper(), 90.0, src)
-            break
+    m = _first(text, (r"passport\s*(?:no|number|#)?\s*[:\-]?\s*([A-Z0-9]{6,9})",
+                      r"passport\s*([A-Z0-9]{6,9})",
+                      r"([A-Z]{1,2}\d{6,8})"), _I)
+    if m:
+        out["passport_number"] = _field(m.group(1).upper(), 90.0, src)
 
-    for pat in (r"visa\s*(?:no|number|#)?\s*[:\-]?\s*(\d{10,15})",
-                r"residence\s*(?:no|number)?\s*[:\-]?\s*(\d{10,15})",
-                r"(?:visa|residence)\s*([0-9\/\-]{10,})"):
-        m = re.search(pat, text, _I)
-        if m:
-            out["visa_number"] = _field(m.group(1), 90.0, src)
-            break
+    m = _first(text, (r"visa\s*(?:no|number|#)?\s*[:\-]?\s*(\d{10,15})",
+                      r"residence\s*(?:no|number)?\s*[:\-]?\s*(\d{10,15})",
+                      r"(?:visa|residence)\s*([0-9\/\-]{10,})"), _I)
+    if m:
+        out["visa_number"] = _field(m.group(1), 90.0, src)
 
     lower = text.lower()
     for vt in ("employment", "dependent", "investor", "tourist", "residence", "partner"):
@@ -760,28 +745,22 @@ def extract_visa_cancellation(text: str) -> Dict:
             out["visa_type"] = _field(vt.upper(), 85.0, src)
             break
 
-    for pat in (r"sponsor\s*(?:id|number)?\s*[:\-]?\s*(\d{10,15})",
-                r"establishment\s*(?:id|card)?\s*[:\-]?\s*(\d{10,15})"):
-        m = re.search(pat, text, _I)
-        if m:
-            out["sponsor_id"] = _field(m.group(1), 85.0, src)
-            break
+    m = _first(text, (r"sponsor\s*(?:id|number)?\s*[:\-]?\s*(\d{10,15})",
+                      r"establishment\s*(?:id|card)?\s*[:\-]?\s*(\d{10,15})"), _I)
+    if m:
+        out["sponsor_id"] = _field(m.group(1), 85.0, src)
 
-    for pat in (r"sponsor\s*name\s*[:\-]?\s*([A-Z][A-Za-z\s&\.\-]{5,100})",
-                r"sponsor\s*[:\-]?\s*([A-Z][A-Za-z\s&\.\-]{5,100})"):
-        m = re.search(pat, text, _I)
-        if m:
-            s_name = re.split(r"\s{2,}|\t|\|", m.group(1).strip())[0]
-            out["sponsor_name"] = _field(s_name.upper(), 80.0, src)
-            break
+    m = _first(text, (r"sponsor\s*name\s*[:\-]?\s*([A-Z][A-Za-z\s&\.\-]{5,100})",
+                      r"sponsor\s*[:\-]?\s*([A-Z][A-Za-z\s&\.\-]{5,100})"), _I)
+    if m:
+        s_name = re.split(r"\s{2,}|\t|\|", m.group(1).strip())[0]
+        out["sponsor_name"] = _field(s_name.upper(), 80.0, src)
 
-    for pat in (r"cancellation\s*(?:no|number|ref|reference)?\s*[:\-]?\s*([A-Z0-9\-\/]+)",
-                r"reference\s*(?:no|number)?\s*[:\-]?\s*([A-Z0-9\-\/]+)",
-                r"transaction\s*(?:no|number)?\s*[:\-]?\s*([A-Z0-9\-\/]+)"):
-        m = re.search(pat, text, _I)
-        if m:
-            out["cancellation_ref"] = _field(m.group(1), 85.0, src)
-            break
+    m = _first(text, (r"cancellation\s*(?:no|number|ref|reference)?\s*[:\-]?\s*([A-Z0-9\-\/]+)",
+                      r"reference\s*(?:no|number)?\s*[:\-]?\s*([A-Z0-9\-\/]+)",
+                      r"transaction\s*(?:no|number)?\s*[:\-]?\s*([A-Z0-9\-\/]+)"), _I)
+    if m:
+        out["cancellation_ref"] = _field(m.group(1), 85.0, src)
 
     m = re.search(r"nationality\s*[:\-]?\s*([A-Za-z\s]+)", text, _I)
     if m:
@@ -1012,73 +991,53 @@ def _invoice_line_item_count(text: str) -> int:
     return count
 
 
+# Single-pattern fields, (field, pattern, flags, confidence, format), applied
+# in output order; the value is group 1, stripped, then formatted.
+_INVOICE_HEAD = [
+    ("invoice_number", r"(?:invoice\s*(?:number|no|#)|inv\s*(?:no|#))[:\s]*([A-Z0-9\-/]+)", _I, 90.0, "{}"),
+    ("invoice_date", r"(?:invoice\s*date|date)[:\s]*(\d{1,2}[/-]\d{1,2}[/-]\d{2,4}|\d{4}[/-]\d{1,2}[/-]\d{1,2})", _I, 88.0, "{}"),
+    ("due_date", r"(?:due\s*date|payment\s*due)[:\s]*(\d{1,2}[/-]\d{1,2}[/-]\d{2,4}|\d{4}[/-]\d{1,2}[/-]\d{1,2})", _I, 88.0, "{}"),
+    ("invoice_type", r"(tax\s*invoice|proforma\s*invoice|credit\s*note|debit\s*note|commercial\s*invoice)", _I, 92.0, "{}"),
+]
+_INVOICE_AMOUNTS = [
+    ("currency", r"\b(USD|EUR|GBP|INR|AUD|CAD|SGD|JPY|CNY|AED)\b", 0, 95.0, "{}"),
+    ("subtotal", r"(?:subtotal|sub\s*total)[:\s]*([₹$€£¥]?\s*[\d,]+\.?\d*)", _I, 88.0, "{}"),
+    ("tax_amount", r"(?:tax|vat|gst)[:\s]*([₹$€£¥]?\s*[\d,]+\.?\d*)", _I, 88.0, "{}"),
+    ("tax_rate", r"(?:tax|vat|gst).*?(\d+(?:\.\d+)?)\s*%", _I, 90.0, "{}%"),
+    ("grand_total", r"(?:grand\s*total|total\s*amount|net\s*total|total)[:\s]*([₹$€£¥]?\s*[\d,]+\.?\d*)", _I, 90.0, "{}"),
+    ("payment_terms", r"(?:payment\s*terms|terms)[:\s]*(net\s*\d+|due\s*on\s*receipt|[^.\n]{5,50})", _I, 80.0, "{}"),
+    ("po_number", r"(?:PO|purchase\s*order)[:\s#]*([A-Z0-9\-/]+)", _I, 88.0, "{}"),
+]
+_INVOICE_NOTES = [
+    ("notes", r"(?:notes?|remarks?|comments?)[:\s]*([^\n]{10,200})", _I, 75.0, "{}"),
+]
+# Ordinal pairs, (supplier_field, customer_field, pattern, flags, confidence):
+# the first match is the supplier's, the second the customer's.
+_INVOICE_PAIRS = [
+    ("supplier_tax_id", "customer_tax_id", r"(?:GST|VAT|TIN|TAX\s*ID)[:\s]*([A-Z0-9]{8,15})", _I, 85.0),
+    ("supplier_email", "customer_email", r"\b([a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,})\b", 0, 90.0),
+    ("supplier_phone", "customer_phone", r"(?:phone|tel|mobile|contact)[:\s]*([+\d\s\-\(\)]{10,20})", _I, 85.0),
+]
+
+
+def _invoice_fields(text: str, rows, out: Dict, src: str) -> None:
+    for field, pattern, flags, conf, fmt in rows:
+        m = re.search(pattern, text, flags)
+        if m:
+            out[field] = _field(fmt.format(m.group(1).strip()), conf, src)
+
+
 def extract_invoice(text: str) -> Dict:
     out: Dict[str, Dict] = {}
     src = "INVOICE_OCR"
+    _invoice_fields(text, _INVOICE_HEAD, out, src)
 
-    m = re.search(r"(?:invoice\s*(?:number|no|#)|inv\s*(?:no|#))[:\s]*([A-Z0-9\-/]+)", text, _I)
-    if m:
-        out["invoice_number"] = _field(m.group(1).strip(), 90.0, src)
+    for supplier_field, customer_field, pattern, flags, conf in _INVOICE_PAIRS:
+        values = re.findall(pattern, text, flags)[:2]
+        for field, value in zip((supplier_field, customer_field), values):
+            out[field] = _field(value.strip(), conf, src)
 
-    m = re.search(r"(?:invoice\s*date|date)[:\s]*(\d{1,2}[/-]\d{1,2}[/-]\d{2,4}|\d{4}[/-]\d{1,2}[/-]\d{1,2})", text, _I)
-    if m:
-        out["invoice_date"] = _field(m.group(1), 88.0, src)
-
-    m = re.search(r"(?:due\s*date|payment\s*due)[:\s]*(\d{1,2}[/-]\d{1,2}[/-]\d{2,4}|\d{4}[/-]\d{1,2}[/-]\d{1,2})", text, _I)
-    if m:
-        out["due_date"] = _field(m.group(1), 88.0, src)
-
-    m = re.search(r"(tax\s*invoice|proforma\s*invoice|credit\s*note|debit\s*note|commercial\s*invoice)", text, _I)
-    if m:
-        out["invoice_type"] = _field(m.group(1), 92.0, src)
-
-    # ordinal assignment: first tax-id/email/phone -> supplier, second -> customer
-    tax_ids = [m.group(1).strip() for m in
-               re.finditer(r"(?:GST|VAT|TIN|TAX\s*ID)[:\s]*([A-Z0-9]{8,15})", text, _I)]
-    if tax_ids:
-        out["supplier_tax_id"] = _field(tax_ids[0], 85.0, src)
-    if len(tax_ids) > 1:
-        out["customer_tax_id"] = _field(tax_ids[1], 85.0, src)
-
-    emails = re.findall(r"\b([a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,})\b", text)
-    if emails:
-        out["supplier_email"] = _field(emails[0], 90.0, src)
-    if len(emails) > 1:
-        out["customer_email"] = _field(emails[1], 90.0, src)
-
-    phones = re.findall(r"(?:phone|tel|mobile|contact)[:\s]*([+\d\s\-\(\)]{10,20})", text, _I)
-    if phones:
-        out["supplier_phone"] = _field(phones[0].strip(), 85.0, src)
-    if len(phones) > 1:
-        out["customer_phone"] = _field(phones[1].strip(), 85.0, src)
-
-    m = re.search(r"\b(USD|EUR|GBP|INR|AUD|CAD|SGD|JPY|CNY|AED)\b", text)
-    if m:
-        out["currency"] = _field(m.group(1), 95.0, src)
-
-    m = re.search(r"(?:subtotal|sub\s*total)[:\s]*([₹$€£¥]?\s*[\d,]+\.?\d*)", text, _I)
-    if m:
-        out["subtotal"] = _field(m.group(1).strip(), 88.0, src)
-
-    m = re.search(r"(?:tax|vat|gst)[:\s]*([₹$€£¥]?\s*[\d,]+\.?\d*)", text, _I)
-    if m:
-        out["tax_amount"] = _field(m.group(1).strip(), 88.0, src)
-
-    m = re.search(r"(?:tax|vat|gst).*?(\d+(?:\.\d+)?)\s*%", text, _I)
-    if m:
-        out["tax_rate"] = _field(m.group(1) + "%", 90.0, src)
-
-    m = re.search(r"(?:grand\s*total|total\s*amount|net\s*total|total)[:\s]*([₹$€£¥]?\s*[\d,]+\.?\d*)", text, _I)
-    if m:
-        out["grand_total"] = _field(m.group(1).strip(), 90.0, src)
-
-    m = re.search(r"(?:payment\s*terms|terms)[:\s]*(net\s*\d+|due\s*on\s*receipt|[^.\n]{5,50})", text, _I)
-    if m:
-        out["payment_terms"] = _field(m.group(1).strip(), 80.0, src)
-
-    m = re.search(r"(?:PO|purchase\s*order)[:\s#]*([A-Z0-9\-/]+)", text, _I)
-    if m:
-        out["po_number"] = _field(m.group(1).strip(), 88.0, src)
+    _invoice_fields(text, _INVOICE_AMOUNTS, out, src)
 
     supplier_sec, customer_sec = _invoice_sections(text)
     name = _invoice_company_name(supplier_sec)
@@ -1098,9 +1057,7 @@ def extract_invoice(text: str) -> Dict:
     if bank:
         out["bank_details"] = _field(json.dumps(bank), 85.0, src)
 
-    m = re.search(r"(?:notes?|remarks?|comments?)[:\s]*([^\n]{10,200})", text, _I)
-    if m:
-        out["notes"] = _field(m.group(1).strip(), 75.0, src)
+    _invoice_fields(text, _INVOICE_NOTES, out, src)
 
     n_items = _invoice_line_item_count(text)
     if n_items > 0:

@@ -2,8 +2,10 @@
 
 Pure text functions; Python ``re`` semantics are part of the per-row
 invariant (lazy quantifiers, lookaheads, IGNORECASE|MULTILINE|DOTALL combos),
-which is why the Spark side runs these same functions inside Arrow-batched
-pandas UDFs instead of translating them to Java regex.
+which is why the Spark pipeline runs these same functions inside its
+``mapInArrow`` stage instead of translating them to Java regex.
+``mine_key_value_pairs`` (F2) runs on no pipeline path; only its unit test
+calls it.
 """
 
 from __future__ import annotations

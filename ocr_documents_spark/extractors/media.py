@@ -41,6 +41,10 @@ MEDIA_REF_PREFIX = "m:"
 # salted skew path can be DEMONSTRATED, not just asserted — see
 # tools/skew_demo.py.  0 (default) = the pure deterministic decoder.
 _SIM_OCR_MS = float(os.environ.get("SPARK_GRAFT_SIMULATED_OCR_MS", "0"))
+# the seam's cost per decode_media_ref call, ms: the deterministic decoder
+# (~0.05 ms) plus the simulated latency; pipeline.auto_heavy_threshold
+# splits the plan on it
+DECODE_MS = 0.05 + _SIM_OCR_MS
 
 # QC metrics of an unreadable media payload (fails every gate); also the
 # value of each key a payload's qc lacks.

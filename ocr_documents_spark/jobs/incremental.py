@@ -13,7 +13,8 @@ cost a full re-extraction.  This job closes the loop on
 3. each of its tables (rejects, results) commits through
    ``lake.merge_bucketed``, which rewrites ONLY the buckets holding
    touched ids — the parquet stand-in for ``MERGE INTO`` — and re-derives
-   fields_long in the touched buckets from the merged results;
+   fields_long and each touched bucket's metrics census from the merged
+   results;
 4. ``removed`` ids cascade out of results/fields/rejects in the same
    merge — the S8 delete semantics applied set-wise.
 
@@ -49,7 +50,6 @@ def incremental_extract(spark: SparkSession, lake: L.Lake,
     """Apply snapshot ``new_docs`` to a lake currently holding the full
     extraction of ``old_docs``.  Returns the diff census + work report.
     """
-    run_id = L.new_run_id()
     t0 = time.perf_counter()
 
     diff = snapshot_diff(span_payload(old_docs),
@@ -69,13 +69,10 @@ def incremental_extract(spark: SparkSession, lake: L.Lake,
                          lake) as tables:
             for table, fresh in tables.items():
                 L.merge_bucketed(lake, table, fresh, stale, touched)
-            results = tables[L.RESULTS]
-            wall = time.perf_counter() - t0
-            L.append(L.bucket_metrics(results, run_id, wall), lake, L.METRICS)
-            return {"run_id": run_id, **census,
-                    "n_processed": results.count(),
+            return {**census,
+                    "n_processed": tables[L.RESULTS].count(),
                     "n_buckets_touched": len(touched),
-                    "wall_s": round(wall, 3)}
+                    "wall_s": round(time.perf_counter() - t0, 3)}
     finally:
         stale.unpersist()
         diff.unpersist()

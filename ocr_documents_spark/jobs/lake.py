@@ -41,7 +41,7 @@ from contextlib import contextmanager
 from dataclasses import dataclass
 from typing import Dict, Iterator, List, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (DoubleType, IntegerType, LongType,
                                StringType, StructField, StructType)
@@ -195,7 +195,10 @@ def merge_bucketed(lake: Lake, table: str, fresh: DataFrame,
     to ``fresh`` and the others stay.  A touched bucket the merge empties
     is dropped: dynamic overwrite cannot delete a partition it writes no
     rows to.  An absent table is created from ``fresh``.  A merge into
-    results re-derives fields_long in the touched buckets."""
+    results re-derives fields_long in the touched buckets and appends a
+    metrics row per touched bucket (all zero for an emptied one), so the
+    latest row of every bucket stays its census."""
+    t0 = time.perf_counter()
     spark = fresh.sparkSession
     main = read_table(spark, lake, table)
     merged = fresh if main is None else (
@@ -205,11 +208,13 @@ def merge_bucketed(lake: Lake, table: str, fresh: DataFrame,
     merged = merged.persist()
     try:
         writes = [(table, merged)]
-        # fields_long first: ``merged`` reads the results table it
-        # replaces, and once that path is written Spark recomputes every
-        # persisted frame reading it from the NEW files
+        # fields_long and the census first: ``merged`` reads the results
+        # table it replaces, and once that path is written Spark recomputes
+        # every persisted frame reading it from the NEW files
         if table == RESULTS:
             writes.insert(0, (FIELDS_LONG, bucketed_fields(lake, merged)))
+            census = {r["bucket"]: r for r in
+                      bucket_metrics(merged, "", 0.0).collect()}
         for name, df in writes:
             present = {r["bucket"]
                        for r in df.select("bucket").distinct().collect()}
@@ -218,8 +223,27 @@ def merge_bucketed(lake: Lake, table: str, fresh: DataFrame,
                 write_bucketed(df, lake, name)
             for b in set(touched) - present:
                 _delete_partition_dir(spark, f"{lake.path(name)}/bucket={b}")
+        if table == RESULTS:
+            _append_census(spark, lake, census, touched,
+                           time.perf_counter() - t0)
     finally:
         merged.unpersist()
+
+
+def _append_census(spark: SparkSession, lake: Lake, census: Dict[int, Row],
+                   touched: Sequence[int], wall_s: float) -> None:
+    """Append one metrics row per touched bucket: its ``bucket_metrics``
+    row from ``census``, or all zeros when the merge emptied it."""
+    names = SCHEMAS[METRICS].fieldNames()
+    empty = {**dict.fromkeys(names, 0), "avg_confidence": None}
+    run_id, now = new_run_id(), time.time()
+    rows = []
+    for b in sorted({int(b) for b in touched}):
+        row = census[b].asDict() if b in census else dict(empty)
+        row.update(bucket=b, run_id=run_id, run_wall_s=wall_s,
+                   committed_at=now)
+        rows.append(tuple(row[c] for c in names))
+    append(spark.createDataFrame(rows, SCHEMAS[METRICS]), lake, METRICS)
 
 
 def bucket_metrics(results_with_bucket: DataFrame, run_id: str,

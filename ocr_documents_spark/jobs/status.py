@@ -50,6 +50,10 @@ def summarize(spark: SparkSession, lake_root: str, n_buckets: int) -> dict:
     sm = L.read_table(spark, lake, L.STREAM_METRICS)
     out["streamed_docs"] = (
         0 if sm is None else int(sm.agg(F.sum("n_docs")).first()[0] or 0))
+    # compaction folds only results_stream: staged ingest rejects (which
+    # may lack a doc_id to merge on) are counted where they lie
+    sr = L.read_table(spark, lake, L.STREAM_REJECTS)
+    out["streamed_rejected_malformed"] = 0 if sr is None else sr.count()
     return out
 
 

@@ -24,11 +24,11 @@ runs.
   over the skewed ~1%.
 
 Scale design (SURVEY.md §4.2):
-* At production scale the input Iceberg table carries a ``size_class``
-  ingest partition so each branch's filter partition-prunes to a disjoint
-  scan (net one pass over the data).  On a raw parquet table the
-  ``size(spans)`` filters evaluate post-scan; heavy docs are ~1% so the
-  extra heavy-branch scan is skip-heavy.
+* The split comes from the decoder's per-span cost
+  (``auto_heavy_threshold``).  Below ``NO_SALT_CUTOFF`` each branch is
+  its own filtered scan of the input, the ``size(spans)`` filters
+  evaluating post-scan (heavy docs are ~1%, so the heavy-branch scan is
+  skip-heavy); at or above it the plan is the single direct scan.
 * The regroup is a hash aggregation on doc_id whose per-group state is
   bounded by the per-doc span cap, so it partial-aggregates map-side.
 * Only the reassembly is native Catalyst; every Python stage is
@@ -47,6 +47,7 @@ from pyspark.sql.types import (ArrayType, BooleanType, DoubleType,
                                IntegerType, StringType, StructField,
                                StructType)
 
+from .extractors.media import DECODE_MS
 from .extractors.pipeline_pure import (document_quality_report,
                                        process_document, process_recovered,
                                        recover_span, rejected_quality_result)
@@ -114,14 +115,10 @@ RECOVERED_TYPE = StructType([
 # doc would pin one task for 7-70 min) and wrong when recovery is cheap
 # (the deterministic decoder: ~0.05ms/span — the same doc is 0.2s of work,
 # far less than the shuffles cost).  The threshold therefore derives from
-# the configured per-span recovery cost: salt only documents whose SERIAL
-# recovery would exceed the target task time.  Deployments running a real
-# OCR engine set SPARK_GRAFT_RECOVER_MS_PER_SPAN=300 (or their measured
-# cost) and media-heavy docs fan out exactly as SURVEY.md §4.2 describes.
-import os as _os
-
-RECOVER_MS_PER_SPAN = float(
-    _os.environ.get("SPARK_GRAFT_RECOVER_MS_PER_SPAN", "0.05"))
+# the per-span cost of the decoder that runs (media.DECODE_MS): salt only
+# documents whose SERIAL recovery would exceed the target task time.  A
+# real OCR engine behind the seam declares its own cost there, and
+# media-heavy docs fan out exactly as SURVEY.md §4.2 describes.
 TARGET_TASK_SECONDS = 5.0
 # floor of the cost-model split: a document this short never pays the two
 # shuffles, however dear its spans are
@@ -135,9 +132,9 @@ HEAVY_SPAN_THRESHOLD = 64
 NO_SALT_CUTOFF = 32768
 
 
-def auto_heavy_threshold(ms_per_span: float = None) -> int:
-    ms = RECOVER_MS_PER_SPAN if ms_per_span is None else ms_per_span
-    return max(HEAVY_SPAN_THRESHOLD, int(TARGET_TASK_SECONDS * 1000.0 / ms))
+def auto_heavy_threshold(ms_per_span: float = DECODE_MS) -> int:
+    return max(HEAVY_SPAN_THRESHOLD,
+               int(TARGET_TASK_SECONDS * 1000.0 / ms_per_span))
 
 
 def _append_result(rows: dict, r: dict) -> None:

@@ -12,6 +12,7 @@ from ocr_documents_spark.fixtures.gen import generate_docs
 from ocr_documents_spark.jobs import extract as job
 from ocr_documents_spark.jobs import incremental as I
 from ocr_documents_spark.jobs import lake as L
+from ocr_documents_spark.jobs.status import summarize
 from ocr_documents_spark.pipeline import DOCS_SCHEMA
 
 N_BUCKETS = 4
@@ -81,6 +82,14 @@ def test_incremental_equals_full_reextraction(spark, snapshots, tmp_path):
     # the emptied bucket's directory is gone, not just empty
     assert not L._path_exists(
         spark, f"{inc_lake.path(L.RESULTS)}/bucket={victim_bucket}")
+    # the status census (latest metrics row per bucket) matches too
+    keys = ("docs", "completed", "partial", "rejected_quality",
+            "rejected_classification", "fields")
+
+    def census(lake):
+        s = summarize(spark, lake.root, N_BUCKETS)
+        return {k: s[k] for k in keys}
+    assert census(inc_lake) == census(full_lake)
 
 
 def test_reapply_is_idempotent(spark, snapshots, tmp_path):

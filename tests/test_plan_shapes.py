@@ -89,6 +89,21 @@ def test_pipeline_default_plan_is_single_scan_no_shuffle(spark):
     assert exchange_count(run_pipeline(docs)) == 0  # cheap decode -> direct
 
 
+def test_plan_split_follows_the_decoder_cost():
+    """The default split reads the decode seam's own per-span cost: a
+    300 ms decoder salts every document over the 64-span floor."""
+    import os
+    import subprocess
+    import sys
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", "from ocr_documents_spark.pipeline import "
+         "auto_heavy_threshold; print(auto_heavy_threshold())"],
+        cwd=root, env=dict(os.environ, SPARK_GRAFT_SIMULATED_OCR_MS="300"),
+        capture_output=True, text=True, check=True)
+    assert out.stdout.split() == ["64"]
+
+
 def test_pipeline_forced_salt_has_exactly_two_shuffles(spark):
     from ocr_documents_spark.fixtures.gen import generate_docs
     from ocr_documents_spark.pipeline import DOCS_SCHEMA, run_pipeline

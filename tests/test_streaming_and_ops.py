@@ -236,8 +236,8 @@ def test_lake_status_absent_vs_unreadable(spark, tmp_path):
     from ocr_documents_spark.jobs.status import summarize
     root = str(tmp_path / "lake")
     s = summarize(spark, root, 4)
-    assert (s["metrics"], s["rejected_malformed"], s["streamed_docs"]) \
-        == ("none", 0, 0)
+    assert (s["metrics"], s["rejected_malformed"], s["streamed_docs"],
+            s["streamed_rejected_malformed"]) == ("none", 0, 0, 0)
     os.makedirs(os.path.join(root, L.METRICS))
     with open(os.path.join(root, L.METRICS, "part-00000.parquet"), "wb") as f:
         f.write(b"not a parquet file")
@@ -271,12 +271,13 @@ def test_extract_stream_matches_batch(spark, tmp_path):
 def test_stream_commit_replay_is_idempotent(spark, tmp_path):
     """foreachBatch is at-least-once: replaying the SAME micro-batch must
     rewrite its (ingest_batch, bucket) partitions, never duplicate rows —
-    in results and the metrics sidecar alike."""
+    in results, the metrics sidecar and the staged rejects alike."""
+    from ocr_documents_spark.jobs.status import summarize
     from ocr_documents_spark.pipeline import DOCS_SCHEMA
     from ocr_documents_spark.streaming.sessionize import stream_committer
 
     lake = L.Lake(str(tmp_path / "slake"), 4)
-    docs = generate_docs(20)
+    docs = generate_docs(20) + [{"doc_id": "malformed-1", "spans": []}]
     df = spark.createDataFrame(docs, DOCS_SCHEMA)
     commit = stream_committer(lake)
     commit(df, 7)
@@ -289,6 +290,7 @@ def test_stream_commit_replay_is_idempotent(spark, tmp_path):
     assert counts1[L.STREAM_RESULTS] == 20
     res = spark.read.parquet(lake.path(L.STREAM_RESULTS))
     assert res.select("doc_id").distinct().count() == 20
+    assert summarize(spark, lake.root, 4)["streamed_rejected_malformed"] == 1
 
 
 def test_compact_stream_merges_into_main_lake(spark, tmp_path):
@@ -493,6 +495,8 @@ def test_delete_sole_document_in_bucket(spark, tmp_path):
     after = spark.read.parquet(lake.path(L.RESULTS))
     assert after.filter(f"doc_id = '{victim}'").count() == 0
     assert after.count() == 5  # other buckets untouched
+    from ocr_documents_spark.jobs.status import summarize
+    assert summarize(spark, root, 16)["docs"] == 5
 
 
 def test_delete_document_cascades(spark, small_lake):

@@ -10,8 +10,9 @@ the demo uses a modest value so it runs in seconds).
 Two runs of the identical job:
 * direct plan (heavy_threshold above the doc): the heavy doc's recovery is
   serial inside one task -> wall ~= SPANS x cost.
-* salted plan (cost model with the simulated cost): spans fan out across
-  all cores -> wall ~= SPANS x cost / cores + shuffle overhead.
+* salted plan (heavy_threshold 64, and 16 for the warm-up pass, passed
+  explicitly): spans fan out across all cores -> wall ~= SPANS x cost /
+  cores + shuffle overhead.
 
 Usage: python tools/skew_demo.py [spans] [cost_ms]
 """
@@ -30,8 +31,8 @@ COST_MS = float(sys.argv[2]) if len(sys.argv) > 2 else 2.0
 
 
 def measure(salted: bool) -> float:
-    """Run in a subprocess so the env-derived decode cost and plan choice
-    are fresh per measurement."""
+    """Run in a subprocess so the env-derived decode cost is fresh per
+    measurement."""
     code = f"""
 import time, random, sys
 sys.path.insert(0, {os.path.dirname(os.path.dirname(os.path.abspath(__file__)))!r})
