@@ -17,10 +17,12 @@ Two rule-based classifiers, matching the reference's scoring semantics:
   confidence = min(100, score) then x0.7 when the gap to the runner-up is
   under 10.  UNKNOWN when stripped text is under 10 chars or all scores 0.
 
-Rule tables are data; patterns are pre-compiled once at import so executor
-processes pay the compile cost a single time (mirrors the reference's
-singleton classifiers; the Spark pipeline calls classify_enhanced once per
-document inside its ``mapInArrow`` stage).
+Rule tables are data; every case-insensitive pattern is compiled once at
+import, as written and as its lower-case twin (extractors/casefold.py).
+``classify_enhanced`` searches the twins over ``text.lower()`` when the
+text is ASCII, and the exact ``re.I`` patterns otherwise; both give the
+same ``(type, confidence)``.  The Spark pipeline calls it once per
+document inside its ``mapInArrow`` stage.
 
 The scoring surface is a term-frequency dot product with binary weights —
 the "rules-plus-TF-IDF" classifier named by the north star.
@@ -30,6 +32,8 @@ from __future__ import annotations
 
 import re
 from typing import Optional, Tuple
+
+from .casefold import Twin
 
 _I = re.IGNORECASE
 
@@ -144,14 +148,15 @@ ENHANCED_RULES: dict[str, tuple[list[str], list[str], list[str], float, float]] 
     ),
 }
 
-# Pre-compiled view: type -> (mandatory[], exclusions[], strong[], weak[], weight, req)
-_ENH_COMPILED = [
+# type -> (mandatory[], exclusions[], strong[], weak[], weight, req), each
+# pattern a Twin; _ENH_EXACT and _ENH_FAST hold its two compiled forms
+_ENH_TWINS = [
     (
         dt,
-        [re.compile(p, _I) for p in mand],
-        [re.compile(p, _I) for p in ENHANCED_EXCLUSIONS.get(dt, [])],
-        [re.compile(p, _I) for p in strong],
-        [re.compile(p, _I) for p in weak],
+        [Twin(p, _I) for p in mand],
+        [Twin(p, _I) for p in ENHANCED_EXCLUSIONS.get(dt, [])],
+        [Twin(p, _I) for p in strong],
+        [Twin(p, _I) for p in weak],
         weight,
         req,
     )
@@ -159,13 +164,27 @@ _ENH_COMPILED = [
 ]
 
 
+def _enh_compiled(form: str) -> list:
+    return [(dt, *([getattr(t, form) for t in group] for group in groups), weight, req)
+            for dt, *groups, weight, req in _ENH_TWINS]
+
+
+_ENH_EXACT = _enh_compiled("exact")
+_ENH_FAST = _enh_compiled("fast")
+
+
 def classify_enhanced(text: Optional[str]) -> Tuple[str, float]:
     """Live classifier; returns (document_type, confidence 0-100)."""
     if not text or len(text.strip()) < 20:
         return "UNKNOWN", 0.0
 
+    # the ASCII fast path: the twins over the lowered text
+    if text.isascii():
+        rules, text = _ENH_FAST, text.lower()
+    else:
+        rules = _ENH_EXACT
     scores: dict[str, float] = {}
-    for dt, mandatory, exclusions, strong, weak, weight, required in _ENH_COMPILED:
+    for dt, mandatory, exclusions, strong, weak, weight, required in rules:
         if not any(p.search(text) for p in mandatory):
             scores[dt] = 0.0
             continue

@@ -12,15 +12,29 @@ SURVEY.md §0.1.1); we implement the intended logic and note it per function.
 
 Shared idioms: ``_first`` (an ordered cascade that stops at its first match),
 ``_label_value`` (visit-visa label lookup) and the invoice field tables.
+
+Every pattern is compiled once at import.  Each case-insensitive one is a
+``casefold.Twin``: on ASCII text the extractor lowers the text once
+(``low``), searches the lower-case twins over it and cuts every value from
+the original text by the match's span (``cut``); on non-ASCII text
+(``low`` is None) the exact ``re.I`` patterns run.  No pattern backtracks
+quadratically over a long run of letters or spaces: those that did are
+written to try one start per run, with the same matches
+(``_ESTABLISHMENT_PATTERNS``, ``_LETTER_RUN``, ``_RV_SPONSOR_PATTERNS``,
+``_EMAIL_AT_RUN``, ``_partner_rows``), and the members-table row is
+scanned by ``_member_rows``.
 """
 
 from __future__ import annotations
 
 import json
 import re
+from bisect import bisect_right
 from datetime import datetime, timedelta
-from typing import Callable, Dict, List, Optional, Tuple
+from itertools import islice
+from typing import Callable, Dict, Iterator, List, Optional, Tuple
 
+from .casefold import Twin, cut, fold
 from .fields_generic import extract_config_fallback
 from .registry import FALLBACK_FIELD_PATTERNS
 
@@ -34,10 +48,10 @@ def _field(value, conf: float, source: str) -> Dict:
     return {"value": value, "confidence": conf, "source": source}
 
 
-def _first(text: str, patterns, flags: int = 0) -> Optional[re.Match]:
-    """The first match of an ordered pattern cascade, else None."""
+def _first(text: str, low: Optional[str], patterns) -> Optional[re.Match]:
+    """The first match of an ordered cascade of Twins, else None."""
     for pat in patterns:
-        m = re.search(pat, text, flags)
+        m = pat.search(text, low)
         if m:
             return m
     return None
@@ -58,8 +72,8 @@ _INDIAN_CITIES = [
 _MRZ_L2_HINT = re.compile(r"[A-Z0-9]{7,9}<")
 _MRZ_PPT = re.compile(r"([A-Z0-9]+)<")
 _ISSUE_DATE_PATTERNS = [
-    re.compile(r"issue.*?(\d{2}[/-]\d{2}[/-]\d{4})", _I),
-    re.compile(r"(\d{2}[/-]\d{2}[/-]20(?:1|2)\d)"),
+    Twin(r"issue.*?(\d{2}[/-]\d{2}[/-]\d{4})", _I),
+    Twin(r"(\d{2}[/-]\d{2}[/-]20(?:1|2)\d)"),
 ]  # :1463-1466
 
 _MONTH_ABBR = ["Jan", "Feb", "Mar", "Apr", "May", "Jun",
@@ -97,12 +111,13 @@ def find_mrz_lines(text_clean: str) -> Tuple[Optional[str], Optional[str]]:
     return line1, line2
 
 
-def _passport_issue_date(text: str, expiry: Optional[str]) -> Optional[str]:
+def _passport_issue_date(text: str, low: Optional[str],
+                         expiry: Optional[str]) -> Optional[str]:
     """Page-text issue date, else expiry - 10y + 1 day (:1460-1493)."""
     for pat in _ISSUE_DATE_PATTERNS:
-        m = pat.search(text)
+        m = pat.search(text, low)
         if m:
-            ds = m.group(1)
+            ds = cut(m, text)
             try:
                 fmt = "%d/%m/%Y" if "/" in ds else "%d-%m-%Y"
                 return _fmt_dmy(datetime.strptime(ds, fmt))
@@ -179,12 +194,12 @@ def extract_passport(text: str) -> Dict:
             if file_no and len(file_no) >= 8:
                 out["file_number"] = _field(file_no, 85.0, "MRZ")
 
-    issue = _passport_issue_date(
-        text, out.get("passport_expiry_date", {}).get("value"))
+    lower = text.lower()
+    issue = _passport_issue_date(text, lower if text.isascii() else None,
+                                 out.get("passport_expiry_date", {}).get("value"))
     if issue:
         out["passport_issue_date"] = _field(issue, 80.0, "PAGE_OCR")
 
-    lower = text.lower()
     for city in _INDIAN_CITIES:
         if city.lower() in lower:
             out["passport_issue_place"] = _field(city, 75.0, "PAGE_OCR")
@@ -205,7 +220,7 @@ _LABOR_NAME_BLACKLIST = [
     "labor", "establishment", "ministry", "emirates", "united", "arab",
     "government", "resources",
 ]
-_LABOR_NAME_LABEL = re.compile(r"Name\s*[:\.]?\s*([A-Za-z\s]+)(?:$|\n)", _I)
+_LABOR_NAME_LABEL = Twin(r"Name\s*[:\.]?\s*([A-Za-z\s]+)(?:$|\n)", _I)
 _LABOR_NAME_LINE = re.compile(r"[A-Za-z ]{5,80}")
 
 _ARABIC_PROFESSIONS = {
@@ -231,21 +246,39 @@ _ENGLISH_NATIONALITIES = {
     "egypt": "Egyptian", "jordan": "Jordanian", "sudan": "Sudanese",
 }  # :1378-1388
 _LABOR_DATE_PATTERNS = [
-    re.compile(r"(\d{2}[/-]\d{2}[/-]\d{4})"),
-    re.compile(r"(\d{4}[/-]\d{2}[/-]\d{2})"),
-    re.compile(r"(\d{2}\s[A-Z]{3}\s\d{4})"),
+    Twin(r"(\d{2}[/-]\d{2}[/-]\d{4})"),
+    Twin(r"(\d{4}[/-]\d{2}[/-]\d{2})"),
+    Twin(r"(\d{2}\s[A-Z]{3}\s\d{4})"),
 ]
+# The first pattern is ``([A-Z][A-Za-z\s&\-]+(?:LLC|L\.L\.C|LTD|LIMITED))``
+# tried only at the start of a run of its class: the match can start only
+# at a run's first letter, because a later letter of the same run reaches
+# a subset of the suffixes the first one reaches.  Tried at every letter,
+# each failing start scanned to the run's end (quadratic in the run).
 _ESTABLISHMENT_PATTERNS = [
-    re.compile(r"([A-Z][A-Za-z\s&\-]+(?:LLC|L\.L\.C|LTD|LIMITED))", _I),
-    re.compile(r"(?:Establishment|Company|Corporation)[\s:]+([A-Z][A-Za-z\s&\-]+)", _I),
+    Twin(r"(?<![A-Za-z\s&\-])[\s&\-]*+([A-Z][A-Za-z\s&\-]+(?:LLC|L\.L\.C|LTD|LIMITED))", _I),
+    Twin(r"(?:Establishment|Company|Corporation)[\s:]+([A-Z][A-Za-z\s&\-]+)", _I),
 ]
-_ESTABLISHMENT_LABEL = re.compile(r"establishment\s*:\s*", _I)
+_ESTABLISHMENT_LLC = Twin(r"([A-Z][A-Za-z\s&\-]{5,50}(?:LLC|L\.L\.C))", _I)
+_ESTABLISHMENT_LABEL = Twin(r"establishment\s*:\s*", _I)
+_WORK_PERMIT_NUMBER = re.compile(r"\b\d{8,11}\b")
+_PERSONAL_NUMBER = re.compile(r"\b\d{12,16}\b")
+_LABOR_PROFESSION = Twin(r"Profession\s*[:\.]?\s*([^\n]+)", _I)
+_PROFESSION_KEYWORDS = [
+    (kw, Twin(kw, _I))
+    for kw in ("manager", "engineer", "technician", "driver", "worker", "supervisor")]
+# A run of letters and spaces from its first word boundary to its last.
+# ``\b([A-Za-z ]*kw[A-Za-z ]*)\b`` matches exactly the first such run that
+# holds ``kw`` (its greedy ends reach both boundaries, and a later start in
+# a run reaches no more), but it retried every start inside a run without
+# ``kw``, each time scanning to the run's end.
+_LETTER_RUN = Twin(r"(?<![A-Za-z ])(?>[A-Za-z ]*?\b)([A-Za-z ]*)\b", _I)
 
 
-def _labor_name(text: str) -> Optional[str]:
-    m = _LABOR_NAME_LABEL.search(text)
+def _labor_name(text: str, low: Optional[str]) -> Optional[str]:
+    m = _LABOR_NAME_LABEL.search(text, low)
     if m:
-        cand = m.group(1).strip()
+        cand = cut(m, text).strip()
         if len(cand) > 3 and not any(k in cand.lower() for k in _LABOR_NAME_BLACKLIST):
             return cand.upper()
     lines = []
@@ -259,13 +292,8 @@ def _labor_name(text: str) -> Optional[str]:
     return lines[0].upper() if lines else None
 
 
-def _number_in_range(text: str, lo: int, hi: int) -> Optional[str]:
-    matches = re.findall(r"\b\d{%d,%d}\b" % (lo, hi), text)
-    return matches[0] if matches else None
-
-
 def _labor_expiry(text: str) -> Optional[str]:
-    m = _first(text, _LABOR_DATE_PATTERNS)
+    m = _first(text, None, _LABOR_DATE_PATTERNS)
     if not m:
         return None
     ds = m.group(1)
@@ -277,10 +305,10 @@ def _labor_expiry(text: str) -> Optional[str]:
     return ds
 
 
-def _labor_profession(text: str) -> Optional[str]:
-    m = re.search(r"Profession\s*[:\.]?\s*([^\n]+)", text, _I)
+def _labor_profession(text: str, lower: str, low: Optional[str]) -> Optional[str]:
+    m = _LABOR_PROFESSION.search(text, low)
     if m:
-        prof = m.group(1).strip()
+        prof = cut(m, text).strip()
         if len(prof) > 2:
             for ar, en in _ARABIC_PROFESSIONS.items():
                 if ar in prof:
@@ -289,61 +317,68 @@ def _labor_profession(text: str) -> Optional[str]:
     for ar, en in _ARABIC_PROFESSIONS.items():
         if ar in text:
             return en
-    lower = text.lower()
-    for kw in ("manager", "engineer", "technician", "driver", "worker", "supervisor"):
+    return _keyword_profession(lower, low)
+
+
+def _keyword_profession(lower: str, low: Optional[str]) -> Optional[str]:
+    """The first run of letters and spaces in ``lower`` holding a
+    profession keyword, per keyword in order.  The runs are searched in
+    ``lower`` on both paths, as the reference does; on the fast path
+    ``lower`` is ``low``."""
+    for kw, kw_pat in _PROFESSION_KEYWORDS:
         if kw in lower:
-            m = re.search(rf"\b([A-Za-z ]*{kw}[A-Za-z ]*)\b", lower, _I)
-            if m:
-                prof = m.group(1).strip()
-                if 3 <= len(prof) <= 40:
-                    return prof.title()
+            for m in _LETTER_RUN.finditer(lower, low):
+                run = m.group(1)
+                if kw_pat.search(run, None if low is None else run):
+                    prof = run.strip()
+                    if 3 <= len(prof) <= 40:
+                        return prof.title()
+                    break
     return None
 
 
-def _labor_nationality(text: str) -> Optional[str]:
+def _labor_nationality(text: str, lower: str) -> Optional[str]:
     for ar, en in _ARABIC_NATIONALITIES.items():
         if ar in text:
             return en
-    lower = text.lower()
     for country, nat in _ENGLISH_NATIONALITIES.items():
         if country in lower:
             return nat
     return None
 
 
-def _labor_establishment(text: str) -> Optional[str]:
-    m = _first(text, _ESTABLISHMENT_PATTERNS)
+def _labor_establishment(text: str, lower: str, low: Optional[str]) -> Optional[str]:
+    m = _first(text, low, _ESTABLISHMENT_PATTERNS)
+    if not m and ("llc" in lower or "l.l.c" in lower):
+        m = _ESTABLISHMENT_LLC.search(text, low)
     if m:
-        return _ESTABLISHMENT_LABEL.sub("", m.group(1)).strip().upper()
-    lower = text.lower()
-    if "llc" in lower or "l.l.c" in lower:
-        m = re.search(r"([A-Z][A-Za-z\s&\-]{5,50}(?:LLC|L\.L\.C))", text, _I)
-        if m:
-            return _ESTABLISHMENT_LABEL.sub("", m.group(1)).strip().upper()
+        return _ESTABLISHMENT_LABEL.exact.sub("", cut(m, text)).strip().upper()
     return None
 
 
 def extract_labor_card(text: str) -> Dict:
     out: Dict[str, Dict] = {}
-    name = _labor_name(text)
+    lower = text.lower()
+    low = lower if text.isascii() else None
+    name = _labor_name(text, low)
     if name:
         out["full_name"] = _field(name, 85.0, "LABOR_OCR")
-    wp = _number_in_range(text, 8, 11)
-    if wp:
-        out["work_permit_number"] = _field(wp, 90.0, "LABOR_OCR")
-    pn = _number_in_range(text, 12, 16)
-    if pn:
-        out["personal_number"] = _field(pn, 90.0, "LABOR_OCR")
+    m = _WORK_PERMIT_NUMBER.search(text)
+    if m:
+        out["work_permit_number"] = _field(m.group(), 90.0, "LABOR_OCR")
+    m = _PERSONAL_NUMBER.search(text)
+    if m:
+        out["personal_number"] = _field(m.group(), 90.0, "LABOR_OCR")
     exp = _labor_expiry(text)
     if exp:
         out["expiry_date"] = _field(exp, 85.0, "LABOR_OCR")
-    prof = _labor_profession(text)
+    prof = _labor_profession(text, lower, low)
     if prof:
         out["profession"] = _field(prof, 80.0, "LABOR_OCR")
-    nat = _labor_nationality(text)
+    nat = _labor_nationality(text, lower)
     if nat:
         out["nationality"] = _field(nat, 85.0, "LABOR_OCR")
-    est = _labor_establishment(text)
+    est = _labor_establishment(text, lower, low)
     if est:
         out["company_name"] = _field(est, 80.0, "LABOR_OCR")
     return out
@@ -359,26 +394,48 @@ _UAE_CITIES = ["DUBAI", "ABU DHABI", "SHARJAH", "AJMAN", "RAS AL KHAIMAH",
                "FUJAIRAH", "UMM AL QUWAIN"]
 _RV_PROF_KEYWORDS = ["ENGINEER", "MUHREM", "NOT ALLOWED", "ALLOWED TO WORK",
                      "MANAGER", "ACCOUNTANT", "DOCTOR", "TECHNICIAN"]
+_RV_PROF_PATTERNS = [
+    (kw, re.compile(rf"([A-Z\s]*{kw}[A-Z\s]*?)(?=\s*(?:[A-Z]{{2,}}\s[A-Z]{{2,}}|$))"))
+    for kw in _RV_PROF_KEYWORDS]
+_RV_UID = Twin(r"(?:U\.I\.D\.No|UID|U\.I\.D)\s*[:\s]*(\d{9})", _I)
+_RV_UID_BARE = re.compile(r"\b(\d{9})\b")
+_RV_FILE_PATTERNS = [
+    Twin(r"(?:File|FILE)\s*[:\s]*(\d{3}/\d{4}/\d+)"),
+    Twin(r"(\d{3}/\d{4}/\d+)"),
+    Twin(r"(\d{3}/\d{4})"),
+]
+_RV_NAME = re.compile(r"\b([A-Z\s]{15,})\b")
+# The first sponsor pattern is ``([A-Z][A-Za-z\s&\-]+(?:L\.L\.C|LLC))``
+# tried only at the start of a run of its class, as the first
+# _ESTABLISHMENT_PATTERNS entry is, and for the same reason.
+_RV_SPONSOR_PATTERNS = [
+    Twin(r"(?<![A-Za-z\s&\-])[\s&\-]*+([A-Z][A-Za-z\s&\-]+(?:L\.L\.C|LLC))", _I),
+    # tried only at a word's first letter: a later letter of the word has
+    # the same continuation after the word and fewer letters before it
+    Twin(r"(?<![A-Z])((?:[A-Z]{3,}\s+){2,4}(?:TECHNICAL|SERVICES|ENGINEERING|COMPANY)[A-Z\s]*)", _I),
+]
+_RV_SPONSOR_WORD = Twin(r"\bSponsor\b", _I)
+_RV_DATE = re.compile(r"(\d{4}/\d{2}/\d{2})")
 
 
 def extract_residence_visa(text: str) -> Dict:
     out: Dict[str, Dict] = {}
+    low = fold(text)
 
-    m = re.search(r"(?:U\.I\.D\.No|UID|U\.I\.D)\s*[:\s]*(\d{9})", text, _I)
+    m = _RV_UID.search(text, low)
     if m:
-        out["uid_number"] = _field(m.group(1), 95.0, "VISA_OCR")
+        out["uid_number"] = _field(cut(m, text), 95.0, "VISA_OCR")
     else:
-        m = re.search(r"\b(\d{9})\b", text)
+        m = _RV_UID_BARE.search(text)
         if m:
             out["uid_number"] = _field(m.group(1), 85.0, "VISA_OCR")
 
-    m = _first(text, (r"(?:File|FILE)\s*[:\s]*(\d{3}/\d{4}/\d+)",
-                      r"(\d{3}/\d{4}/\d+)", r"(\d{3}/\d{4})"))
+    m = _first(text, None, _RV_FILE_PATTERNS)
     if m:
         out["file_number"] = _field(m.group(1), 90.0, "VISA_OCR")
 
     candidates = []
-    for name in re.findall(r"\b([A-Z\s]{15,})\b", text):
+    for name in _RV_NAME.findall(text):
         clean = name.strip()
         if len(clean) >= 15 and not any(k in clean for k in _RV_NAME_BLACKLIST):
             clean = _ARABIC.sub("", clean).strip()
@@ -387,21 +444,20 @@ def extract_residence_visa(text: str) -> Dict:
     if candidates:
         out["name_on_visa"] = _field(max(candidates, key=len), 85.0, "VISA_OCR")
 
-    for kw in _RV_PROF_KEYWORDS:
+    for kw, pat in _RV_PROF_PATTERNS:
         if kw in text:
-            m = re.search(rf"([A-Z\s]*{kw}[A-Z\s]*?)(?=\s*(?:[A-Z]{{2,}}\s[A-Z]{{2,}}|$))", text)
+            m = pat.search(text)
             if m:
                 prof = _ARABIC.sub("", m.group(1).strip()).strip()
                 if len(prof) >= 3:
                     out["profession"] = _field(prof, 80.0, "VISA_OCR")
                     break
 
-    for pat in (r"([A-Z][A-Za-z\s&\-]+(?:L\.L\.C|LLC))",
-                r"((?:[A-Z]{3,}\s+){2,4}(?:TECHNICAL|SERVICES|ENGINEERING|COMPANY)[A-Z\s]*)"):
-        m = re.search(pat, text, _I)
+    for pat in _RV_SPONSOR_PATTERNS:
+        m = pat.search(text, low)
         if m:
-            sponsor = _ARABIC.sub("", m.group(1)).strip()
-            sponsor = re.sub(r"\bSponsor\b", "", sponsor, flags=_I).strip()
+            sponsor = _ARABIC.sub("", cut(m, text)).strip()
+            sponsor = _RV_SPONSOR_WORD.exact.sub("", sponsor).strip()
             sponsor = sponsor.replace("LL C", "L.L.C").replace("LLC", "L.L.C")
             if len(sponsor) >= 10:
                 out["sponsor"] = _field(sponsor, 80.0, "VISA_OCR")
@@ -413,7 +469,7 @@ def extract_residence_visa(text: str) -> Dict:
             out["place_of_issue"] = _field(city.title(), 90.0, "VISA_OCR")
             break
 
-    dates = re.findall(r"(\d{4}/\d{2}/\d{2})", text)
+    dates = _RV_DATE.findall(text)
     if len(dates) >= 2:
         s = sorted(dates)
         out["issue_date"] = _field(s[0], 90.0, "VISA_OCR")
@@ -433,23 +489,28 @@ _EID_NAME_BLACKLIST = ["EMIRATES", "IDENTITY", "CARD", "RESIDENT", "NATIONALITY"
 _EID_COUNTRIES = ["INDIA", "PAKISTAN", "BANGLADESH", "PHILIPPINES", "EGYPT",
                   "JORDAN", "SYRIA", "LEBANON", "UNITED STATES", "UK", "CANADA",
                   "NEPAL", "SRI LANKA"]
+_EID_NUMBER = re.compile(r"(\d{3}-\d{4}-\d{7}-\d)")
+_EID_DIGITS = re.compile(r"(\d{15,})")
+_EID_NAME = re.compile(r"\b([A-Z][a-z]+(?:\s+[A-Z][a-z]+){2,})\b")
+_EID_DATE = re.compile(r"\b(\d{2}/\d{2}/\d{4})\b")
+_EID_GENDER_PATTERNS = [Twin(r"\b([MF])\b", _I), Twin(r"(?:Sex)[:\s]*([MF]+)", _I)]
 
 
 def extract_emirates_id(text: str) -> Dict:
     out: Dict[str, Dict] = {}
 
-    m = re.search(r"(\d{3}-\d{4}-\d{7}-\d)", text)
+    m = _EID_NUMBER.search(text)
     if m:
         out["emirates_id_number"] = _field(m.group(1), 95.0, "EMIRATES_OCR")
     else:
-        m = re.search(r"(\d{15,})", text)
+        m = _EID_DIGITS.search(text)
         if m:
             n = m.group(1)[:15]
             out["emirates_id_number"] = _field(
                 f"{n[:3]}-{n[3:7]}-{n[7:14]}-{n[14]}", 90.0, "EMIRATES_OCR")
 
     candidates = []
-    for name in re.findall(r"\b([A-Z][a-z]+(?:\s+[A-Z][a-z]+){2,})\b", text):
+    for name in _EID_NAME.findall(text):
         if len(name) >= 15 and not any(k in name.upper() for k in _EID_NAME_BLACKLIST):
             clean = _ARABIC.sub("", name).strip()
             if len(clean) >= 15:
@@ -457,7 +518,7 @@ def extract_emirates_id(text: str) -> Dict:
     if candidates:
         out["name_on_emirates_id"] = _field(max(candidates, key=len), 85.0, "EMIRATES_OCR")
 
-    dates = re.findall(r"\b(\d{2}/\d{2}/\d{4})\b", text)
+    dates = _EID_DATE.findall(text)
     if len(dates) >= 3:
         s = sorted(dates, key=lambda d: (int(d[6:10]), int(d[3:5]), int(d[0:2])))
         out["date_of_birth"] = _field(s[0], 90.0, "EMIRATES_OCR")
@@ -475,8 +536,8 @@ def extract_emirates_id(text: str) -> Dict:
             out["nationality"] = _field(country.title(), 90.0, "EMIRATES_OCR")
             break
 
-    m = _first(text, (r"\b([MF])\b", r"(?:Sex)[:\s]*([MF]+)"), _I)
-    gender = {"M": "Male", "F": "Female"}.get(m.group(1).upper()) if m else None
+    m = _first(text, fold(text), _EID_GENDER_PATTERNS)
+    gender = {"M": "Male", "F": "Female"}.get(cut(m, text).upper()) if m else None
     if gender:
         out["gender"] = _field(gender, 85.0, "EMIRATES_OCR")
     return out
@@ -489,15 +550,20 @@ def extract_emirates_id(text: str) -> Dict:
 
 _VV_KEYWORDS = ["TOURIST", "VISIT", "VISA", "SINGLE", "MULTIPLE", "TRIP", "DAYS", "MONTH"]
 _DMY_DATE = re.compile(r"([0-3]?\d[/-][0-1]?\d[/-]\d{4})")
+_VV_DURATION = re.compile(r"\b\d+\s*(?:DAY|DAYS|MONTH|MONTHS)\b")
+_VV_ENTRY_PERMIT = re.compile(r"[A-Z0-9]{8,15}")
+_VV_UID = re.compile(r"\b[0-9]{12,15}\b")
+_VV_PLACE = re.compile(r"([A-Z][a-z]+(?:\s[A-Z][a-z]+)*)")
+_VV_PASSPORT = re.compile(r"\b([A-Z]{1,2}[0-9]{7,8})\b")
 
 
-def _label_or_next(lines: List[str], idx: int, pattern: str,
+def _label_or_next(lines: List[str], idx: int, pattern: re.Pattern,
                    conf_here: float, conf_next: float) -> Optional[Tuple[str, float]]:
-    m = re.search(pattern, lines[idx])
+    m = pattern.search(lines[idx])
     if m:
         return m.group(), conf_here
     if idx + 1 < len(lines):
-        m = re.search(pattern, lines[idx + 1])
+        m = pattern.search(lines[idx + 1])
         if m:
             return m.group(), conf_next
     return None
@@ -529,7 +595,7 @@ def extract_visit_visa(text: str) -> Dict:
     for line in lines:
         u = line.upper()
         if any(kw in u for kw in _VV_KEYWORDS):
-            if re.search(r"\b\d+\s*(?:DAY|DAYS|MONTH|MONTHS)\b", u):
+            if _VV_DURATION.search(u):
                 visa_lines.append(line.strip())
             elif "VISA" in u or "TOURIST" in u or "VISIT" in u:
                 visa_lines.append(line.strip())
@@ -539,7 +605,7 @@ def extract_visit_visa(text: str) -> Dict:
     for i, line in enumerate(lines):
         u = line.upper()
         if "ENTRY" in u and ("PERMIT" in u or "NO" in u):
-            hit = _label_or_next(lines, i, r"[A-Z0-9]{8,15}", 90.0, 90.0)
+            hit = _label_or_next(lines, i, _VV_ENTRY_PERMIT, 90.0, 90.0)
             if hit:
                 out["entry_permit_number"] = _field(hit[0], hit[1], src)
                 break
@@ -547,7 +613,7 @@ def extract_visit_visa(text: str) -> Dict:
     for i, line in enumerate(lines):
         u = line.upper()
         if "U.I.D" in u or "UID" in u or "UNIFIED" in u:
-            hit = _label_or_next(lines, i, r"\b[0-9]{12,15}\b", 92.0, 90.0)
+            hit = _label_or_next(lines, i, _VV_UID, 92.0, 90.0)
             if hit:
                 out["uid_number"] = _field(hit[0], hit[1], src)
                 break
@@ -558,7 +624,7 @@ def extract_visit_visa(text: str) -> Dict:
             dm = _DMY_DATE.search(line)
             if dm:
                 date_value = dm.group(1).replace("-", "/")
-                pm = re.search(r"([A-Z][a-z]+(?:\s[A-Z][a-z]+)*)", line[dm.end():])
+                pm = _VV_PLACE.search(line, dm.end())
                 if pm:
                     out["date_place_of_issue"] = _field(
                         f"{date_value}, {pm.group(1)}", 88.0, src)
@@ -601,12 +667,12 @@ def extract_visit_visa(text: str) -> Dict:
 
     for i, line in enumerate(lines):
         if "PASSPORT" in line.upper():
-            m = re.search(r"\b([A-Z]{1,2}[0-9]{7,8})\b", line)
+            m = _VV_PASSPORT.search(line)
             if m:
                 out["passport_number"] = _field(m.group(1), 92.0, src)
                 break
             if i + 1 < len(lines):
-                m = re.search(r"\b([A-Z]{1,2}[0-9]{7,8})\b", lines[i + 1])
+                m = _VV_PASSPORT.search(lines[i + 1])
                 if m:
                     out["passport_number"] = _field(m.group(1), 90.0, src)
                     break
@@ -629,6 +695,15 @@ _AADHAAR_SKIP_NAME = {"GOVERNMENT", "INDIA", "UNIQUE", "IDENTIFICATION",
 _AADHAAR_ADDR_START = ["D/O", "S/O", "C/O", "W/O", "ADDRESS"]
 _AADHAAR_ADDR_SKIP = ["GOVERNMENT", "UNIQUE", "IDENTIFICATION", "AUTHORITY",
                       "WWW", "HTTP", "HELP@", "UIDAI", "1800", "1947"]
+_SPACE_OR_DASH = re.compile(r"[\s-]")
+_SPACES = re.compile(r"\s+")
+_AADHAAR_DIGITS = re.compile(r"^[2-9]\d{11}$")
+_AADHAAR_GROUPED = re.compile(r"^[2-9]\d{3}\s\d{4}\s\d{4}$")
+# ``DOB[:\s]*(date)`` searched line by line is this pattern searched once
+# over the text: a match cannot cross a newline, and the leftmost one lies
+# in the first line that has one
+_AADHAAR_DOB = Twin(r"DOB(?:[^\S\n]|:)*([0-3]?\d[/\-][0-1]?\d[/\-]\d{4})", _I)
+_EMPTY_COMMA = re.compile(r",\s*,")
 
 
 def extract_home_country_id(text: str) -> Dict:
@@ -637,20 +712,18 @@ def extract_home_country_id(text: str) -> Dict:
     src = "AADHAAR_OCR"
 
     for line in lines:
-        squeezed = re.sub(r"[\s-]", "", line)
-        if re.match(r"^[2-9]\d{11}$", squeezed):
+        squeezed = _SPACE_OR_DASH.sub("", line)
+        if _AADHAAR_DIGITS.match(squeezed):
             out["aadhaar_number"] = _field(
                 f"{squeezed[0:4]} {squeezed[4:8]} {squeezed[8:12]}", 95.0, src)
             break
-        if re.match(r"^[2-9]\d{3}\s\d{4}\s\d{4}$", line.strip()):
+        if _AADHAAR_GROUPED.match(line.strip()):
             out["aadhaar_number"] = _field(line.strip(), 95.0, src)
             break
 
-    for line in lines:
-        m = re.search(r"DOB[:\s]*([0-3]?\d[/\-][0-1]?\d[/\-]\d{4})", line, _I)
-        if m:
-            out["date_of_birth"] = _field(m.group(1).replace("-", "/"), 90.0, src)
-            break
+    m = _AADHAAR_DOB.search(text, fold(text))
+    if m:
+        out["date_of_birth"] = _field(cut(m, text).replace("-", "/"), 90.0, src)
 
     for line in lines:
         u = line.upper().strip()
@@ -680,7 +753,7 @@ def extract_home_country_id(text: str) -> Dict:
                     break
     if name_parts:
         out["full_name"] = _field(
-            re.sub(r"\s+", " ", " ".join(name_parts)).strip(), 85.0, src)
+            _SPACES.sub(" ", " ".join(name_parts)).strip(), 85.0, src)
 
     # address capture: from D/O-S/O-C/O-W/O until the aadhaar line
     addr_parts: List[str] = []
@@ -694,8 +767,8 @@ def extract_home_country_id(text: str) -> Dict:
                 addr_parts.append(clean)
             continue
         if capturing:
-            squeezed = re.sub(r"[\s-]", "", clean)
-            if re.match(r"^[2-9]\d{11}$", squeezed):
+            squeezed = _SPACE_OR_DASH.sub("", clean)
+            if _AADHAAR_DIGITS.match(squeezed):
                 break
             if any(s in u for s in _AADHAAR_ADDR_SKIP):
                 continue
@@ -703,8 +776,8 @@ def extract_home_country_id(text: str) -> Dict:
                 addr_parts.append(clean)
     if addr_parts:
         addr = ", ".join(addr_parts)
-        addr = re.sub(r",\s*,", ",", addr)
-        addr = re.sub(r"\s+", " ", addr)
+        addr = _EMPTY_COMMA.sub(",", addr)
+        addr = _SPACES.sub(" ", addr)
         out["address"] = _field(addr.strip(), 80.0, src)
     return out
 
@@ -713,63 +786,87 @@ def extract_home_country_id(text: str) -> Dict:
 # T7 VISA_CANCELLATION (backend/ocr_service.py:860-958)
 # ---------------------------------------------------------------------------
 
+_VC_NAME_PATTERNS = [
+    Twin(r"name\s*[:\-]?\s*([A-Z][A-Za-z\s]{5,50})", _I),
+    Twin(r"applicant\s*[:\-]?\s*([A-Z][A-Za-z\s]{5,50})", _I),
+    Twin(r"employee\s*[:\-]?\s*([A-Z][A-Za-z\s]{5,50})", _I),
+]
+_VC_PASSPORT_PATTERNS = [
+    Twin(r"passport\s*(?:no|number|#)?\s*[:\-]?\s*([A-Z0-9]{6,9})", _I),
+    Twin(r"passport\s*([A-Z0-9]{6,9})", _I),
+    Twin(r"([A-Z]{1,2}\d{6,8})", _I),
+]
+_VC_VISA_PATTERNS = [
+    Twin(r"visa\s*(?:no|number|#)?\s*[:\-]?\s*(\d{10,15})", _I),
+    Twin(r"residence\s*(?:no|number)?\s*[:\-]?\s*(\d{10,15})", _I),
+    Twin(r"(?:visa|residence)\s*([0-9\/\-]{10,})", _I),
+]
+_VC_SPONSOR_ID_PATTERNS = [
+    Twin(r"sponsor\s*(?:id|number)?\s*[:\-]?\s*(\d{10,15})", _I),
+    Twin(r"establishment\s*(?:id|card)?\s*[:\-]?\s*(\d{10,15})", _I),
+]
+_VC_SPONSOR_NAME_PATTERNS = [
+    Twin(r"sponsor\s*name\s*[:\-]?\s*([A-Z][A-Za-z\s&\.\-]{5,100})", _I),
+    Twin(r"sponsor\s*[:\-]?\s*([A-Z][A-Za-z\s&\.\-]{5,100})", _I),
+]
+_VC_REF_PATTERNS = [
+    Twin(r"cancellation\s*(?:no|number|ref|reference)?\s*[:\-]?\s*([A-Z0-9\-\/]+)", _I),
+    Twin(r"reference\s*(?:no|number)?\s*[:\-]?\s*([A-Z0-9\-\/]+)", _I),
+    Twin(r"transaction\s*(?:no|number)?\s*[:\-]?\s*([A-Z0-9\-\/]+)", _I),
+]
+_VC_NATIONALITY = Twin(r"nationality\s*[:\-]?\s*([A-Za-z\s]+)", _I)
+_VC_PROFESSION = Twin(r"profession\s*[:\-]?\s*([^\n]+)", _I)
+_VC_NAME_BREAK = re.compile(r"\s{2,}|\t|\|")
+
+
 def extract_visa_cancellation(text: str) -> Dict:
     out: Dict[str, Dict] = {}
     src = "CANCEL_OCR"
+    lower = text.lower()
+    low = lower if text.isascii() else None
 
-    for pat in (r"name\s*[:\-]?\s*([A-Z][A-Za-z\s]{5,50})",
-                r"applicant\s*[:\-]?\s*([A-Z][A-Za-z\s]{5,50})",
-                r"employee\s*[:\-]?\s*([A-Z][A-Za-z\s]{5,50})"):
-        m = re.search(pat, text, _I)
+    for pat in _VC_NAME_PATTERNS:
+        m = pat.search(text, low)
         if m:
-            name = re.sub(r"\s+", " ", m.group(1).strip())
+            name = _SPACES.sub(" ", cut(m, text).strip())
             if len(name.split()) >= 2:
                 out["full_name"] = _field(name.upper(), 85.0, src)
                 break
 
-    m = _first(text, (r"passport\s*(?:no|number|#)?\s*[:\-]?\s*([A-Z0-9]{6,9})",
-                      r"passport\s*([A-Z0-9]{6,9})",
-                      r"([A-Z]{1,2}\d{6,8})"), _I)
+    m = _first(text, low, _VC_PASSPORT_PATTERNS)
     if m:
-        out["passport_number"] = _field(m.group(1).upper(), 90.0, src)
+        out["passport_number"] = _field(cut(m, text).upper(), 90.0, src)
 
-    m = _first(text, (r"visa\s*(?:no|number|#)?\s*[:\-]?\s*(\d{10,15})",
-                      r"residence\s*(?:no|number)?\s*[:\-]?\s*(\d{10,15})",
-                      r"(?:visa|residence)\s*([0-9\/\-]{10,})"), _I)
+    m = _first(text, low, _VC_VISA_PATTERNS)
     if m:
-        out["visa_number"] = _field(m.group(1), 90.0, src)
+        out["visa_number"] = _field(cut(m, text), 90.0, src)
 
-    lower = text.lower()
     for vt in ("employment", "dependent", "investor", "tourist", "residence", "partner"):
         if vt in lower:
             out["visa_type"] = _field(vt.upper(), 85.0, src)
             break
 
-    m = _first(text, (r"sponsor\s*(?:id|number)?\s*[:\-]?\s*(\d{10,15})",
-                      r"establishment\s*(?:id|card)?\s*[:\-]?\s*(\d{10,15})"), _I)
+    m = _first(text, low, _VC_SPONSOR_ID_PATTERNS)
     if m:
-        out["sponsor_id"] = _field(m.group(1), 85.0, src)
+        out["sponsor_id"] = _field(cut(m, text), 85.0, src)
 
-    m = _first(text, (r"sponsor\s*name\s*[:\-]?\s*([A-Z][A-Za-z\s&\.\-]{5,100})",
-                      r"sponsor\s*[:\-]?\s*([A-Z][A-Za-z\s&\.\-]{5,100})"), _I)
+    m = _first(text, low, _VC_SPONSOR_NAME_PATTERNS)
     if m:
-        s_name = re.split(r"\s{2,}|\t|\|", m.group(1).strip())[0]
+        s_name = _VC_NAME_BREAK.split(cut(m, text).strip())[0]
         out["sponsor_name"] = _field(s_name.upper(), 80.0, src)
 
-    m = _first(text, (r"cancellation\s*(?:no|number|ref|reference)?\s*[:\-]?\s*([A-Z0-9\-\/]+)",
-                      r"reference\s*(?:no|number)?\s*[:\-]?\s*([A-Z0-9\-\/]+)",
-                      r"transaction\s*(?:no|number)?\s*[:\-]?\s*([A-Z0-9\-\/]+)"), _I)
+    m = _first(text, low, _VC_REF_PATTERNS)
     if m:
-        out["cancellation_ref"] = _field(m.group(1), 85.0, src)
+        out["cancellation_ref"] = _field(cut(m, text), 85.0, src)
 
-    m = re.search(r"nationality\s*[:\-]?\s*([A-Za-z\s]+)", text, _I)
+    m = _VC_NATIONALITY.search(text, low)
     if m:
-        out["nationality"] = _field(m.group(1).strip().upper(), 85.0, src)
+        out["nationality"] = _field(cut(m, text).strip().upper(), 85.0, src)
 
-    m = re.search(r"profession\s*[:\-]?\s*([^\n]+)", text, _I)
+    m = _VC_PROFESSION.search(text, low)
     if m:
         out["profession"] = _field(
-            m.group(1).split("  ")[0].strip().upper(), 80.0, src)
+            cut(m, text).split("  ")[0].strip().upper(), 80.0, src)
     return out
 
 
@@ -779,7 +876,18 @@ def extract_visa_cancellation(text: str) -> Dict:
 # else 50 (backend/ocr_service.py:960-1144).
 # ---------------------------------------------------------------------------
 
-_VAT_TABLE: List[Tuple[str, str]] = [
+# The email rows start only where a run of the local part's class starts:
+# the local part must run up to the '@', so every start inside a run has
+# the same continuation as the run's first, which comes first.  Tried at
+# every start, a long run with no '@' was scanned once per position.
+_EMAIL_AT_RUN = r"(?<![a-zA-Z0-9._%+-])"
+
+
+def _compile_table(table: List[Tuple[str, str]]) -> List[Tuple[str, Twin]]:
+    return [(key, Twin(pattern, _IM)) for key, pattern in table]
+
+
+_VAT_TABLE = _compile_table([
     ("registration_number", r"(?:registration\s*number|vat\s*number|trn|tax\s*registration)[\s:]*([A-Z0-9\-\/]+)"),
     ("certificate_number", r"(?:certificate\s*number|cert\s*no)[\s:]*([A-Z0-9\-\/]+)"),
     ("legal_name_english", r"(?:legal\s*name|entity\s*name|company\s*name)[\s:]*([A-Za-z0-9\s,&\.-]+)"),
@@ -791,9 +899,9 @@ _VAT_TABLE: List[Tuple[str, str]] = [
     ("first_vat_return_period", r"(?:first\s*vat\s*return\s*period)[\s:]*([0-9/\-]+\s*(?:to|-|–)\s*[0-9/\-]+)"),
     ("vat_return_due_date", r"(?:vat\s*return\s*due\s*date|return\s*due\s*date)[\s:]*([0-9/\-]+)"),
     ("tax_period_start_end", r"(?:tax\s*period|period)[\s:]*([0-9/\-]+\s*(?:to|-|–)\s*[0-9/\-]+)"),
-]
+])
 
-_ENTRY_PERMIT_TABLE: List[Tuple[str, str]] = [
+_ENTRY_PERMIT_TABLE = _compile_table([
     ("permit_number", r"(?:entry\s*permit\s*(?:number|no|#)|permit\s*no)[\s:]*([A-Z0-9\-\/]+)"),
     ("visa_number", r"(?:visa\s*(?:number|no|#))[\s:]*([A-Z0-9\-\/]+)"),
     ("file_number", r"(?:file\s*number|file\s*no)[\s:]*([A-Z0-9\-\/]+)"),
@@ -823,7 +931,7 @@ _ENTRY_PERMIT_TABLE: List[Tuple[str, str]] = [
     ("sponsor_id", r"(?:sponsor\s*(?:id|number|no))[\s:]*([A-Z0-9\-\/]+)"),
     ("employer_name", r"(?:employer\s*name|company\s*name)[\s:]*([A-Za-z؀-ۿ\s\.-]+)"),
     ("job_title", r"(?:job\s*title|position)[\s:]*([A-Za-z؀-ۿ\s]+)"),
-    ("email", r"([a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[A-Za-z]{2,})"),
+    ("email", _EMAIL_AT_RUN + r"([a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[A-Za-z]{2,})"),
     ("phone", r"(?:phone|mobile|contact)[\s:]*([+0-9\-\s\(\)]{6,20})"),
     ("address", r"(?:address)[\s:]*([A-Za-z0-9؀-ۿ,\-\s]+)"),
     ("status", r"(?:status)[\s:]*([A-Za-z]+)"),
@@ -832,9 +940,9 @@ _ENTRY_PERMIT_TABLE: List[Tuple[str, str]] = [
     ("issuing_office", r"(?:issuing\s*office)[\s:]*([A-Za-z؀-ۿ\s]+)"),
     ("qr_code", r"(?:qr\s*code)[\s:]*([A-Za-z0-9]+)"),
     ("barcode_number", r"(?:barcode|bar\s*code)[\s:]*([A-Za-z0-9]+)"),
-]
+])
 
-_LICENSE_TABLE: List[Tuple[str, str]] = [
+_LICENSE_TABLE = _compile_table([
     ("license_type", r"(?:license\s*type)\s*[:\-]?\s*([A-Za-z\s]+)"),
     ("license_no", r"(?:license\s*no|licence\s*no|license\s*number)\s*[:\-]?\s*([A-Z0-9\-\/]+)"),
     ("main_license_no", r"(?:main\s*license\s*no)\s*[:\-]?\s*([A-Z0-9\-\/]+)"),
@@ -853,17 +961,18 @@ _LICENSE_TABLE: List[Tuple[str, str]] = [
     ("fax", r"(?:fax\s*no)\s*[:\-]?\s*([+0-9\s\-\(\)]+)"),
     ("mobile", r"(?:mobile\s*no)\s*[:\-]?\s*([+0-9\s\-\(\)]+)"),
     ("parcel_id", r"(?:parcel\s*id)\s*[:\-]?\s*([A-Za-z0-9\-\/]+)"),
-    ("email", r"([A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,})"),
-]
+    ("email", _EMAIL_AT_RUN + r"([A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,})"),
+])
 
 
-def _apply_pattern_table(text: str, table: List[Tuple[str, str]], source: str) -> Dict:
+def _apply_pattern_table(text: str, table: List[Tuple[str, Twin]], source: str) -> Dict:
     text_clean = text.replace("\r", "\n")
+    low = fold(text_clean)
     out: Dict[str, Dict] = {}
     for key, pattern in table:
-        m = re.search(pattern, text_clean, _IM)
+        m = pattern.search(text_clean, low)
         if m:
-            value = m.group(1).strip()
+            value = cut(m, text_clean).strip()
             out[key] = _field(value, 90.0 if len(value) > 2 else 50.0, source)
     return out
 
@@ -876,12 +985,108 @@ def extract_entry_permit(text: str) -> Dict:
     return _apply_pattern_table(text, _ENTRY_PERMIT_TABLE, "PERMIT_OCR")
 
 
-_LICENSE_MEMBER_ROW = re.compile(
-    r"(\d+)\s+([A-Za-z؀-ۿ\s\.]+)\s+([A-Za-z؀-ۿ]+)\s+([A-Za-z\s]+)\s+([0-9\.%]+)",
-    re.MULTILINE)
+_ROW_HEAD = re.compile(r"(\d+)(\s+)")
+_ROW_HEAD_AT_RUN = re.compile(r"(?<!\d)(\d+)(\s+)")
+_NAME_RUN = re.compile(r"[A-Za-z؀-ۿ\s\.]*")
+_WORD_RUN = re.compile(r"[A-Za-z؀-ۿ]*")
+_ROLE_RUNS = re.compile(r"[A-Za-z\s]+")
+_SPACE_RUN = re.compile(r"\s*")
+_SHARE_RUN = re.compile(r"[0-9\.%]*")
+_SPACES_BEFORE_WORD = re.compile(r"(?<!\s)\s++(?=[A-Za-z؀-ۿ])")
+
+
+def _member_rows(text: str) -> Iterator[Tuple[str, str, str, str, str]]:
+    r"""The groups of every match of the members-table row
+    ``(\d+)\s+([A-Za-z؀-ۿ\s\.]+)\s+([A-Za-z؀-ۿ]+)\s+([A-Za-z\s]+)\s+([0-9\.%]+)``
+    (no, name, nationality, role, share), as ``finditer`` gives them, in
+    linear time.  The regex retried every end of its greedy name group
+    and rescanned the role run after each: cubic in a run of spaces after
+    a number.
+
+    How the regex resolves a row at a number: its spaces end at ``y0``;
+    the name runs from ``y0`` to the LAST end ``a`` inside its run of name
+    characters from which the row goes on (``_row_rest``); only if there
+    is none, and the number is followed by three or more spaces, is the
+    name the one space before the first word.  Whether the row goes on
+    from ``a`` depends on ``a`` alone, so each name run is searched once,
+    from its right end.  A later start inside one digit run has the same
+    continuation as the first.
+    """
+    n = len(text)
+    run = (0, 0, [], None)  # the last name run: (start, end, role runs, last a)
+    head = _ROW_HEAD.match(text) or _ROW_HEAD_AT_RUN.search(text, 1)
+    while head:
+        p, d, y0 = head.start(), head.end(1), head.end()
+        if not run[0] <= y0 < run[1]:
+            e = _NAME_RUN.match(text, y0).end()
+            # the role runs a share can follow: they end in a space
+            roles = [(r.start(), r.end()) for r in _ROLE_RUNS.finditer(text, y0, e)
+                     if r.end() < n and text[r.end()] in "0123456789.%"
+                     and text[r.end() - 1].isspace()]
+            last = None
+            for sp in reversed(list(_SPACES_BEFORE_WORD.finditer(text, y0, e))):
+                if _row_rest(text, sp.end() - 1, roles):
+                    last = sp.end() - 1
+                    break
+            run = (y0, e, roles, last)
+        _, _, roles, a = run
+        y = y0
+        if a is not None and a <= y0:
+            a = None
+        if a is None and y0 - d >= 3 and _row_rest(text, y0 - 1, roles):
+            y, a = y0 - 2, y0 - 1
+        if a is None:
+            head = _ROW_HEAD_AT_RUN.search(text, p + 1)
+            continue
+        a1, w, be = _row_rest(text, a, roles)
+        x0 = _SPACE_RUN.match(text, w).end()
+        role_start = x0 if x0 <= be - 2 else be - 2
+        end = _SHARE_RUN.match(text, be).end()
+        yield text[p:d], text[y:a], text[a1:w], text[role_start:be - 1], text[be:end]
+        head = _ROW_HEAD.match(text, end) or _ROW_HEAD_AT_RUN.search(text, end + 1)
+
+
+def _row_rest(text: str, a: int, roles) -> Optional[Tuple[int, int, int]]:
+    """-> (word start, word end, role-run end) when a member row goes on
+    from a name ending at ``a`` (spaces, a word, a space, then a role run
+    of at least two characters that ends in a space and is followed by a
+    share character), else None.  ``roles`` holds the role runs a share
+    follows, in order."""
+    a1 = _SPACE_RUN.match(text, a).end()
+    w = _WORD_RUN.match(text, a1).end()
+    if a1 == a or w == a1 or w == len(text) or not text[w].isspace():
+        return None
+    i = bisect_right(roles, (w, len(text))) - 1
+    if i >= 0 and roles[i][0] <= w < roles[i][1] and roles[i][1] - w >= 3:
+        return a1, w, roles[i][1]
+    return None
+
+
+# ``([A-Za-z؀-ۿ\s\.]+)\s+([A-Za-z]+)\s+(\d+)\s+([0-9\.%]+)``: the first
+# group is greedy, so the ``\s+`` after it always matches exactly one
+# character, and writing ``\s`` keeps the matches while each start costs
+# time linear in its run.  _PARTNER_AT_RUN is the same pattern tried only
+# at the start of a run of the first group's class; see _partner_rows.
 _LICENSE_PARTNER_ROW = re.compile(
-    r"([A-Za-z؀-ۿ\s\.]+)\s+([A-Za-z]+)\s+(\d+)\s+([0-9\.%]+)",
+    r"([A-Za-z؀-ۿ\s\.]+)\s([A-Za-z]+)\s+(\d+)\s+([0-9\.%]+)",
     re.MULTILINE)
+_PARTNER_AT_RUN = re.compile(r"(?<![A-Za-z؀-ۿ\s\.])" + _LICENSE_PARTNER_ROW.pattern,
+                             re.MULTILINE)
+
+
+def _partner_rows(text: str) -> Iterator[re.Match]:
+    """``_LICENSE_PARTNER_ROW.finditer(text)`` in linear time.  A start
+    inside a run of the first group's class reaches a subset of the ends
+    an earlier start of that run reaches, so after a failed start only the
+    next run's start can match; finditer retried every position."""
+    pos = 0
+    while True:
+        m = (_LICENSE_PARTNER_ROW.match(text, pos)
+             or _PARTNER_AT_RUN.search(text, pos + 1))
+        if not m:
+            return
+        yield m
+        pos = m.end()
 
 
 def extract_company_license(text: str) -> Dict:
@@ -892,9 +1097,9 @@ def extract_company_license(text: str) -> Dict:
     text_clean = text.replace("\r", "\n")
 
     members = [
-        {"no": m.group(1), "name": m.group(2).strip(), "nationality": m.group(3),
-         "role": m.group(4), "share": m.group(5)}
-        for m in _LICENSE_MEMBER_ROW.finditer(text_clean)
+        {"no": no, "name": name.strip(), "nationality": nationality,
+         "role": role, "share": share}
+        for no, name, nationality, role, share in _member_rows(text_clean)
     ]
     if members:
         out["members_table"] = _field(json.dumps(members), 90.0, "TABLE_OCR")
@@ -902,7 +1107,7 @@ def extract_company_license(text: str) -> Dict:
     partners = [
         {"name": m.group(1).strip(), "nationality": m.group(2),
          "sr_no": m.group(3), "share": m.group(4)}
-        for m in _LICENSE_PARTNER_ROW.finditer(text_clean)
+        for m in _partner_rows(text_clean)
     ]
     if partners:
         out["partners_table"] = _field(json.dumps(partners), 90.0, "TABLE_OCR")
@@ -940,28 +1145,40 @@ def _invoice_company_name(section: str) -> Optional[str]:
     return lines[0]
 
 
+_INVOICE_ADDRESS_HINT = Twin(r"\d+|,|street|road|avenue|city|state|zip|pincode", _I)
+_INVOICE_IBAN = Twin(r"IBAN[:\s]*([A-Z0-9]{15,34})", _I)
+_INVOICE_SWIFT = Twin(r"SWIFT[:\s]*([A-Z0-9]{8,11})", _I)
+_INVOICE_ACCOUNT = Twin(r"(?:account|acc)(?:\s*no|\s*number)[:\s]*(\d{8,18})", _I)
+_DIGITS = re.compile(r"\d+")
+
+
 def _invoice_address(section: str) -> Optional[str]:
     picked = []
-    for line in section.split("\n"):
+    low = fold(section)
+    low_lines = low.split("\n") if low is not None else None
+    for i, line in enumerate(section.split("\n")):
         line = line.strip()
-        if line and re.search(r"\d+|,|street|road|avenue|city|state|zip|pincode", line, _I):
+        # the hint holds no whitespace, so the unstripped lowered line
+        # finds it exactly when the stripped line does
+        if line and _INVOICE_ADDRESS_HINT.search(
+                line, None if low_lines is None else low_lines[i]):
             picked.append(line)
             if len(picked) >= 3:
                 break
     return ", ".join(picked) if picked else None
 
 
-def _invoice_bank_details(text: str) -> Optional[dict]:
+def _invoice_bank_details(text: str, low: Optional[str]) -> Optional[dict]:
     details = {}
-    m = re.search(r"IBAN[:\s]*([A-Z0-9]{15,34})", text, _I)
+    m = _INVOICE_IBAN.search(text, low)
     if m:
-        details["iban"] = m.group(1)
-    m = re.search(r"SWIFT[:\s]*([A-Z0-9]{8,11})", text, _I)
+        details["iban"] = cut(m, text)
+    m = _INVOICE_SWIFT.search(text, low)
     if m:
-        details["swift"] = m.group(1)
-    m = re.search(r"(?:account|acc)(?:\s*no|\s*number)[:\s]*(\d{8,18})", text, _I)
+        details["swift"] = cut(m, text)
+    m = _INVOICE_ACCOUNT.search(text, low)
     if m:
-        details["account_number"] = m.group(1)
+        details["account_number"] = cut(m, text)
     return details or None
 
 
@@ -986,58 +1203,59 @@ def _invoice_line_item_count(text: str) -> int:
         lower = line.lower()
         if any(w in lower for w in ("subtotal", "total", "tax", "discount", "grand")):
             break
-        if re.search(r"\d+", line):
+        if _DIGITS.search(line):
             count += 1
     return count
 
 
-# Single-pattern fields, (field, pattern, flags, confidence, format), applied
-# in output order; the value is group 1, stripped, then formatted.
+# Single-pattern fields, (field, pattern, confidence, format), applied in
+# output order; the value is group 1, stripped, then formatted.
 _INVOICE_HEAD = [
-    ("invoice_number", r"(?:invoice\s*(?:number|no|#)|inv\s*(?:no|#))[:\s]*([A-Z0-9\-/]+)", _I, 90.0, "{}"),
-    ("invoice_date", r"(?:invoice\s*date|date)[:\s]*(\d{1,2}[/-]\d{1,2}[/-]\d{2,4}|\d{4}[/-]\d{1,2}[/-]\d{1,2})", _I, 88.0, "{}"),
-    ("due_date", r"(?:due\s*date|payment\s*due)[:\s]*(\d{1,2}[/-]\d{1,2}[/-]\d{2,4}|\d{4}[/-]\d{1,2}[/-]\d{1,2})", _I, 88.0, "{}"),
-    ("invoice_type", r"(tax\s*invoice|proforma\s*invoice|credit\s*note|debit\s*note|commercial\s*invoice)", _I, 92.0, "{}"),
+    ("invoice_number", Twin(r"(?:invoice\s*(?:number|no|#)|inv\s*(?:no|#))[:\s]*([A-Z0-9\-/]+)", _I), 90.0, "{}"),
+    ("invoice_date", Twin(r"(?:invoice\s*date|date)[:\s]*(\d{1,2}[/-]\d{1,2}[/-]\d{2,4}|\d{4}[/-]\d{1,2}[/-]\d{1,2})", _I), 88.0, "{}"),
+    ("due_date", Twin(r"(?:due\s*date|payment\s*due)[:\s]*(\d{1,2}[/-]\d{1,2}[/-]\d{2,4}|\d{4}[/-]\d{1,2}[/-]\d{1,2})", _I), 88.0, "{}"),
+    ("invoice_type", Twin(r"(tax\s*invoice|proforma\s*invoice|credit\s*note|debit\s*note|commercial\s*invoice)", _I), 92.0, "{}"),
 ]
 _INVOICE_AMOUNTS = [
-    ("currency", r"\b(USD|EUR|GBP|INR|AUD|CAD|SGD|JPY|CNY|AED)\b", 0, 95.0, "{}"),
-    ("subtotal", r"(?:subtotal|sub\s*total)[:\s]*([₹$€£¥]?\s*[\d,]+\.?\d*)", _I, 88.0, "{}"),
-    ("tax_amount", r"(?:tax|vat|gst)[:\s]*([₹$€£¥]?\s*[\d,]+\.?\d*)", _I, 88.0, "{}"),
-    ("tax_rate", r"(?:tax|vat|gst).*?(\d+(?:\.\d+)?)\s*%", _I, 90.0, "{}%"),
-    ("grand_total", r"(?:grand\s*total|total\s*amount|net\s*total|total)[:\s]*([₹$€£¥]?\s*[\d,]+\.?\d*)", _I, 90.0, "{}"),
-    ("payment_terms", r"(?:payment\s*terms|terms)[:\s]*(net\s*\d+|due\s*on\s*receipt|[^.\n]{5,50})", _I, 80.0, "{}"),
-    ("po_number", r"(?:PO|purchase\s*order)[:\s#]*([A-Z0-9\-/]+)", _I, 88.0, "{}"),
+    ("currency", Twin(r"\b(USD|EUR|GBP|INR|AUD|CAD|SGD|JPY|CNY|AED)\b"), 95.0, "{}"),
+    ("subtotal", Twin(r"(?:subtotal|sub\s*total)[:\s]*([₹$€£¥]?\s*[\d,]+\.?\d*)", _I), 88.0, "{}"),
+    ("tax_amount", Twin(r"(?:tax|vat|gst)[:\s]*([₹$€£¥]?\s*[\d,]+\.?\d*)", _I), 88.0, "{}"),
+    ("tax_rate", Twin(r"(?:tax|vat|gst).*?(\d+(?:\.\d+)?)\s*%", _I), 90.0, "{}%"),
+    ("grand_total", Twin(r"(?:grand\s*total|total\s*amount|net\s*total|total)[:\s]*([₹$€£¥]?\s*[\d,]+\.?\d*)", _I), 90.0, "{}"),
+    ("payment_terms", Twin(r"(?:payment\s*terms|terms)[:\s]*(net\s*\d+|due\s*on\s*receipt|[^.\n]{5,50})", _I), 80.0, "{}"),
+    ("po_number", Twin(r"(?:PO|purchase\s*order)[:\s#]*([A-Z0-9\-/]+)", _I), 88.0, "{}"),
 ]
 _INVOICE_NOTES = [
-    ("notes", r"(?:notes?|remarks?|comments?)[:\s]*([^\n]{10,200})", _I, 75.0, "{}"),
+    ("notes", Twin(r"(?:notes?|remarks?|comments?)[:\s]*([^\n]{10,200})", _I), 75.0, "{}"),
 ]
-# Ordinal pairs, (supplier_field, customer_field, pattern, flags, confidence):
+# Ordinal pairs, (supplier_field, customer_field, pattern, confidence):
 # the first match is the supplier's, the second the customer's.
 _INVOICE_PAIRS = [
-    ("supplier_tax_id", "customer_tax_id", r"(?:GST|VAT|TIN|TAX\s*ID)[:\s]*([A-Z0-9]{8,15})", _I, 85.0),
-    ("supplier_email", "customer_email", r"\b([a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,})\b", 0, 90.0),
-    ("supplier_phone", "customer_phone", r"(?:phone|tel|mobile|contact)[:\s]*([+\d\s\-\(\)]{10,20})", _I, 85.0),
+    ("supplier_tax_id", "customer_tax_id", Twin(r"(?:GST|VAT|TIN|TAX\s*ID)[:\s]*([A-Z0-9]{8,15})", _I), 85.0),
+    ("supplier_email", "customer_email", Twin(r"\b([a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,})\b"), 90.0),
+    ("supplier_phone", "customer_phone", Twin(r"(?:phone|tel|mobile|contact)[:\s]*([+\d\s\-\(\)]{10,20})", _I), 85.0),
 ]
 
 
-def _invoice_fields(text: str, rows, out: Dict, src: str) -> None:
-    for field, pattern, flags, conf, fmt in rows:
-        m = re.search(pattern, text, flags)
+def _invoice_fields(text: str, low: Optional[str], rows, out: Dict, src: str) -> None:
+    for field, pattern, conf, fmt in rows:
+        m = pattern.search(text, low)
         if m:
-            out[field] = _field(fmt.format(m.group(1).strip()), conf, src)
+            out[field] = _field(fmt.format(cut(m, text).strip()), conf, src)
 
 
 def extract_invoice(text: str) -> Dict:
     out: Dict[str, Dict] = {}
     src = "INVOICE_OCR"
-    _invoice_fields(text, _INVOICE_HEAD, out, src)
+    low = fold(text)
+    _invoice_fields(text, low, _INVOICE_HEAD, out, src)
 
-    for supplier_field, customer_field, pattern, flags, conf in _INVOICE_PAIRS:
-        values = re.findall(pattern, text, flags)[:2]
+    for supplier_field, customer_field, pattern, conf in _INVOICE_PAIRS:
+        values = [cut(m, text) for m in islice(pattern.finditer(text, low), 2)]
         for field, value in zip((supplier_field, customer_field), values):
             out[field] = _field(value.strip(), conf, src)
 
-    _invoice_fields(text, _INVOICE_AMOUNTS, out, src)
+    _invoice_fields(text, low, _INVOICE_AMOUNTS, out, src)
 
     supplier_sec, customer_sec = _invoice_sections(text)
     name = _invoice_company_name(supplier_sec)
@@ -1053,11 +1271,11 @@ def extract_invoice(text: str) -> Dict:
     if addr:
         out["customer_address"] = _field(addr, 75.0, src)
 
-    bank = _invoice_bank_details(text)
+    bank = _invoice_bank_details(text, low)
     if bank:
         out["bank_details"] = _field(json.dumps(bank), 85.0, src)
 
-    _invoice_fields(text, _INVOICE_NOTES, out, src)
+    _invoice_fields(text, low, _INVOICE_NOTES, out, src)
 
     n_items = _invoice_line_item_count(text)
     if n_items > 0:

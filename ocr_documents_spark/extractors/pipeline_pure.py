@@ -53,12 +53,16 @@ def recover_span(kind: Optional[str], text: Optional[str],
     ``media_ref`` is kept only on media-derived pages.
     """
     if kind == "media":
-        page_text, conf, _qc = decode_media_ref(media_ref)
-        return {"text": page_text, "confidence": conf, "media_ref": media_ref}
+        return _media_page(media_ref, decode_media_ref(media_ref))
     if kind == "html":
         text = html_to_page_text(text or "")
     return {"text": text or "", "confidence": TEXT_SPAN_CONFIDENCE,
             "media_ref": None}
+
+
+def _media_page(media_ref: Optional[str], decoded) -> Dict[str, Any]:
+    page_text, conf, _qc = decoded
+    return {"text": page_text, "confidence": conf, "media_ref": media_ref}
 
 
 def recover_pages(spans: Sequence[Dict[str, Any]]) -> List[Dict[str, Any]]:
@@ -170,6 +174,19 @@ def process_recovered(doc_id: str, pages: Sequence[Dict[str, Any]],
     return result
 
 
+def _quality_probe(spans: Sequence[Dict[str, Any]], skip_quality_check: bool):
+    """The gate rule -> (passed, issues, warnings, the probed span or None,
+    its decode or None)."""
+    media = [s for s in spans if s["kind"] == "media"]
+    if skip_quality_check or not media:
+        return True, [], [], None, None
+    # min, like recover_pages' sort, keeps input order among equal offsets
+    first = min(media, key=lambda s: s["offset"])
+    decoded = decode_media_ref(first["media_ref"])
+    passed, _score, issues, warnings = quality_report(**decoded[2])
+    return passed, issues, warnings, first, decoded
+
+
 def document_quality_report(spans: Sequence[Dict[str, Any]],
                             skip_quality_check: bool = False
                             ) -> Tuple[bool, List[str], List[str]]:
@@ -179,22 +196,21 @@ def document_quality_report(spans: Sequence[Dict[str, Any]],
     same reason, backend/image_quality_checker.py:245).
     -> (passed, issues, warnings) — the full Q5 surface.
     """
-    media = [s for s in spans if s["kind"] == "media"]
-    if skip_quality_check or not media:
-        return True, [], []
-    # min, like recover_pages' sort, keeps input order among equal offsets
-    _text, _conf, qc = decode_media_ref(
-        min(media, key=lambda s: s["offset"])["media_ref"])
-    passed, _score, issues, warnings = quality_report(**qc)
-    return passed, issues, warnings
+    return _quality_probe(spans, skip_quality_check)[:3]
 
 
 def process_document(doc_id: str, spans: Sequence[Dict[str, Any]],
                      skip_quality_check: bool = False,
                      forced_type: Optional[str] = None) -> Dict[str, Any]:
-    """Full oracle pipeline for one document (gate first, then recover)."""
-    ok, issues, warnings = document_quality_report(spans, skip_quality_check)
+    """Full oracle pipeline for one document (gate first, then recover).
+    The gate's decode of its span is that span's page: each media ref is
+    decoded once."""
+    ok, issues, warnings, probed, decoded = _quality_probe(
+        spans, skip_quality_check)
     if not ok:
         return rejected_quality_result(doc_id, len(spans), issues, warnings)
-    return process_recovered(doc_id, recover_pages(spans), forced_type,
+    pages = [_media_page(s["media_ref"], decoded) if s is probed
+             else recover_span(s["kind"], s["text"], s["media_ref"])
+             for s in sorted(spans, key=lambda s: s["offset"])]
+    return process_recovered(doc_id, pages, forced_type,
                              quality_warnings=warnings)
