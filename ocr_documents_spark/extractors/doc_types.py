@@ -35,7 +35,7 @@ from itertools import islice
 from typing import Callable, Dict, Iterator, List, Optional, Tuple
 
 from .casefold import Twin, cut, fold
-from .fields_generic import extract_config_fallback
+from .fields_generic import compile_field_patterns, extract_config_fallback
 from .registry import FALLBACK_FIELD_PATTERNS
 
 _I = re.IGNORECASE
@@ -1288,12 +1288,16 @@ def extract_invoice(text: str) -> Dict:
 # (dispatch targets missing in the reference; SURVEY.md §2.6).
 # ---------------------------------------------------------------------------
 
+_FALLBACK_PATTERNS = {doc_type: compile_field_patterns(table)
+                      for doc_type, table in FALLBACK_FIELD_PATTERNS.items()}
+
+
 def extract_purchase_order(text: str) -> Dict:
-    return extract_config_fallback(text, FALLBACK_FIELD_PATTERNS["PURCHASE_ORDER"])
+    return extract_config_fallback(text, _FALLBACK_PATTERNS["PURCHASE_ORDER"])
 
 
 def extract_labor_contract(text: str) -> Dict:
-    return extract_config_fallback(text, FALLBACK_FIELD_PATTERNS["LABOR_CONTRACT"])
+    return extract_config_fallback(text, _FALLBACK_PATTERNS["LABOR_CONTRACT"])
 
 
 # ---------------------------------------------------------------------------

@@ -13,6 +13,8 @@ from __future__ import annotations
 import re
 from typing import Dict, List, Optional, Tuple
 
+from .casefold import Twin, cut, fold
+
 _IMD = re.IGNORECASE | re.MULTILINE | re.DOTALL
 
 # F2 label:value miner (reference: backend/ocr_service.py:89) and the
@@ -26,9 +28,20 @@ _KV_STOP = re.compile(
 )
 
 
-def first_pattern_match(text: str, patterns: List[str]) -> Tuple[str, float]:
+def compile_field_patterns(field_patterns: Dict[str, List[str]]
+                           ) -> Dict[str, List[Twin]]:
+    """A config table of regex cascades (``registry.FALLBACK_FIELD_PATTERNS``
+    rows), each pattern compiled once as a ``casefold.Twin`` under
+    IGNORECASE|MULTILINE|DOTALL."""
+    return {field: [Twin(p, _IMD) for p in patterns]
+            for field, patterns in field_patterns.items()}
+
+
+def first_pattern_match(text: str, low: Optional[str],
+                        patterns: List[Twin]) -> Tuple[str, float]:
     """Ordered regex cascade; first hit wins with confidence 90.0
-    (reference: backend/ocr_service.py:63-77).
+    (reference: backend/ocr_service.py:63-77).  ``low`` is
+    ``casefold.fold(text)``.
 
     The reference takes ``group(1)`` whenever the pattern has groups; a
     pattern whose first group is optional and unmatched would raise there
@@ -36,21 +49,24 @@ def first_pattern_match(text: str, patterns: List[str]) -> Tuple[str, float]:
     cascading — documented deviation, keeps the operator total.
     """
     for pattern in patterns:
-        match = re.search(pattern, text, _IMD)
+        match = pattern.search(text, low)
         if match:
-            value = match.group(1) if match.groups() else match.group(0)
+            value = cut(match, text, 1 if match.re.groups else 0)
             if value is None:
                 continue
             return value.strip(), 90.0
     return "", 0.0
 
 
-def extract_config_fallback(text: str, field_patterns: Dict[str, List[str]]) -> Dict:
+def extract_config_fallback(text: str,
+                            field_patterns: Dict[str, List[Twin]]) -> Dict:
     """Config-table extractor for LABOR_CONTRACT / PURCHASE_ORDER
-    (intended logic for the dead dispatch branches, SURVEY.md §2.6 T12/T13)."""
+    (intended logic for the dead dispatch branches, SURVEY.md §2.6 T12/T13);
+    ``field_patterns`` is a ``compile_field_patterns`` table."""
+    low = fold(text)
     out: Dict[str, Dict] = {}
     for field, patterns in field_patterns.items():
-        value, conf = first_pattern_match(text, patterns)
+        value, conf = first_pattern_match(text, low, patterns)
         if value:
             out[field] = {"value": value, "confidence": conf, "source": "CONFIG_PATTERN"}
     return out

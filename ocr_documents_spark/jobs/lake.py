@@ -22,6 +22,13 @@ for every fields_long row (so it never disagrees with results),
 for re-drives, deletes, corrections and stream compaction, and
 ``read_table`` for every read.
 
+Every write makes as few files as it can: a dynamic overwrite writes
+each bucket as ONE data file, and a sidecar append writes one file.  On
+a local filesystem without libhadoop each file costs ``chmod``
+subprocesses, which made the file count most of a lake job's wall (see
+``session.py`` for the checksum sidecar files, which local sessions no
+longer write).
+
 On a cluster with an Iceberg catalog the same protocol maps 1:1:
 ``CREATE TABLE … PARTITIONED BY (bucket(N, doc_id))``, ``MERGE INTO`` for
 results, plain appends for metrics/checkpoints.  This sandbox has no
@@ -41,11 +48,14 @@ from contextlib import contextmanager
 from dataclasses import dataclass
 from typing import Dict, Iterator, List, Sequence
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (DoubleType, IntegerType, LongType,
                                StringType, StructField, StructType)
 
+from ..functions.fanout import cpu_parts
 from ..pipeline import RESULT_SCHEMA, fields_long, run_pipeline
 from ..sources.ingest import split_valid
 
@@ -174,8 +184,17 @@ def bucketed_fields(lake: Lake, results: DataFrame) -> DataFrame:
 def _overwrite_partitions(df: DataFrame, path: str,
                           partition_cols: Sequence[str]) -> None:
     """Replace exactly the ``partition_cols`` partitions present in
-    ``df`` (dynamic overwrite), so a re-driven write never duplicates."""
-    (df.write.option("partitionOverwriteMode", "dynamic")
+    ``df`` (dynamic overwrite), so a re-driven write never duplicates.
+
+    The rows are first hash-partitioned on ``partition_cols`` (Iceberg's
+    ``hash`` write distribution), so each partition is written by one
+    task as ONE data file.  Unclustered, a write of N partitions by T
+    tasks makes about T x N files, and on a local filesystem without
+    libhadoop every file costs ``chmod`` subprocesses.  The task count is
+    explicit: AQE may coalesce a count-less repartition of a small
+    shuffle into one task."""
+    (df.repartition(cpu_parts(df), *partition_cols).write
+       .option("partitionOverwriteMode", "dynamic")
        .partitionBy(*partition_cols).mode("overwrite").parquet(path))
 
 
@@ -185,7 +204,9 @@ def write_bucketed(df: DataFrame, lake: Lake, table: str) -> None:
 
 
 def append(df: DataFrame, lake: Lake, table: str) -> None:
-    df.write.mode("append").parquet(lake.path(table))
+    """Append ``df`` to ``table`` as one file.  The appended tables
+    (metrics, checkpoints) take at most one row per claimed bucket."""
+    df.coalesce(1).write.mode("append").parquet(lake.path(table))
 
 
 def merge_bucketed(lake: Lake, table: str, fresh: DataFrame,
@@ -242,8 +263,8 @@ def _append_census(spark: SparkSession, lake: Lake, census: Dict[int, Row],
         row = census[b].asDict() if b in census else dict(empty)
         row.update(bucket=b, run_id=run_id, run_wall_s=wall_s,
                    committed_at=now)
-        rows.append(tuple(row[c] for c in names))
-    append(spark.createDataFrame(rows, SCHEMAS[METRICS]), lake, METRICS)
+        rows.append(row)
+    append(_local_rows(spark, rows, METRICS), lake, METRICS)
 
 
 def bucket_metrics(results_with_bucket: DataFrame, run_id: str,
@@ -272,9 +293,20 @@ def bucket_metrics(results_with_bucket: DataFrame, run_id: str,
 
 def checkpoint_rows(spark: SparkSession, run_id: str,
                     buckets: Sequence[int]) -> DataFrame:
-    return spark.createDataFrame(
-        [(run_id, int(b), time.time()) for b in buckets],
-        SCHEMAS[CHECKPOINTS])
+    return _local_rows(spark, [{"run_id": run_id, "bucket": int(b),
+                                "committed_at": time.time()}
+                               for b in buckets], CHECKPOINTS)
+
+
+def _local_rows(spark: SparkSession, rows: Sequence[dict],
+                table: str) -> DataFrame:
+    """Driver-side ``rows`` (dicts keyed by ``SCHEMAS[table]``'s columns)
+    as a local relation.  They reach the JVM as one Arrow table, so
+    writing them runs no Python worker.  ``createDataFrame`` of a list
+    builds a Python RDD instead, one Python task per slice, which a
+    one-file ``append`` would run one after another."""
+    return spark.createDataFrame(pa.Table.from_pylist(
+        rows, schema=to_arrow_schema(SCHEMAS[table])))
 
 
 def new_run_id() -> str:

@@ -8,9 +8,23 @@ Its settings fall into two groups:
   ``ARROW_BATCH_ROWS`` rows per batch, AQE with partition coalescing and
   skew-join splitting, and UTC session time;
 * **local sizing** applies only when ``get_spark`` starts the JVM itself
-  (master ``local[$SPARK_GRAFT_CPUS]``, driver heap, shuffle width, no UI).
-  A launcher that already owns the JVM — ``spark-submit``, or any process
-  pyspark reaches through ``PYSPARK_GATEWAY_PORT`` — keeps its own values.
+  (master ``local[$SPARK_GRAFT_CPUS]``, driver heap, shuffle width, no UI,
+  and the local filesystem below).  A launcher that already owns the JVM
+  — ``spark-submit``, or any process pyspark reaches through
+  ``PYSPARK_GATEWAY_PORT`` — keeps its own values, its filesystems
+  included.
+
+Local paths use Hadoop's ``RawLocalFileSystem``.  The default ``file:``
+filesystem writes a ``.crc`` sidecar beside every file it writes, and
+without libhadoop each file costs ``chmod`` subprocesses (about 1.4 ms
+each from an 8g JVM), so the sidecars doubled a lake commit's files.
+With them gone, parquet's page checksums are the read-time integrity
+check: Spark's parquet writer stores a CRC for every data and dictionary
+page, and ``parquet.page.verify-checksum.enabled`` makes the reader
+verify it, so a flipped byte in a page fails the read instead of
+returning a wrong value.  The page CRCs do not cover the footer, and
+files written without them (pyarrow's default) are read unchecked.
+Never drop the verification while ``file:`` is the raw filesystem.
 
 Explicit ``master``/``shuffle_partitions`` arguments and ``extra_conf``
 apply in both cases, ``extra_conf`` last.
@@ -58,6 +72,10 @@ def get_spark(app_name: str = "ocr-documents-spark",
             "spark.sql.files.openCostInBytes": "4194304",
             "spark.driver.memory": "8g",
             "spark.ui.enabled": "false",
+            # no .crc sidecar files; the page CRCs are checked instead
+            "spark.hadoop.fs.file.impl":
+                "org.apache.hadoop.fs.RawLocalFileSystem",
+            "spark.hadoop.parquet.page.verify-checksum.enabled": "true",
         })
     if master:
         conf["spark.master"] = master

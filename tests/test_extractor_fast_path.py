@@ -25,7 +25,7 @@ from concurrent.futures import ProcessPoolExecutor
 
 import pytest
 
-from ocr_documents_spark.extractors import classify, doc_types
+from ocr_documents_spark.extractors import classify, doc_types, fields_generic
 from ocr_documents_spark.extractors import pipeline_pure as pp
 from ocr_documents_spark.extractors.casefold import Twin, cut, fold, lower_twin
 from ocr_documents_spark.extractors.classify import classify_enhanced
@@ -48,9 +48,13 @@ def _twins(obj):
             yield from _twins(item)
 
 
+# the modules whose case-insensitive patterns are all Twins
+TWIN_MODULES = (classify, doc_types, fields_generic)
+
+
 def all_twins() -> list:
     found = {}
-    for module in (classify, doc_types):
+    for module in TWIN_MODULES:
         for value in vars(module).values():
             for tw in _twins(value):
                 found[id(tw)] = tw
@@ -68,14 +72,17 @@ def _groups(m, text):
 
 def test_case_insensitive_extraction_patterns_are_twins():
     """classify_simple, which no pipeline path calls, keeps plain re.I
-    patterns; everything else in the two modules is a Twin."""
+    patterns; everything else in these modules is a Twin."""
     twins = folded_twins()
     assert len(twins) > 200
     for tw in twins:
         assert tw.exact.flags & re.I and not tw.fast.flags & re.I
         assert tw.fast.flags | re.I == tw.exact.flags
-    # nothing in the two modules is a bare re.I pattern
-    for module in (classify, doc_types):
+    # the config-table cascades of PURCHASE_ORDER and LABOR_CONTRACT
+    fallback = {id(tw) for tw in _twins(doc_types._FALLBACK_PATTERNS)}
+    assert len(fallback) == 5 and fallback <= {id(tw) for tw in twins}
+    # nothing in these modules is a bare re.I pattern
+    for module in TWIN_MODULES:
         for name, value in vars(module).items():
             if isinstance(value, re.Pattern):
                 assert not value.flags & re.I, name

@@ -6,11 +6,14 @@ the single-node oracle.
 """
 
 import os
+import re
+from pathlib import Path
 
 import pytest
 
 from ocr_documents_spark.extractors.pipeline_pure import process_document
 from ocr_documents_spark.fixtures.gen import generate_docs, write_docs_parquet
+from ocr_documents_spark.functions.fanout import cpu_parts
 from ocr_documents_spark.jobs import extract as job
 from ocr_documents_spark.jobs import lake as L
 
@@ -115,3 +118,105 @@ def test_fields_long_bucketed(spark, corpus_path, lake_root):
     import pyspark.sql.functions as F
     bad = joined.filter(F.col("count") != F.size("fields")).count()
     assert bad == 0
+    # the partial run, its resume and the crash replay left one data file
+    # in every bucket
+    assert_one_data_file_per_bucket(lake_root)
+
+
+def assert_one_data_file_per_bucket(lake_root):
+    for table in (L.RESULTS, L.FIELDS_LONG):
+        path = os.path.join(lake_root, table)
+        buckets = [d for d in os.listdir(path) if d.startswith("bucket=")]
+        assert buckets, table
+        for d in buckets:
+            files = [f for f in os.listdir(os.path.join(path, d))
+                     if f.endswith(".parquet")]
+            assert len(files) == 1, (table, d, files)
+
+
+@pytest.fixture
+def written_frames(spark, monkeypatch):
+    """Every DataFrame whose ``.write`` is taken while the test runs."""
+    frames = []
+    cls = type(spark.range(1))
+    write = cls.write
+
+    def recording(df):
+        frames.append(df)
+        return write.fget(df)
+
+    monkeypatch.setattr(cls, "write", property(recording))
+    return frames
+
+
+def _bucket_exchanges(frames):
+    """Per frame: the partitioning of the exchange at the root of its plan
+    when it is an explicit-count hash repartition on ``bucket``, else None."""
+    out = []
+    for df in frames:
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        m = re.search(r"^\+- Exchange hashpartitioning\(bucket#\d+, (\d+)\), "
+                      r"REPARTITION_BY_NUM", plan, re.M)
+        out.append(m and int(m.group(1)))
+    return out
+
+
+def test_one_data_file_per_bucket(spark, corpus_path, tmp_path,
+                                  written_frames):
+    """Every bucketed write is hash-clustered on ``bucket`` into the
+    explicit ``cpu_parts`` task count (AQE keeps a user-given count), so
+    each bucket is ONE data file, after a job and after a merge; a local
+    session writes no checksum sidecar files."""
+    root = str(tmp_path / "lake")
+    job.run(spark, corpus_path, root, N_BUCKETS,
+            claimed=list(range(N_BUCKETS)))
+    n = cpu_parts(spark.range(1))
+    # rejects, results, fields_long clustered; metrics, checkpoints appended
+    assert _bucket_exchanges(written_frames) == [n, n, n, None, None]
+    assert_one_data_file_per_bucket(root)
+    for table in (L.METRICS, L.CHECKPOINTS):
+        files = os.listdir(os.path.join(root, table))
+        assert len([f for f in files if f.endswith(".parquet")]) == 1, files
+
+    del written_frames[:]
+    lake = L.Lake(root, N_BUCKETS)
+    fl = L.read_table(spark, lake, L.FIELDS_LONG)
+    victims = fl.dropDuplicates(["bucket"]).take(2)
+    assert L.apply_field_corrections(spark, lake, spark.createDataFrame(
+        [(v["doc_id"], v["field_name"], "CORRECTED") for v in victims],
+        "doc_id string, field_name string, new_value string")) == 2
+    # fields_long, results, then the census append
+    assert _bucket_exchanges(written_frames) == [n, n, None]
+    assert_one_data_file_per_bucket(root)
+
+    crc = [f for _, _, files in os.walk(root) for f in files
+           if f.endswith(".crc")]
+    assert crc == []
+
+
+def test_flipped_page_byte_fails_the_read(spark, tmp_path):
+    """Without the .crc sidecars, parquet's page checksums catch a byte
+    flipped inside a data page: the read raises instead of returning a
+    wrong value."""
+    lake = L.Lake(str(tmp_path), 2)
+    path = lake.path("values")
+    df = (spark.createDataFrame([(f"d{i}", f"VALUE_{i:05d}")
+                                 for i in range(200)],
+                                "doc_id string, value string")
+          .withColumn("bucket", lake.bucket_col()))
+    codec = "spark.sql.parquet.compression.codec"
+    before = spark.conf.get(codec)
+    spark.conf.set(codec, "uncompressed")  # the value's bytes in the clear
+    try:
+        L._overwrite_partitions(df, path, ["bucket"])
+    finally:
+        spark.conf.set(codec, before)
+    assert spark.read.parquet(path).filter("value = 'VALUE_00123'").count() == 1
+
+    [target] = [f for f in Path(path).rglob("*.parquet")
+                if b"VALUE_00123" in f.read_bytes()]
+    data = bytearray(target.read_bytes())
+    data[data.index(b"VALUE_00123") + 10] = ord("2")
+    target.write_bytes(bytes(data))
+    with pytest.raises(Exception, match="CRC checksum verification failed"):
+        spark.read.parquet(path).collect()
